@@ -12,8 +12,8 @@ Endpoints covered (SURVEY.md §2.1 S5/S6, §2.9 I1, §2.8 Q1/Q2/Q4):
   POST /<entity>/sync               → resync_entity()    (I2)
   POST /search                      → search()          (Q1)
   POST /search/advanced             → advanced_search() (Q2)
-  POST /search/pit (+DELETE)        → open_pit()        (Q27, r10)
-  POST /search/validate             → compile-only pre-flight (r10)
+  POST /search/pit (+DELETE)        → open_pit()        (Q27)
+  POST /search/validate             → compile-only pre-flight
 
 We replicate the declared surface, not the reference's wiring bugs
 (several handlers there declare an ``es_client`` parameter Flask never
@@ -27,16 +27,21 @@ and merge operators, so semantics are identical.
 
 from __future__ import annotations
 
+import fnmatch
+import functools
 import hashlib
+import json
+import math
 import os
 import re
+import time
 import uuid as _uuid
 from decimal import Decimal as _Decimal
 from dataclasses import dataclass
 from datetime import date, datetime, timezone
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from sql_database_to_elastic_datalake_spark.fs import path_exists
@@ -47,7 +52,12 @@ from sql_database_to_elastic_datalake_spark.plans.es_dsl import (
     compile_dsl,
 )
 from sql_database_to_elastic_datalake_spark.plans.search import (
+    collapse_hits,
+    collect_highlight_terms,
+    field_resolver,
+    highlight_snippets,
     multi_match_table,
+    resolve_source_columns,
     string_columns,
 )
 from sql_database_to_elastic_datalake_spark.sources.ingest import REQUIRED_FIELDS
@@ -66,12 +76,12 @@ _SCORED_KINDS = ("function_score", "script_score", "rank_feature",
                  "distance_feature")
 
 #: Text-relevance kinds that ALSO rank by their computed score when
-#: nothing forces the membership page (r12 — ES's default ``_score``
+#: nothing forces the membership page (ES's default ``_score``
 #: order, with ``boost``/``^weight`` honored via
 #: :func:`.plans.es_dsl.compile_score`). Unlike _SCORED_KINDS they
 #: fall back to the membership page — not a 400 — when the request
 #: carries collapse/search_after/highlight/runtime fields, so every
-#: pre-r12 request shape keeps working. Only kinds whose score is
+#: membership-page request shape keeps working. Only kinds whose score is
 #: NON-CONSTANT are listed: ranking a constant-scored query
 #: (term/range/constant_score/…) by tie-break order adds nothing over
 #: the membership page.
@@ -85,7 +95,7 @@ def _has_feature_scorer(node) -> bool:
     ``distance_feature`` leaf in a SCORING position (bool must/should,
     dis_max queries, boosting positive)? Those leaves exist to decay-
     rank inside compounds — a bool containing one routes to the ranked
-    page (r13 late); filter/must_not positions never score and don't
+    page; filter/must_not positions never score and don't
     count."""
     if not isinstance(node, dict) or len(node) != 1:
         return False
@@ -187,21 +197,49 @@ class LakeService:
     def __init__(self, spark: SparkSession, lake_dir: str):
         self.spark = spark
         self.lake_dir = lake_dir
-        #: stored search templates (ES ``_scripts`` namespace, r11):
+        #: stored search templates (ES ``_scripts`` namespace):
         #: id → validated {"lang": "mustache", "source": …}. Held
         #: in-service, like the PIT/scroll statelessness contract —
         #: nothing here needs to survive the process.
         self.stored_templates: dict[str, dict] = {}
-        #: stored percolator queries (r13, r12 verdict stretch #10):
-        #: id → parsed DSL tree, validated through compile_dsl at PUT
-        #: time. Service-local like the templates namespace; the
-        #: corpus-scale form is the registered percolate_orders query.
+        #: stored percolator queries: id → parsed DSL tree, validated
+        #: through compile_dsl at PUT time. Service-local like the
+        #: templates namespace; the corpus-scale form is the registered
+        #: percolate_orders query.
         self.percolator_queries: dict[str, dict] = {}
 
     # -- helpers ----------------------------------------------------------
 
     def _table_path(self, entity_type: str) -> str:
         return os.path.join(self.lake_dir, f"{INDEX_PREFIX}{entity_type.lower()}")
+
+    def _matching_tables(self, pattern: str) -> list[str]:
+        """The lake tables whose names match an index pattern."""
+        return sorted(
+            d for d in os.listdir(self.lake_dir)
+            if fnmatch.fnmatchcase(d, pattern)
+            and os.path.isdir(os.path.join(self.lake_dir, d)))
+
+    def _table_names(self, target) -> list[str]:
+        """The tables a search request targets — the resolve stage.
+        ``target`` is a table name, an index pattern or a list of
+        them; None is the default ``data_lake_*`` pattern. A pattern
+        matching nothing contributes no table; a concrete name that
+        does not exist is a 404 (``NotFoundError``)."""
+        names: list[str] = []
+        for t in [target or INDEX_PREFIX + "*"] \
+                if isinstance(target, str) or target is None else target:
+            if "*" in t or "?" in t:
+                names += self._matching_tables(t)
+            elif path_exists(self.spark, os.path.join(self.lake_dir, t)):
+                names.append(t)
+            else:
+                raise NotFoundError(f"no such table {t!r}")
+        return names
+
+    def _frame(self, name: str) -> DataFrame:
+        """One lake table as a DataFrame."""
+        return self.spark.read.parquet(os.path.join(self.lake_dir, name))
 
     def _validate_and_default(
         self, entity_type: str, item: dict[str, Any], index: int
@@ -371,23 +409,12 @@ class LakeService:
         API-parity form. ``version_conflicts``/``noops`` are
         structurally 0 on a snapshot lake (no concurrent versioning
         inside one rewrite)."""
-        import time as _time
-
-        from sql_database_to_elastic_datalake_spark.plans.es_dsl import (
-            compile_dsl,
-        )
-
-        t0 = _time.monotonic()
+        t0 = time.monotonic()
         path = os.path.join(self.lake_dir, table)
         if not path_exists(self.spark, path):
             raise DslError(f"unknown table {table!r}")
         df = self.spark.read.parquet(path)
-
-        def resolve(field: str, _df=df):
-            return (F.col(field) if field in _df.columns
-                    else F.lit(None).cast("string"))
-
-        pred = compile_dsl(dsl, field_resolver=resolve,
+        pred = compile_dsl(dsl, field_resolver=field_resolver(df),
                            schema_fields=df.schema)
         matched = F.coalesce(pred, F.lit(False))
         deleted = int(df.filter(matched).count())
@@ -395,14 +422,7 @@ class LakeService:
             survivors = df.filter(~matched)
             survivors.localCheckpoint(eager=True).write.mode(
                 "overwrite").parquet(path)
-        return {
-            "took": int((_time.monotonic() - t0) * 1000),
-            "timed_out": False, "total": deleted, "deleted": deleted,
-            "batches": 1 if deleted else 0, "version_conflicts": 0,
-            "noops": 0, "retries": {"bulk": 0, "search": 0},
-            "throttled_millis": 0, "requests_per_second": -1.0,
-            "throttled_until_millis": 0, "failures": [],
-        }
+        return _by_query_response(t0, deleted, deleted=deleted)
 
     def update_by_query(
         self, table: str, dsl: dict | None, script: dict | None
@@ -427,9 +447,7 @@ class LakeService:
         not have — documented divergence); assigning a NEW field
         appends a double column. Rewrite + bookkeeping mirror
         :meth:`delete_by_query`."""
-        import time as _time
-
-        t0 = _time.monotonic()
+        t0 = time.monotonic()
         if not isinstance(script, dict):
             raise DslError("update_by_query requires a script object")
         if not isinstance(script.get("source"), str):
@@ -438,13 +456,8 @@ class LakeService:
         if not path_exists(self.spark, path):
             raise DslError(f"unknown table {table!r}")
         df = self.spark.read.parquet(path)
-
-        def resolve(field: str):
-            return (F.col(field) if field in df.columns
-                    else F.lit(None).cast("string"))
-
         pred = (F.lit(True) if dsl is None else
-                F.coalesce(compile_dsl(dsl, field_resolver=resolve,
+                F.coalesce(compile_dsl(dsl, field_resolver=field_resolver(df),
                                        schema_fields=df.schema),
                            F.lit(False)))
         out = df.withColumn("__match", pred)
@@ -453,15 +466,7 @@ class LakeService:
         if updated:
             out.drop("__match").localCheckpoint(eager=True).write.mode(
                 "overwrite").parquet(path)
-        return {
-            "took": int((_time.monotonic() - t0) * 1000),
-            "timed_out": False, "total": updated, "updated": updated,
-            "deleted": 0, "batches": 1 if updated else 0,
-            "version_conflicts": 0, "noops": 0,
-            "retries": {"bulk": 0, "search": 0},
-            "throttled_millis": 0, "requests_per_second": -1.0,
-            "throttled_until_millis": 0, "failures": [],
-        }
+        return _by_query_response(t0, updated, updated=updated)
 
     def reindex(self, body: dict) -> dict[str, Any]:
         """ES ``_reindex``: copy the (optionally query-scoped) source
@@ -469,7 +474,7 @@ class LakeService:
         with the same painless ASSIGNMENT subset ``_update_by_query``
         serves. Source and dest resolve in the lake; a missing dest is
         created. An EXISTING dest merges by the engine's doc-id
-        convention (r12 — the "id" column, else the first ``*_id``
+        convention (the "id" column, else the first ``*_id``
         column): incoming rows overwrite same-id dest rows exactly
         like ES's default ``op_type: index`` (the response's
         ``updated`` counts the overwrites, ``created`` the rest); a
@@ -478,9 +483,7 @@ class LakeService:
         ``_id``). ``op_type``/``version_type``/``remote`` are
         id/cluster semantics with nothing further to bind to — named
         400s, not silent drops."""
-        import time as _time
-
-        t0 = _time.monotonic()
+        t0 = time.monotonic()
         src_spec = body.get("source")
         dst_spec = body.get("dest")
         if not isinstance(src_spec, dict) or not src_spec.get("index"):
@@ -502,11 +505,8 @@ class LakeService:
         df = self.spark.read.parquet(src_path)
         q = src_spec.get("query")
         if q is not None:
-            def resolve(field: str, _df=df):
-                return (F.col(field) if field in _df.columns
-                        else F.lit(None).cast("string"))
             df = df.filter(F.coalesce(
-                compile_dsl(q, field_resolver=resolve,
+                compile_dsl(q, field_resolver=field_resolver(df),
                             schema_fields=df.schema), F.lit(False)))
         script = body.get("script")
         if script is not None:
@@ -539,12 +539,11 @@ class LakeService:
                     f"{sorted(set(want) - set(have))} / retyped "
                     f"{retyped} — reindex appends, it does not "
                     "migrate schemas")
-            id_col = "id" if "id" in dest.columns else next(
-                (c for c in dest.columns if c.endswith("_id")), None)
+            id_col = _doc_id_column(dest.columns)
             if id_col is not None:
                 # ES op_type index: same-_id docs are OVERWRITTEN.
-                # Counts are INCOMING-side (r12 ADVICE: counting dest
-                # rows let a dup-id dest drive updated > total and a
+                # Counts are INCOMING-side (counting dest rows would
+                # let a dup-id dest drive updated > total and a
                 # negative created): updated = incoming ids that exist
                 # in dest, created = the rest. Duplicate ids INSIDE
                 # the incoming set are a named 400 — ES's last-wins
@@ -578,29 +577,13 @@ class LakeService:
                 merged.localCheckpoint(eager=True).write.mode(
                     "overwrite").option(
                     "compression", "zstd").parquet(dst_path)
-                return {
-                    "took": int((_time.monotonic() - t0) * 1000),
-                    "timed_out": False, "total": total,
-                    "created": created, "updated": updated,
-                    "deleted": 0, "batches": 1,
-                    "version_conflicts": 0, "noops": 0,
-                    "retries": {"bulk": 0, "search": 0},
-                    "throttled_millis": 0, "requests_per_second": -1.0,
-                    "throttled_until_millis": 0, "failures": [],
-                }
+                return _by_query_response(t0, total, created=created,
+                                          updated=updated)
         if total:
             df.write.mode("append").option(
                 "compression", "zstd").parquet(dst_path)
-        return {
-            "took": int((_time.monotonic() - t0) * 1000),
-            "timed_out": False, "total": total, "created": created,
-            "updated": updated, "deleted": 0,
-            "batches": 1 if total else 0,
-            "version_conflicts": 0, "noops": 0,
-            "retries": {"bulk": 0, "search": 0},
-            "throttled_millis": 0, "requests_per_second": -1.0,
-            "throttled_until_millis": 0, "failures": [],
-        }
+        return _by_query_response(t0, total, created=created,
+                                  updated=updated)
 
     def sql_query(self, query: str) -> tuple[list[dict], list[list]]:
         """The ``_sql`` endpoint's engine half: run a READ-ONLY SQL
@@ -655,23 +638,22 @@ class LakeService:
         """multi_match across all lake tables (the ``data_lake_*``
         pattern) with the deterministic tf score; ES-style envelope.
 
-        ``from_`` is ES's offset pagination on the RANKED path (r7 —
-        ES's default sort is ``_score``, so a client paginating ranked
+        ``from_`` is ES's offset pagination on the RANKED path (ES's
+        default sort is ``_score``, so a client paginating ranked
         results sends ``{"query": …, "from": 10}`` with no explicit
-        sort; rejecting it was the r6 verdict's #2 gap). The ranking
-        already totals the order (``_score`` desc, ``_index``,
-        ``_tiebreak``), so the offset rides the SAME
-        TakeOrderedAndProject — ``orderBy.offset(from).limit(k)``
-        pre-truncates each partition to its top ``from+k`` rows
-        map-side; the documented linear deep-offset cost applies
-        exactly as on the sorted advanced path.
+        sort). The ranking already totals the order (``_score`` desc,
+        ``_index``, ``_tiebreak``), so the page is the TakeOrdered of
+        the first ``from+k`` rows, sliced on the driver — the
+        documented linear deep-offset cost applies exactly as on the
+        sorted advanced path.
 
         ``fields`` mirrors the reference's request shape
         (src/search_api.py:19-28: ``fields`` defaulting to ``["*"]``):
         names and wildcard patterns are expanded per table against its
-        own schema; ``["*"]``/omitted means every string column. A
-        table where nothing expands contributes no hits — ES's
-        missing-field behavior.
+        own schema, a ``^boost`` suffix weighting that column's tf
+        score; ``["*"]``/omitted means every string column. A table
+        where nothing expands contributes no hits — ES's missing-field
+        behavior.
 
         Heterogeneous table schemas are normalized to a common shape
         (index, score, tiebreak, JSON-serialized source row), unioned,
@@ -681,58 +663,33 @@ class LakeService:
         of two driver-side jobs per table, which is what the
         ``data_lake_*`` pattern needs at hundreds of tables.
 
-        ``min_score`` (r7): ES's relevance floor — hits scoring below
-        it drop from BOTH the page and the total (ES's contract). One
+        ``min_score``: ES's relevance floor — hits scoring below it
+        drop from BOTH the page and the total (ES's contract). One
         extra Column filter ahead of the sort; with the engine's
         deterministic tf score a threshold is reproducible where ES's
         BM25 floor is shard-dependent.
 
-        ``rescore`` (r7): ES's two-phase ranking — the top
-        ``window_size`` docs by original score re-rank by a combined
-        score (``query_weight``·orig ∘ ``rescore_query_weight``·resc,
-        ``score_mode`` total/multiply/avg/max/min); docs beyond the
-        window keep their original order after the window. The
-        secondary score is a tf column computed IN-PLAN per table (no
-        second pass over the corpus — it rides the same scan); the
-        re-sort touches only the collected window. ``rescore_query``
-        supports the scoreable leaves (``multi_match`` / ``match``) —
-        anything else is a named 400 (this engine has no scores for
-        filter-context trees).
+        ``rescore``: ES's two-phase ranking — the top ``window_size``
+        docs by original score re-rank by a combined score
+        (:func:`_rescore_window`); docs beyond the window keep their
+        original order after the window. The secondary score is a tf
+        column computed IN-PLAN per table (no second pass over the
+        corpus — it rides the same scan); the re-sort touches only the
+        collected window. ``rescore_query`` supports the scoreable
+        leaves (``multi_match`` / ``match``) — anything else is a named
+        400 (this engine has no scores for filter-context trees).
         """
-        import fnmatch as _fn
-        import json as _json
-
         if from_ < 0:
             raise DslError("from must be a non-negative integer")
         _validate_rescore_options(rescore)
-        names = tables or [
-            d for d in sorted(os.listdir(self.lake_dir))
-            if d.startswith(INDEX_PREFIX)
-        ]
         if fields == ["*"]:
             fields = None  # the reference's default-everything shape
         scored: list[DataFrame] = []
-        for name in names:
-            df = self.spark.read.parquet(os.path.join(self.lake_dir, name))
+        for name in self._table_names(tables or None):
+            df = self._frame(name)
             cols = None
             if fields is not None:
-                from sql_database_to_elastic_datalake_spark.plans.es_dsl \
-                    import split_field_boost
-
-                # r12: ^boost suffixes are KEPT — each expanded column
-                # re-carries its pattern's weight into the tf score
-                # (the ES title^2 idiom; previously ignored)
-                seen: dict[str, float] = {}
-                for f in fields:
-                    nm, w = split_field_boost(f, "search field")
-                    if "*" in nm or "?" in nm:
-                        for c in df.columns:
-                            if _fn.fnmatchcase(c, nm):
-                                seen.setdefault(c, w)
-                    elif nm in df.columns:
-                        seen.setdefault(nm, w)
-                cols = [c if w == 1.0 else f"{c}^{w}"
-                        for c, w in seen.items()]
+                cols = _boosted_columns(fields, df.columns)
                 if not cols:
                     continue  # no requested field exists in this table
             matched = multi_match_table(df, term, fields=cols)
@@ -746,9 +703,7 @@ class LakeService:
                 matched.select(
                     F.lit(name).alias("_index"),
                     F.col("score").cast("double").alias("_score"),
-                    _rescore_expr(rescore, df).alias("_rescore"),
-                    _rescore_match_expr(rescore, df).alias(
-                        "_rescore_matched"),
+                    *_rescore_columns(rescore, df),
                     (F.col(tb[0]) if tb else F.lit("")).alias("_tiebreak"),
                     F.to_json(
                         F.struct(*[F.col(c) for c in df.columns]),
@@ -757,85 +712,20 @@ class LakeService:
                 )
             )
         if not scored:
-            return {"hits": {"total": {"value": 0, "relation": "eq"},
-                             "hits": []}}
-        unioned = scored[0]
-        for s in scored[1:]:
-            unioned = unioned.unionByName(s)
-        if k == 0:
-            # ES's size:0 is a valid total-only (or aggs-only) request;
-            # limit(0) would let OptimizeLimitZero prune the
-            # CollectMetrics node out of the plan and Observation.get
-            # then assert-fails — a plain count IS the whole job here.
-            return {"hits": {"total": {"value": unioned.count(),
-                                       "relation": "eq"},
-                             "hits": []}}
-        # ONE job per request, not two: the ranking sort (TakeOrdered)
-        # consumes every matched row anyway, so an Observation on the
-        # pre-sort plan yields the exact hit total for free — the
-        # separate count() job this used to run doubled the request
-        # cost for nothing (r4 verdict nit).
-        from pyspark.sql import Observation
-
-        obs = Observation("search_total")
-        unioned = unioned.observe(obs, F.count(F.lit(1)).alias("n"))
-        ranked = unioned.orderBy(
-            F.col("_score").desc(), "_index", "_tiebreak")
-        if rescore is not None:
-            # two-phase: fetch max(window, from+k) rows through the
-            # SAME TakeOrdered, combine scores driver-side on the
-            # window only, then slice the page (the offset must apply
-            # AFTER the window re-sort — the order changed inside it)
-            window = int(rescore.get("window_size", 10))
-            rows = ranked.limit(max(window, from_ + k)).collect()
-            rspec = rescore.get("query") or {}
-            qw = float(rspec.get("query_weight", 1.0))
-            rqw = float(rspec.get("rescore_query_weight", 1.0))
-            mode = rspec.get("score_mode", "total")
-            combine = {
-                "total": lambda o, r: o + r,
-                "multiply": lambda o, r: o * r,
-                "avg": lambda o, r: (o + r) / 2.0,
-                "max": max,
-                "min": min,
-            }.get(mode)
-            if combine is None:
-                raise DslError(f"unknown rescore score_mode {mode!r}")
-            # ES combines only for docs that MATCH the rescore query;
-            # a non-matching window doc keeps query_weight * original
-            # (feeding 0 into multiply/avg/min would zero/halve/floor
-            # it and reorder the window differently from ES — r7
-            # ADVICE). Matched-ness is the rescore query's membership
-            # predicate computed in-plan (r12 ADVICE: a matched doc
-            # can legitimately score 0.0 under boost 0, and ES still
-            # combines it — score truthiness was the wrong proxy).
-            win = [
-                ((combine(qw * r["_score"], rqw * r["_rescore"])
-                  if r["_rescore_matched"]
-                  else qw * r["_score"]), i, r)
-                for i, r in enumerate(rows[:window])
-            ]
-            # stable on the original rank for equal combined scores
-            win.sort(key=lambda t: (-t[0], t[1]))
-            paged = [(c, r) for c, _, r in win] \
-                + [(r["_score"], r) for r in rows[window:]]
-            top = paged[from_:from_ + k]
-            hits = [
-                {"_index": r["_index"], "_score": c,
-                 "_source": _json.loads(r["_source_json"])}
-                for c, r in top
-            ]
-        else:
-            paged_ranked = ranked.offset(from_) if from_ else ranked
-            top = paged_ranked.limit(k).collect()
-            hits = [
-                {"_index": r["_index"], "_score": r["_score"],
-                 "_source": _json.loads(r["_source_json"])}
-                for r in top
-            ]
-        return {"hits": {"total": {"value": obs.get["n"], "relation": "eq"},
-                         "hits": hits}}
-
+            return _envelope([], _total(0))
+        unioned = functools.reduce(DataFrame.unionByName, scored)
+        rows, total = _ordered_page(
+            unioned, [F.col("_score").desc(), F.col("_index"),
+                      F.col("_tiebreak")],
+            _fetch_size(from_, k, rescore), tracked=True)
+        ranked = _rescore_window(rows, rescore)
+        hits = [
+            {"_index": r["_index"], "_score": s,
+             "_source": json.loads(r["_source_json"])}
+            for s, r in ranked[from_:from_ + k]
+        ]
+        return _envelope(hits, _total(total),
+                         max((s for s, _ in ranked), default=None))
 
     def _knn_search(
         self, name: str, knn: dict, dsl: dict | None, k: int,
@@ -844,26 +734,23 @@ class LakeService:
         """The knn body key over one table, the standard _source /
         fields / from paging applied to the returned rows.
 
-        Two tiers (r13, r12 verdict #3): WITHOUT ``num_candidates``
-        the search is exact cosine top-k — one full scan, strictly
-        better recall than ES's HNSW, the honest default and the
-        verifier. WITH ``num_candidates`` (ES's recall/cost knob) the
-        IVF-probed tier runs instead
-        (operators/ivf.py:ivf_knn_literal): nprobe cells are chosen so
-        the expected candidate pool ≈ num_candidates (nprobe =
-        ceil(num_candidates · nlist / n), clamped to [1, nlist]) — the
-        same contract ES gives the knob: more candidates, better
-        recall, more work; num_candidates ≥ n degrades gracefully to
-        probing every cell (= exact). The fixed-grid quantizer keeps
-        both tiers deterministic and oracle-replayable."""
+        Two tiers: WITHOUT ``num_candidates`` the search is exact
+        cosine top-k — one full scan, strictly better recall than ES's
+        HNSW, the honest default and the verifier. WITH
+        ``num_candidates`` (ES's recall/cost knob) the IVF-probed tier
+        runs instead (operators/ivf.py:ivf_knn_literal): nprobe cells
+        are chosen so the expected candidate pool ≈ num_candidates
+        (nprobe = ceil(num_candidates · nlist / n), clamped to
+        [1, nlist]) — the same contract ES gives the knob: more
+        candidates, better recall, more work; num_candidates ≥ n
+        degrades gracefully to probing every cell (= exact). The
+        fixed-grid quantizer keeps both tiers deterministic and
+        oracle-replayable."""
         from sql_database_to_elastic_datalake_spark.operators.ivf import (
             ivf_knn_literal,
         )
         from sql_database_to_elastic_datalake_spark.operators.similarity import (
             knn_search,
-        )
-        from sql_database_to_elastic_datalake_spark.plans.search import (
-            resolve_source_columns,
         )
 
         unknown = sorted(set(knn) - {"field", "query_vector", "k",
@@ -875,15 +762,25 @@ class LakeService:
         qv = knn.get("query_vector")
         if not field or not isinstance(qv, list) or not qv:
             raise DslError("knn requires field and query_vector")
-        kk = int(knn.get("k", k))
-        df = self.spark.read.parquet(os.path.join(self.lake_dir, name))
+        kk = knn.get("k", k)
+        if "k" in knn and (isinstance(kk, bool) or not isinstance(kk, int)
+                           or kk < 1):
+            raise DslError("knn k must be a positive integer")
+        floor = knn.get("similarity")
+        if floor is not None and (isinstance(floor, bool)
+                                  or not isinstance(floor, (int, float))):
+            raise DslError("knn similarity must be a number")
+        nc = knn.get("num_candidates")
+        if nc is not None:
+            if isinstance(nc, bool) or not isinstance(nc, int) or nc < 1:
+                raise DslError(
+                    "knn num_candidates must be a positive integer")
+            if nc < kk:
+                raise DslError("knn num_candidates must be >= k")
+        df = self._frame(name)
         if field not in df.columns:
             raise DslError(f"unknown knn field {field!r}")
-
-        def resolve(f: str, _df=df):
-            return (F.col(f) if f in _df.columns
-                    else F.lit(None).cast("string"))
-
+        resolve = field_resolver(df)
         pred = None
         if knn.get("filter") is not None:
             pred = compile_dsl(knn["filter"], field_resolver=resolve,
@@ -895,57 +792,41 @@ class LakeService:
         # ES returns at most knn.k hits when knn is the only query —
         # fetch exactly kk candidates so both the page and the total
         # honor it; a knn.k smaller than size must NOT backfill the
-        # page with docs beyond the k nearest (r7 ADVICE)
-        nc = knn.get("num_candidates")
+        # page with docs beyond the k nearest
         if nc is not None:
-            if isinstance(nc, bool) or not isinstance(nc, int) or nc < 1:
-                raise DslError(
-                    "knn num_candidates must be a positive integer")
-            if nc < kk:
-                raise DslError("knn num_candidates must be >= k")
             nlist = 16
             n = df.count()  # parquet metadata count — no data read
-            import math as _math
-
-            nprobe = max(1, min(nlist,
-                                _math.ceil(nc * nlist / max(n, 1))))
+            nprobe = max(1, min(nlist, math.ceil(nc * nlist / max(n, 1))))
             rows = ivf_knn_literal(
                 df, field, qv, kk, nlist=nlist, nprobe=nprobe,
                 pred=pred).collect()
         else:
             rows = knn_search(df, field, qv, kk, pred=pred).collect()
-        if knn.get("similarity") is not None:
+        if floor is not None:
             # ES's raw-similarity floor, applied on the cosine (our
             # _score is (1+cos)/2 — invert the transform)
-            floor = float(knn["similarity"])
             rows = [r for r in rows
                     if (2.0 * r["_score"] - 1.0) >= floor]
-        src_cols = resolve_source_columns(df.columns, source)
-        fout = _resolve_fields_option(fields_opt, df.columns)
-        hits = [
-            {**_hit(name, r, src_cols, [], {}, "", "",
-                    fields_out=fout),
-             "_score": r["_score"]}
-            for r in rows[from_:from_ + k]
-        ]
-        return {"hits": {
-            "total": {"value": len(rows), "relation": "eq"},
-            "hits": hits,
-        }}
+        shape = _HitShape.of(df.columns, source, fields_opt)
+        hits = [{**shape.hit(name, r), "_score": r["_score"]}
+                for r in rows[from_:from_ + k]]
+        return _envelope(hits, _total(len(rows)),
+                         max((r["_score"] for r in rows), default=None))
 
     def _percolate_search(self, body, k: int, from_: int,
                           ) -> dict[str, Any]:
-        """The ``percolate`` query (r13): which STORED queries match
-        the request's document(s). Hits are the stored queries (_id =
-        the stored id, _source carries the query), constant-scored —
-        ES's percolator scores are query-relevance over the one doc,
-        which collapses to membership under this engine's scoring
-        model. ``documents`` (the batch form) annotates each hit with
-        ES's ``_percolator_document_slot`` fields entry. One
-        compile-all-queries pass per document
-        (plans/percolate.py:percolate_document); the corpus-scale
-        form — a whole table against the stored set in one scan — is
-        the registered ``percolate_orders`` query."""
+        """The ``percolate`` query: which STORED queries match the
+        request's document(s). Hits are the stored queries (_id = the
+        stored id, _source carries the query), constant-scored — ES's
+        percolator scores are query-relevance over the one doc, which
+        collapses to membership under this engine's scoring model.
+        ``documents`` (the batch form) annotates each hit with ES's
+        ``_percolator_document_slot`` fields entry; ``index`` + ``id``
+        percolates a document already in a lake table (one point
+        lookup, id filter pushed to the scan). One compile-all-queries
+        pass per document (plans/percolate.py:percolate_document); the
+        corpus-scale form — a whole table against the stored set in one
+        scan — is the registered ``percolate_orders`` query."""
         from sql_database_to_elastic_datalake_spark.plans.percolate import (
             percolate_document,
         )
@@ -967,9 +848,6 @@ class LakeService:
                 "percolate takes exactly one of document, documents, "
                 "or index+id")
         if has_ref:
-            # r13 late: index-based percolation — ES's "percolate a
-            # doc already in an index". One point lookup (id filter
-            # pushed to the scan), then the inline path.
             table, doc_id = body.get("index"), body.get("id")
             if not table or doc_id is None:
                 raise DslError(
@@ -978,8 +856,7 @@ class LakeService:
             if not path_exists(self.spark, path):
                 raise NotFoundError(f"no such table {table!r}")
             df = self.spark.read.parquet(path)
-            idc = "id" if "id" in df.columns else next(
-                (c for c in df.columns if c.endswith("_id")), None)
+            idc = _doc_id_column(df.columns)
             if idc is None:
                 raise DslError(f"table {table!r} has no id column")
             rows = (df.filter(F.col(idc).cast("string")
@@ -1007,12 +884,8 @@ class LakeService:
             if has_docs:
                 h["fields"] = {"_percolator_document_slot": slots[qid]}
             hits.append(h)
-        total = len(hits)
-        return {"hits": {
-            "total": {"value": total, "relation": "eq"},
-            "max_score": 1.0 if hits else None,
-            "hits": hits[from_:from_ + k],
-        }}
+        return _envelope(hits[from_:from_ + k], _total(len(hits)),
+                         1.0 if hits else None)
 
     def _resolve_mlt_likes(self, node, default_table: str | None):
         """Deep-rewrite every ``more_like_this`` ``like`` list,
@@ -1022,8 +895,6 @@ class LakeService:
         column; ``{"doc": {…}}`` is ES's artificial-document form and
         needs no lookup. Only the mlt ``fields`` contribute text,
         like ES."""
-        import fnmatch as _fn
-
         if isinstance(node, list):
             return [self._resolve_mlt_likes(x, default_table)
                     for x in node]
@@ -1054,7 +925,7 @@ class LakeService:
                         str(val) for f, val in doc.items()
                         if val is not None
                         and (not fields or any(
-                            _fn.fnmatchcase(f, p) for p in fields)))
+                            fnmatch.fnmatchcase(f, p) for p in fields)))
                     continue
                 if "_id" not in e:
                     raise DslError(
@@ -1067,10 +938,8 @@ class LakeService:
                         "more_like_this {'_id': …} entries need an "
                         "_index (or a single concrete request table)"
                     )
-                df = self.spark.read.parquet(
-                    os.path.join(self.lake_dir, str(table)))
-                idc = "id" if "id" in df.columns else next(
-                    (c for c in df.columns if c.endswith("_id")), None)
+                df = self._frame(str(table))
+                idc = _doc_id_column(df.columns)
                 if idc is None:
                     raise DslError(
                         f"table {table!r} has no id column for "
@@ -1078,7 +947,7 @@ class LakeService:
                     )
                 cols = [c for c in df.columns
                         if not fields or any(
-                            _fn.fnmatchcase(c, p) for p in fields)]
+                            fnmatch.fnmatchcase(c, p) for p in fields)]
                 rows = df.filter(
                     F.col(idc).cast("string") == str(e["_id"])
                 ).select(*(cols or [idc])).limit(1).collect()
@@ -1122,16 +991,13 @@ class LakeService:
                         "terms lookup needs an index (or a single "
                         "concrete request table)"
                     )
-                df = self.spark.read.parquet(
-                    os.path.join(self.lake_dir, str(table)))
+                df = self._frame(str(table))
                 path = str(spec["path"])
                 if path not in df.columns:
                     raise DslError(
                         f"terms lookup path {path!r} is not a column "
                         f"of {table!r}")
-                idc = "id" if "id" in df.columns else next(
-                    (c for c in df.columns if c.endswith("_id")),
-                    None)
+                idc = _doc_id_column(df.columns)
                 if idc is None:
                     raise DslError(
                         f"table {table!r} has no id column for a "
@@ -1158,10 +1024,12 @@ class LakeService:
         rescore: dict | None = None,
         min_score=None,
     ) -> dict[str, Any]:
-        """The RANKED page for a top-level ``function_score`` /
-        ``script_score`` query (r9): (predicate, score) compiled by
-        :mod:`.plans.score_dsl` into pure column algebra, page ordered
-        by the computed ``_score``.
+        """The RANKED page for a top-level scoring query
+        (``function_score`` / ``script_score`` / ``rank_feature`` /
+        ``distance_feature``, or a text-relevance query): (predicate,
+        score) compiled into pure column algebra
+        (:func:`_score_columns`), page ordered by the computed
+        ``_score``.
 
         Plan shape per table: one scan → filter → score column →
         TakeOrdered(from+size) with the deterministic tie-break
@@ -1169,6 +1037,9 @@ class LakeService:
         the TakeOrdered via an Observation (exact, one job). Pattern
         requests merge per-table pages by score (cross-table score
         ties break on table name, then per-table rank — stable).
+        ``collapse`` groups under the ``_score`` order (inner_hits stay
+        on the sorted membership page); ``rescore`` windows are per
+        table, the analog of ES's per-shard rescore windows.
 
         ``aggs`` see the matched-and-min_score'd set (min_score is
         query membership here, unlike the post-hoc request-level
@@ -1177,130 +1048,43 @@ class LakeService:
         every orderable column, so ``_source`` filtering does not
         shrink this scan the way it does on unranked pages — the
         determinism contract is worth more than the pruning."""
-        from pyspark.sql import Observation
-        from pyspark.sql.types import (
-            DateType,
-            TimestampNTZType,
-            TimestampType,
-        )
-
         from sql_database_to_elastic_datalake_spark.operators.similarity import (
             tiebreak_columns,
         )
-        from sql_database_to_elastic_datalake_spark.plans.score_dsl import (
-            distance_feature_columns,
-            function_score_columns,
-            rank_feature_columns,
-            script_score_columns,
-        )
-        from sql_database_to_elastic_datalake_spark.plans.search import (
-            collect_highlight_terms,
-            resolve_source_columns,
-        )
 
-        _validate_highlight(highlight)
-        pre, post = _highlight_tags(highlight)
-        cfield = None
-        if collapse is not None:
-            # r12: collapse rides the ranked page — ES's default
-            # (group results under the _score order, no explicit sort
-            # needed). inner_hits stay on the sorted membership page.
-            if not (isinstance(collapse, dict)
-                    and isinstance(collapse.get("field"), str)):
-                raise DslError('collapse requires a "field" string')
-            unknown = sorted(set(collapse) - {"field", "inner_hits"})
-            if unknown:
-                raise DslError(
-                    f"unsupported collapse options: {unknown}")
-            if collapse.get("inner_hits") is not None:
-                raise DslError(
-                    "collapse inner_hits on the ranked page are not "
-                    "supported — add an explicit sort for the "
-                    "inner_hits page")
-            cfield = collapse["field"]
-        boost_by_pattern: list[tuple[str, float]] = []
-        if indices_boost is not None:
-            # ES indices_boost: per-index score multiplier on pattern
-            # searches (list of one-key objects; the legacy dict form
-            # accepted too). First matching pattern wins, like ES.
-            entries = (list(indices_boost.items())
-                       if isinstance(indices_boost, dict) else [
-                           next(iter(e.items()))
-                           for e in indices_boost
-                           if isinstance(e, dict) and len(e) == 1])
-            if not entries or (isinstance(indices_boost, list) and any(
-                    not (isinstance(e, dict) and len(e) == 1)
-                    for e in indices_boost)):
-                raise DslError(
-                    "indices_boost must be a non-empty list of "
-                    "single-entry {index: factor} objects")
-            for pat, factor in entries:
-                if isinstance(factor, bool) or not isinstance(
-                        factor, (int, float)) or factor < 0:
-                    raise DslError(
-                        f"indices_boost factor for {pat!r} must be a "
-                        "non-negative number")
-                boost_by_pattern.append((str(pat), float(factor)))
+        cfield = _collapse_field(collapse)
+        if cfield is not None and collapse.get("inner_hits") is not None:
+            raise DslError(
+                "collapse inner_hits on the ranked page are not "
+                "supported — add an explicit sort for the inner_hits "
+                "page")
         if rescore is not None and cfield is not None:
             raise DslError("rescore is not supported with collapse")
-        kind = next(iter(dsl))
-        body = dsl[kind]
+        boosts = _index_boosts(indices_boost)
+        if min_score is not None:
+            try:
+                min_score = float(min_score)
+            except (TypeError, ValueError):
+                raise DslError("min_score must be a number") from None
+        tracked = track_total_hits is not False
         merged: list[tuple] = []
-        total_value = 0
+        total = 0
         aggregations = suggestions = None
         for name in names:
-            df = self.spark.read.parquet(
-                os.path.join(self.lake_dir, name))
-
-            def resolve(f: str, _df=df):
-                return (F.col(f) if f in _df.columns
-                        else F.lit(None).cast("string"))
-
-            date_fields = {
-                f.name for f in df.schema.fields
-                if isinstance(f.dataType, (
-                    DateType, TimestampType, TimestampNTZType))
-            }
+            df = self._frame(name)
+            resolve = field_resolver(df)
             try:
-                if kind == "function_score":
-                    pred, score, ms = function_score_columns(
-                        body, resolve, df.columns, date_fields)
-                elif kind == "rank_feature":
-                    pred, score, ms = rank_feature_columns(body, resolve)
-                elif kind == "distance_feature":
-                    pred, score, ms = distance_feature_columns(
-                        body, resolve, date_fields,
-                        schema_fields=df.schema)
-                elif kind == "script_score":
-                    pred, score, ms = script_score_columns(
-                        body, resolve, df.columns)
-                else:
-                    # r12: generic scoreable query (multi_match /
-                    # query_string / simple_query_string) — membership
-                    # from compile_dsl, rank from compile_score
-                    from sql_database_to_elastic_datalake_spark.plans \
-                        .es_dsl import compile_score
-
-                    pred = compile_dsl(
-                        dsl, field_resolver=resolve,
-                        schema_fields=df.schema)
-                    score = compile_score(
-                        dsl, field_resolver=resolve,
-                        schema_fields=df.schema)
-                    ms = None
+                pred, score, ms = _score_columns(dsl, df, resolve)
             except DslError:
                 raise
             except Exception:
                 if len(names) == 1:
                     raise
                 continue  # pattern member that can't express the query
-            import fnmatch as _fn2
-
-            if boost_by_pattern:
-                for pat, factor in boost_by_pattern:
-                    if _fn2.fnmatchcase(name, pat):
-                        score = score * F.lit(factor)
-                        break
+            factor = next((f for pat, f in boosts
+                           if fnmatch.fnmatchcase(name, pat)), None)
+            if factor is not None:
+                score = score * F.lit(factor)
             # a null score (missing field, log of a non-positive …)
             # drops the hit — the documented refuse-silently-wrong
             # posture (score_dsl.script_column)
@@ -1308,27 +1092,14 @@ class LakeService:
                       .withColumn("_score", score)
                       .filter(F.col("_score").isNotNull()))
             if rescore is not None:
-                # two-phase ranking on the ranked page (r12): the
-                # secondary score rides the SAME scan as an extra
-                # Column; window recombination happens driver-side on
-                # the collected window only — per-table windows are
-                # the analog of ES's per-shard rescore windows
-                scored = scored.withColumn(
-                    "_rescore", _rescore_expr(rescore, df)
-                ).withColumn(
-                    "_rescore_matched", _rescore_match_expr(rescore, df))
+                scored = scored.select("*", *_rescore_columns(rescore, df))
             if ms is not None:
                 scored = scored.filter(F.col("_score") >= F.lit(ms))
             if min_score is not None:
                 # the request-level floor (ES: composes with a
                 # function_score's own min_score) — drops hits from
                 # BOTH the page and the totals, like ES
-                try:
-                    scored = scored.filter(
-                        F.col("_score") >= F.lit(float(min_score)))
-                except (TypeError, ValueError):
-                    raise DslError("min_score must be a number") \
-                        from None
+                scored = scored.filter(F.col("_score") >= F.lit(min_score))
             if aggs:
                 from sql_database_to_elastic_datalake_spark.plans.es_aggs \
                     import run_aggs
@@ -1349,131 +1120,43 @@ class LakeService:
                 scored = scored.filter(compile_dsl(
                     post_filter, field_resolver=resolve,
                     schema_fields=df.schema))
-            if k == 0:
-                if track_total_hits is not False:
-                    total_value += scored.count()
-                continue
-            src_cols = resolve_source_columns(df.columns, source)
-            fout = _resolve_fields_option(fields_opt, df.columns)
-            fout_cols = [c for c, _ in fout]
-            hl_fields: list = []
-            hl_terms: dict[str, list[str]] = {}
-            if highlight:
-                # highlight on the RANKED page (r12): same driver-side
-                # returned-rows-only contract as the membership page
-                hl_fields = _highlight_plan(highlight, df.columns)
-                hl_terms = collect_highlight_terms(dsl, df.columns)
+            shape = _HitShape.of(df.columns, source, fields_opt,
+                                 highlight, dsl, collapse=cfield)
             tie = tiebreak_columns(df)
-            needed = list(dict.fromkeys(
-                src_cols + fout_cols + [f for f, *_ in hl_fields]
-                + ([cfield] if cfield and cfield in df.columns else [])
-                + tie + ["_score"]
+            page = _page_projection(
+                scored, shape.columns() + tie + ["_score"]
                 + (["_rescore", "_rescore_matched"]
-                   if rescore is not None else [])))
-            page = scored.select(*needed)
-            obs = None
-            if track_total_hits is not False:
-                obs = Observation()
-                page = page.observe(obs, F.count(F.lit(1)).alias("n"))
+                   if rescore is not None else []))
             order = [F.col("_score").desc()] + [
                 F.col(c).asc_nulls_first() for c in tie]
-            if cfield is not None:
-                from sql_database_to_elastic_datalake_spark.plans.search \
-                    import collapse_hits
-
-                # observed pre-collapse (ES totals count matches, not
-                # groups); the window top-1 per key under the _score
-                # order is the WindowGroupLimit shape — per-key best
-                # rows pre-truncate before the shuffle
-                ckey = (F.col(cfield) if cfield in df.columns
-                        else F.lit(None).cast("string"))
-                page = collapse_hits(page, ckey, order)
-            window = int(rescore.get("window_size", 10)) \
-                if rescore is not None else 0
-            rows = page.orderBy(*order).limit(
-                max(window, from_ + k)).collect()
-            if obs is not None:
-                total_value += obs.get["n"]
-            if rescore is not None and rows:
-                rspec = rescore.get("query") or {}
-                qw = float(rspec.get("query_weight", 1.0))
-                rqw = float(rspec.get("rescore_query_weight", 1.0))
-                mode = rspec.get("score_mode", "total")
-                combine = {
-                    "total": lambda o, r: o + r,
-                    "multiply": lambda o, r: o * r,
-                    "avg": lambda o, r: (o + r) / 2.0,
-                    "max": max,
-                    "min": min,
-                }.get(mode)
-                if combine is None:
-                    raise DslError(
-                        f"unknown rescore score_mode {mode!r}")
-                # combine iff the rescore query MATCHES — a membership
-                # boolean computed in-plan, not score truthiness: a
-                # matched doc can score 0.0 (boost 0) and ES still
-                # combines it (r12 ADVICE)
-                head = [
-                    ((combine(qw * r["_score"], rqw * r["_rescore"])
-                      if r["_rescore_matched"]
-                      else qw * r["_score"]), i, r)
-                    for i, r in enumerate(rows[:window])
-                ]
-                head.sort(key=lambda t: (-t[0], t[1]))
-                rows = [r for _, _, r in head] + list(rows[window:])
-                rescored = {id(r): c for c, _, r in head}
-                rows = rows[:from_ + k]
-            else:
-                rescored = {}
-                rows = rows[:from_ + k]
-            for i, r in enumerate(rows):
-                h = {**_hit(name, r, src_cols, hl_fields, hl_terms,
-                            pre, post, fields_out=fout),
-                     "_score": rescored.get(id(r), r["_score"])}
-                if cfield is not None:
-                    # the collapse key outside _source (which may be
-                    # filtered away) — ES returns it under `fields`
-                    h.setdefault("fields", {})[cfield] = [
-                        r[cfield] if cfield in df.columns else None]
+            rows, n = _ordered_page(
+                page, order, _fetch_size(from_, k, rescore), tracked,
+                resolve(cfield) if cfield is not None else None)
+            total += n or 0
+            for i, (s, r) in enumerate(
+                    _rescore_window(rows, rescore)[:from_ + k]):
                 # the merge key is the FINAL (possibly rescored)
                 # score; i preserves each table's post-window order
-                merged.append((-h["_score"], name, i, h))
+                merged.append((-s, name, i,
+                               {**shape.hit(name, r), "_score": s}))
         merged.sort(key=lambda t: t[:3])
-        if cfield is not None and len(names) > 1:
-            # pattern request: global re-collapse across tables —
-            # merged is score-ordered, so first-seen IS the best
-            seen: set = set()
-            uniq = []
-            for t in merged:
-                v = t[3].get("fields", {}).get(cfield, [None])[0]
-                key_ = ("\0null",) if v is None else v
-                if key_ in seen:
-                    continue
-                seen.add(key_)
-                uniq.append(t)
-            merged = uniq
-        hits = [h for _, _, _, h in merged[from_:from_ + k]]
-        out: dict[str, Any] = {"hits": {"hits": hits}}
+        hits = [h for *_, h in merged]
+        if cfield is not None:
+            hits = _recollapse(hits, cfield)
         # ES ranked pages carry hits.max_score: the best MATCHING
-        # doc's score regardless of the from_ offset (r13 ADVICE —
-        # slicing first under-reported it on paged requests), null
-        # when nothing matched
-        out["hits"]["max_score"] = (-merged[0][0]) if merged else None
-        if track_total_hits is not False:
-            out["hits"]["total"] = {
-                "value": total_value, "relation": "eq"}
-        if aggregations is not None:
-            out["aggregations"] = aggregations
-        if suggestions is not None:
-            out["suggest"] = suggestions
-        return out
+        # doc's score regardless of the from_ offset, null when
+        # nothing matched
+        return _envelope(hits[from_:from_ + k],
+                         _total(total) if tracked else None,
+                         hits[0]["_score"] if hits else None,
+                         aggregations, suggestions)
 
     def scroll_search(
         self, table: str | None = None, dsl: dict | None = None,
         size: int = 10, sort: list | None = None, source=None,
         aggs: dict | None = None, scroll_id: str | None = None,
     ) -> dict[str, Any]:
-        """``scroll``-shaped deep pagination, STATELESS (r9): the
+        """``scroll``-shaped deep pagination, STATELESS: the
         continuation token encodes the query and the cursor, so any
         node can serve any page and nothing expires server-side —
         the documented divergence from ES's stateful contexts (whose
@@ -1503,21 +1186,10 @@ class LakeService:
         ES, which computes them once per scroll).
         """
         import base64
-        import json as _json
-
-        from pyspark.sql.types import (
-            ArrayType,
-            BinaryType,
-            StructType,
-        )
-
-        from sql_database_to_elastic_datalake_spark.operators.similarity import (
-            tiebreak_columns,
-        )
 
         if scroll_id is not None:
             try:
-                st = _json.loads(
+                st = json.loads(
                     base64.urlsafe_b64decode(scroll_id.encode()))
                 if st.get("v") != 1:
                     raise ValueError
@@ -1538,28 +1210,8 @@ class LakeService:
                     "(per-table drains compose; a cross-pattern "
                     "cursor would re-merge every page)"
                 )
-            df = self.spark.read.parquet(
-                os.path.join(self.lake_dir, table))
-            clauses: list = []
-            seen: set[str] = set()
-            for s in sort or []:
-                f = s if isinstance(s, str) else next(iter(s))
-                if f == "_doc":
-                    continue  # arbitrary order → the tie-break below
-                clauses.append({f: s[f]} if isinstance(s, dict)
-                               else {s: "asc"})
-                seen.add(f)
-            atomic = [
-                c for c in tiebreak_columns(df)
-                if not isinstance(df.schema[c].dataType,
-                                  (ArrayType, StructType, BinaryType))
-            ]
-            clauses.extend({c: "asc"} for c in atomic
-                           if c not in seen)
-            if not clauses:
-                raise DslError(
-                    "scroll needs at least one sortable column")
-            sort = clauses
+            self._table_names(table)  # a missing table is a 404
+            sort = _cursor_sort(self._frame(table), sort, "scroll")
             after = None
         dsl = dsl or {"match_all": {}}
         out = self.advanced_search(
@@ -1582,7 +1234,7 @@ class LakeService:
                    "sort": sort, "size": int(size),
                    "_source": source, "after": new_after}
         out["_scroll_id"] = base64.urlsafe_b64encode(
-            _json.dumps(payload, default=_jsonable).encode()).decode()
+            json.dumps(payload, default=_jsonable).encode()).decode()
         return out
 
     def open_pit(self, table: str, keep_alive=None) -> dict:
@@ -1602,30 +1254,20 @@ class LakeService:
         PITs compose, a cross-table cursor would re-merge every page.
         A missing table is the route's 404, like ES."""
         import base64
-        import fnmatch as _fn
-        import json as _json
 
         if not isinstance(table, str) or not table:
             raise DslError("pit requires a table")
-        if "*" in table or "?" in table:
-            names = sorted(
-                d for d in os.listdir(self.lake_dir)
-                if _fn.fnmatchcase(d, table)
-                and os.path.isdir(os.path.join(self.lake_dir, d))
-            )
-            if not names:
-                raise NotFoundError(f"no table matches {table!r}")
-            if len(names) > 1:
-                raise DslError(
-                    f"pit pattern {table!r} matches {len(names)} "
-                    "tables; open one pit per table (per-table drains "
-                    "compose; a cross-table cursor would re-merge "
-                    "every page)")
-            table = names[0]
-        elif not path_exists(self.spark,
-                             os.path.join(self.lake_dir, table)):
-            raise NotFoundError(f"no such table {table!r}")
-        token = base64.urlsafe_b64encode(_json.dumps(
+        names = self._table_names(table)
+        if not names:
+            raise NotFoundError(f"no table matches {table!r}")
+        if len(names) > 1:
+            raise DslError(
+                f"pit pattern {table!r} matches {len(names)} "
+                "tables; open one pit per table (per-table drains "
+                "compose; a cross-table cursor would re-merge "
+                "every page)")
+        table = names[0]
+        token = base64.urlsafe_b64encode(json.dumps(
             {"v": 1, "pit": table}).encode()).decode()
         return {"id": token}
 
@@ -1634,13 +1276,12 @@ class LakeService:
         400; the table may have been dropped since open → 404, the
         closest analogue of ES's expired-context error)."""
         import base64
-        import json as _json
 
         pit_id = pit.get("id") if isinstance(pit, dict) else pit
         if not isinstance(pit_id, str) or not pit_id:
             raise DslError("pit requires an id")
         try:
-            st = _json.loads(base64.urlsafe_b64decode(pit_id.encode()))
+            st = json.loads(base64.urlsafe_b64decode(pit_id.encode()))
             table = st["pit"]
             if st.get("v") != 1 or not isinstance(table, str):
                 raise ValueError
@@ -1660,37 +1301,13 @@ class LakeService:
         engine appends the table's atomic orderable tie-break columns
         (the scroll convention), so consecutive ``search_after`` pages
         can never overlap or gap whatever the caller sorts by."""
-        from pyspark.sql.types import ArrayType, BinaryType, StructType
-
-        from sql_database_to_elastic_datalake_spark.operators.similarity import (
-            tiebreak_columns,
-        )
-
-        df = self.spark.read.parquet(os.path.join(self.lake_dir, table))
-        clauses: list = []
-        seen: set[str] = set()
-        for s in sort or []:
-            f = s if isinstance(s, str) else next(iter(s))
-            if f in ("_doc", "_shard_doc"):
-                continue  # arbitrary order → the tie-break below
-            clauses.append({f: s[f]} if isinstance(s, dict)
-                           else {s: "asc"})
-            seen.add(f)
-        atomic = [
-            c for c in tiebreak_columns(df)
-            if not isinstance(df.schema[c].dataType,
-                              (ArrayType, StructType, BinaryType))
-        ]
-        clauses.extend({c: "asc"} for c in atomic if c not in seen)
-        if not clauses:
-            raise DslError("pit needs at least one sortable column")
-        return clauses
+        return _cursor_sort(self._frame(table), sort, "pit")
 
     def termvectors(
         self, table: str, doc_id, fields: list | None = None,
         term_statistics: bool = False, field_statistics: bool = True,
     ) -> dict:
-        """ES ``_termvectors`` (r11): one document's per-field term
+        """ES ``_termvectors``: one document's per-field term
         vectors — term_freq + positions + character offsets from the
         SAME analyzer the match queries use, ``doc_freq``/``ttf``
         under ``term_statistics``, and corpus ``field_statistics``
@@ -1718,8 +1335,7 @@ class LakeService:
         if not path_exists(self.spark, path):
             raise NotFoundError(f"no such table {table!r}")
         df = self.spark.read.parquet(path)
-        id_col = "id" if "id" in df.columns else next(
-            (c for c in df.columns if c.endswith("_id")), None)
+        id_col = _doc_id_column(df.columns)
         if id_col is None:
             raise DslError(
                 f"table {table!r} has no id column for a point lookup")
@@ -1856,8 +1472,7 @@ class LakeService:
                                    "found": False}
                 continue
             df = self.spark.read.parquet(path)
-            idc = "id" if "id" in df.columns else next(
-                (c for c in df.columns if c.endswith("_id")), None)
+            idc = _doc_id_column(df.columns)
             if idc is None:
                 raise DslError(f"table {t!r} has no id column for mget")
             wanted = sorted({str(entries[i]["_id"]) for i in idxs})
@@ -1899,15 +1514,9 @@ class LakeService:
         carries different types across matched tables, each type entry
         lists its ``indices`` like ES; a single agreeing type omits
         the key, also like ES."""
-        import fnmatch as _fn
-
         pattern = table or INDEX_PREFIX + "*"
         if "*" in pattern or "?" in pattern:
-            names = sorted(
-                d for d in os.listdir(self.lake_dir)
-                if _fn.fnmatchcase(d, pattern)
-                and os.path.isdir(os.path.join(self.lake_dir, d))
-            )
+            names = self._matching_tables(pattern)
         else:
             if not path_exists(self.spark,
                                os.path.join(self.lake_dir, pattern)):
@@ -1925,10 +1534,9 @@ class LakeService:
         # field -> es_type -> [tables]
         by_field: dict[str, dict[str, list[str]]] = {}
         for t in names:
-            schema = self.spark.read.parquet(
-                os.path.join(self.lake_dir, t)).schema
+            schema = self._frame(t).schema
             for f in schema.fields:
-                if not any(_fn.fnmatchcase(f.name, p) for p in pats):
+                if not any(fnmatch.fnmatchcase(f.name, p) for p in pats):
                     continue
                 et = _es_field_type(f.dataType.simpleString())
                 by_field.setdefault(f.name, {}).setdefault(
@@ -1963,20 +1571,12 @@ class LakeService:
         walk produces. Always ``complete: true``: the walk is exact,
         never budget-truncated (divergence: ES may report false under
         its shard timeout)."""
-        import fnmatch as _fn
-
         if not field:
             raise DslError("terms_enum requires a field")
         if size < 1:
             raise DslError("terms_enum size must be >= 1")
-        if "*" in table or "?" in table:
-            names = sorted(
-                d for d in os.listdir(self.lake_dir)
-                if _fn.fnmatchcase(d, table)
-                and os.path.isdir(os.path.join(self.lake_dir, d))
-            )
-        else:
-            names = [table]
+        names = (self._matching_tables(table)
+                 if "*" in table or "?" in table else [table])
         from sql_database_to_elastic_datalake_spark.plans.search import (
             terms_enum_frame,
         )
@@ -2009,11 +1609,11 @@ class LakeService:
         top-level clause's predicate — as extra boolean columns on the
         same row, so the breakdown costs nothing beyond the lookup.
 
-        r13 upgrade (compile_score landed in r12): ``value`` is the
-        doc's REAL score under the deterministic tf scoring model —
-        the same number the ranked pages order by — and must/should
-        clause details carry their score contributions (score when the
-        clause matches, 0 otherwise, bool-sum semantics like Lucene);
+        ``value`` is the doc's REAL score under the deterministic tf
+        scoring model — the same number the ranked pages order by —
+        and must/should clause details carry their score contributions
+        (score when the clause matches, 0 otherwise, bool-sum semantics
+        like Lucene);
         filter/must_not details stay 1/0 pass markers (they never
         contribute score, in ES either). DOCUMENTED DIVERGENCE: the
         tree is one level deep and the model is the engine's
@@ -2021,8 +1621,6 @@ class LakeService:
         description says so. A missing document returns a
         ``found: false`` envelope (the route's 404 body), like ES; a
         missing TABLE still raises (404 error body)."""
-        import json as _json
-
         from sql_database_to_elastic_datalake_spark.plans.es_dsl import (
             compile_score,
         )
@@ -2031,8 +1629,7 @@ class LakeService:
         if not path_exists(self.spark, path):
             raise NotFoundError(f"no such table {table!r}")
         df = self.spark.read.parquet(path)
-        idc = "id" if "id" in df.columns else next(
-            (c for c in df.columns if c.endswith("_id")), None)
+        idc = _doc_id_column(df.columns)
         if idc is None:
             raise DslError(f"table {table!r} has no id column")
         pred = compile_dsl(query, schema_fields=df.schema)
@@ -2063,7 +1660,7 @@ class LakeService:
                                 spec, schema_fields=df.schema)
                             .cast("double").alias(f"__cs{i}"))
                     clause_descs.append((
-                        f"{occur}: {_json.dumps(spec, sort_keys=True)}",
+                        f"{occur}: {json.dumps(spec, sort_keys=True)}",
                         scored))
         rows = (df.filter(F.col(idc).cast("string")
                           == str(doc_id)).select(*probes).collect())
@@ -2125,6 +1722,13 @@ class LakeService:
         contract: aggregations see the query scope, not the hits page)
         via :mod:`.plans.es_aggs`.
 
+        Routing: a ``percolate`` query searches the stored queries
+        (:meth:`_percolate_search`), ``knn`` the vector page
+        (:meth:`_knn_search`), a top-level scoring or text-relevance
+        query with no explicit ``sort`` the ranked page
+        (:meth:`_scored_search`); everything else is the membership
+        page below.
+
         ``sort`` orders the hits (ES sort clauses; TakeOrdered — no
         global sort materialization) and each hit then carries its
         ``sort`` values; ``search_after`` resumes from such a value
@@ -2161,8 +1765,9 @@ class LakeService:
         doesn't have simply never matches there (tolerant resolver:
         unknown fields compile to null), and a table whose schema
         cannot express the query at all (e.g. ``nested`` on a missing
-        path) contributes zero hits rather than an error. ``aggs``
-        require a single concrete table.
+        path) contributes zero hits rather than an error. A concrete
+        table that does not exist is a 404. ``aggs`` require a single
+        concrete table.
 
         ``source`` is ES's ``_source`` filtering (bool / names /
         includes-excludes patterns). It is applied as a ``select``
@@ -2173,7 +1778,7 @@ class LakeService:
         only (≤ from+size rows driver-side — never a distributed
         pass); fragments window to ES's defaults (fragment_size 100 /
         number_of_fragments 5) with edges snapped to boundary chars,
-        and ``boundary_scanner: "sentence"`` (r12) gives the unified
+        and ``boundary_scanner: "sentence"`` gives the unified
         highlighter's whole-sentence fragments (BreakIterator
         restatement incl. the SB8 abbreviation guard —
         plans/search.py:sentence_spans); the remaining divergence is
@@ -2199,13 +1804,8 @@ class LakeService:
         k``); sorted pages are always exact (the Observation rides the
         TakeOrdered for free — a strictly-more-accurate divergence
         from ES's 10k default bound)."""
-        import fnmatch as _fn
-
-        # r13 (ADVICE): malformed bodies must be named 400s, not 500s
-        # — a non-dict collapse reached `.get` in the routing
-        # condition, a scalar indices_boost raised on iteration, and
-        # a non-numeric rescore window/weight raised ValueError deep
-        # in the combine. Shape-check the scoring options up front.
+        # malformed bodies are named 400s, not 500s: shape-check the
+        # scoring options before any routing reads them
         if collapse is not None and not isinstance(collapse, dict):
             raise DslError('collapse must be an object with a "field"')
         if indices_boost is not None and not isinstance(
@@ -2214,18 +1814,13 @@ class LakeService:
                 "indices_boost must be a list of single-entry "
                 "{index: factor} objects")
         _validate_rescore_options(rescore)
-
-        if "*" in table or "?" in table:
-            names = sorted(
-                d for d in os.listdir(self.lake_dir)
-                if _fn.fnmatchcase(d, table)
-                and os.path.isdir(os.path.join(self.lake_dir, d))
-            )
-        else:
-            names = [table]
-        if isinstance(dsl, dict) and len(dsl) == 1 \
-                and next(iter(dsl)) == "percolate":
-            # r13 reverse search: the percolate query matches STORED
+        _validate_highlight(highlight)
+        if from_ < 0:
+            raise DslError("from must be a non-negative integer")
+        kind = (next(iter(dsl)) if isinstance(dsl, dict) and len(dsl) == 1
+                else None)
+        if kind == "percolate":
+            # reverse search: the percolate query matches STORED
             # queries against the request's document(s) — the table
             # plays no part (ES reads queries from the percolator
             # index; here they live in the service namespace)
@@ -2241,6 +1836,7 @@ class LakeService:
                         "(the hits are stored queries, not documents)")
             return self._percolate_search(dsl["percolate"], k=k,
                                           from_=from_)
+        names = self._table_names(table)
         rt_specs: dict = dict(runtime_mappings or {})
         if script_fields:
             # script_fields are runtime columns surfaced through the
@@ -2264,34 +1860,32 @@ class LakeService:
                           + [{"field": n} for n in script_fields])
         if rt_specs and knn is not None:
             raise DslError("runtime fields are not supported with knn")
-        if rt_specs and isinstance(dsl, dict) and len(dsl) == 1 \
-                and next(iter(dsl)) in _SCORED_KINDS and not sort:
+        if rt_specs and kind in _SCORED_KINDS and not sort:
             raise DslError(
                 "runtime fields are not supported on the "
                 "function_score/script_score ranked page (reference "
                 "them from the score script directly instead)"
             )
+        single = names[0] if len(names) == 1 else None
         if _has_mlt_doc_refs(dsl):
             # more_like_this like-by-document entries ({"_id": …},
             # {"doc": {…}}) resolve HERE — the schema-free compiler
             # takes like text. One point-lookup job per referenced doc
             # (id filter pushed to the scan); an absent doc is ignored
             # like ES's "documents not available" rule.
-            dsl = self._resolve_mlt_likes(
-                dsl, names[0] if len(names) == 1 else None)
+            dsl = self._resolve_mlt_likes(dsl, single)
         if _has_terms_lookup(dsl):
             # ES terms lookup ({"terms": {f: {"index","id","path"}}}):
             # the referenced doc's path value becomes the terms list —
             # one point lookup, pushed id filter. A missing doc yields
             # an empty list (matches nothing), like ES.
-            dsl = self._resolve_terms_lookups(
-                dsl, names[0] if len(names) == 1 else None)
-        if aggs and len(names) != 1:
+            dsl = self._resolve_terms_lookups(dsl, single)
+        if aggs and single is None:
             raise DslError(
                 "aggs require a single concrete table (pattern matched "
                 f"{len(names)})"
             )
-        if suggest and len(names) != 1:
+        if suggest and single is None:
             raise DslError(
                 "suggest requires a single concrete table (pattern "
                 f"matched {len(names)})"
@@ -2301,11 +1895,8 @@ class LakeService:
             # AND the sibling query both restrict the candidate set
             # (documented divergence: ES score-BLENDS a sibling query;
             # this engine has no scores for filter-context trees, so
-            # it filters — the honest subset). Exact top-k by cosine,
-            # scored (1+cos)/2 like ES's cosine index;
-            # num_candidates is accepted-and-ignored (exact search is
-            # strictly better recall than the HNSW bound it tunes).
-            if len(names) != 1:
+            # it filters — the honest subset).
+            if single is None:
                 raise DslError(
                     "knn requires a single concrete table (pattern "
                     f"matched {len(names)})"
@@ -2319,71 +1910,44 @@ class LakeService:
                         "comes from the vector similarity)"
                     )
             return self._knn_search(
-                names[0], knn, dsl, k=k, from_=from_, source=source,
+                single, knn, dsl, k=k, from_=from_, source=source,
                 fields_opt=fields_opt)
-        if (isinstance(dsl, dict) and len(dsl) == 1
-                and next(iter(dsl)) in _SCORED_KINDS
-                and not sort):
-            # top-level scoring query with no explicit sort: the
-            # computed score IS the order (the ranked path). With an
-            # explicit sort, scoring cannot affect the response and
-            # the body compiles as membership below (filter context).
-            if from_ < 0:
-                raise DslError("from must be a non-negative integer")
-            if search_after is not None:
-                raise DslError(
-                    f"{next(iter(dsl))} ranking is not supported "
-                    "with search_after (add an explicit sort for the "
-                    "membership-only page)")
-            return self._scored_search(
-                names, dsl, k=k, from_=from_, source=source,
-                fields_opt=fields_opt, aggs=aggs, suggest=suggest,
-                post_filter=post_filter,
-                track_total_hits=track_total_hits,
-                highlight=highlight, collapse=collapse,
-                indices_boost=indices_boost, rescore=rescore,
-                min_score=min_score)
-        if (isinstance(dsl, dict) and len(dsl) == 1
-                and (next(iter(dsl)) in _TEXT_SCORED_KINDS
-                     # r13 late: a bool tree carrying a FEATURE
-                     # scorer (rank_feature / distance_feature) in a
-                     # scoring position ranks by the summed score —
-                     # "boost nearby/recent inside a bool should" is
-                     # those leaves' entire use case. Text/constant
-                     # bools keep the documented membership order.
-                     or (next(iter(dsl)) == "bool"
-                         and _has_feature_scorer(dsl)))
-                and not sort and search_after is None
-                and not rt_specs
-                and not (collapse and collapse.get("inner_hits"))):
-            # r12: a top-level text-relevance query with no explicit
-            # sort ranks by its computed score (ES's default _score
-            # order, boosts honored) — highlight and collapse ride
-            # the ranked page. Feature combinations it doesn't carry
-            # (search_after / runtime fields / collapse inner_hits)
-            # fall through to the membership page instead of erroring.
-            if from_ < 0:
-                raise DslError("from must be a non-negative integer")
-            return self._scored_search(
-                names, dsl, k=k, from_=from_, source=source,
-                fields_opt=fields_opt, aggs=aggs, suggest=suggest,
-                post_filter=post_filter,
-                track_total_hits=track_total_hits,
-                highlight=highlight, collapse=collapse,
-                indices_boost=indices_boost, rescore=rescore,
-                min_score=min_score)
-        if indices_boost is not None or rescore is not None \
-                or min_score is not None:
-            # scoring-only keys on a page with no scores: silently
-            # dropping them would change nothing the user asked for —
-            # reject by name (the reference's ES applies them to the
-            # _score order this page does not have)
-            which = ("indices_boost" if indices_boost is not None
-                     else "rescore" if rescore is not None
-                     else "min_score")
+        if kind in _SCORED_KINDS and not sort \
+                and search_after is not None:
             raise DslError(
-                f"{which} needs a relevance-ranked page (a top-level "
-                "scoring query with no explicit sort)")
+                f"{kind} ranking is not supported with search_after "
+                "(add an explicit sort for the membership-only page)")
+        # a top-level scoring query with no explicit sort ranks by its
+        # computed score — with an explicit sort, scoring cannot affect
+        # the response and the body compiles as membership below
+        # (filter context). Text-relevance queries (and bools carrying
+        # a rank_feature / distance_feature scorer in a scoring
+        # position) rank the same way (ES's default _score order,
+        # boosts honored) unless the request carries a feature the
+        # ranked page lacks (search_after / runtime fields / collapse
+        # inner_hits) — those fall through to the membership page.
+        if not sort and (kind in _SCORED_KINDS or (
+                (kind in _TEXT_SCORED_KINDS
+                 or (kind == "bool" and _has_feature_scorer(dsl)))
+                and search_after is None and not rt_specs
+                and not (collapse and collapse.get("inner_hits")))):
+            return self._scored_search(
+                names, dsl, k=k, from_=from_, source=source,
+                fields_opt=fields_opt, aggs=aggs, suggest=suggest,
+                post_filter=post_filter,
+                track_total_hits=track_total_hits,
+                highlight=highlight, collapse=collapse,
+                indices_boost=indices_boost, rescore=rescore,
+                min_score=min_score)
+        for what, val in (("indices_boost", indices_boost),
+                          ("rescore", rescore), ("min_score", min_score)):
+            if val is not None:
+                # scoring-only keys on a page with no scores: silently
+                # dropping them would change nothing the user asked
+                # for — reject by name
+                raise DslError(
+                    f"{what} needs a relevance-ranked page (a top-level "
+                    "scoring query with no explicit sort)")
         if search_after is not None and not sort:
             raise DslError("search_after requires a sort")
         if search_after is not None and sort and _sort_has_options(sort):
@@ -2392,29 +1956,20 @@ class LakeService:
                 "mode/unmapped_type change the comparison value; the "
                 "cursor compares raw columns)"
             )
-        if from_:
-            if from_ < 0:
-                raise DslError("from must be a non-negative integer")
-            if not sort:
-                raise DslError(
-                    "from requires a sort (an offset into an unordered "
-                    "result set is not a page; add a sort or use "
-                    "search_after)"
-                )
-            if search_after is not None:
-                raise DslError(
-                    "from is not allowed with search_after (ES rejects "
-                    "a nonzero from there too)"
-                )
+        if from_ and not sort:
+            raise DslError(
+                "from requires a sort (an offset into an unordered "
+                "result set is not a page; add a sort or use "
+                "search_after)"
+            )
+        if from_ and search_after is not None:
+            raise DslError(
+                "from is not allowed with search_after (ES rejects "
+                "a nonzero from there too)"
+            )
+        cfield = _collapse_field(collapse)
         inner_hits = None
-        if collapse is not None:
-            if not (isinstance(collapse, dict)
-                    and isinstance(collapse.get("field"), str)):
-                raise DslError('collapse requires a "field" string')
-            unknown = sorted(set(collapse) - {"field", "inner_hits"})
-            if unknown:
-                raise DslError(
-                    f"unsupported collapse options: {unknown}")
+        if cfield is not None:
             if not sort:
                 raise DslError(
                     "collapse requires a sort (this engine has no "
@@ -2461,20 +2016,18 @@ class LakeService:
                 and track_total_hits < 0:
             raise DslError("track_total_hits bound must be non-negative")
 
-        from sql_database_to_elastic_datalake_spark.plans.search import (
-            collect_highlight_terms,
-            resolve_source_columns,
+        from sql_database_to_elastic_datalake_spark.plans.join_field import (
+            has_join_field,
+            lake_sibling_loader,
+            rewrite_join_field,
         )
 
-        _validate_highlight(highlight)
-        pre, post = _highlight_tags(highlight)
-        aggregations = None
-        suggestions = None
-        descs = _sort_directions(sort) if sort else []
+        tracked = track_total_hits is not False
+        aggregations = suggestions = None
         merged: list[dict] = []
-        total_value, total_exact = 0, True
+        total, total_exact = 0, True
         for name in names:
-            df = self.spark.read.parquet(os.path.join(self.lake_dir, name))
+            df = self._frame(name)
             orig_cols = df.columns
             if rt_specs:
                 # runtime fields become real columns of this table's
@@ -2495,37 +2048,21 @@ class LakeService:
                         rt_name, runtime_column(rt_spec, rt_resolve))
             # _source is the original document — runtime/script fields
             # surface only through `fields` (ES's contract)
-            src_cols = resolve_source_columns(orig_cols, source)
-            fout = _resolve_fields_option(fields_opt, df.columns)
-            fout_cols = [c for c, _ in fout]
-            hl_fields: list = []
-            hl_terms: dict[str, list[str]] = {}
-            if highlight:
-                hl_fields = _highlight_plan(highlight, df.columns)
-                hl_terms = collect_highlight_terms(dsl, df.columns)
+            shape = _HitShape.of(df.columns, source, fields_opt,
+                                 highlight, dsl, collapse=cfield,
+                                 source_columns=orig_cols)
 
-            # r14: join-field leaves (has_child / has_parent /
-            # parent_id) rewrite into semi-join flag columns BEFORE
-            # the compile — the envelope machinery above resolved
-            # against the unaugmented frame, and the flags are
-            # dropped right after the filter, so they never reach a
-            # response (plans/join_field.py)
+            # join-field leaves (has_child / has_parent / parent_id)
+            # rewrite into semi-join flag columns BEFORE the compile —
+            # the hit shape above resolved against the unaugmented
+            # frame, and the flags are dropped right after the filter,
+            # so they never reach a response (plans/join_field.py)
             table_dsl, jf_flags = dsl, []
-            from sql_database_to_elastic_datalake_spark.plans.join_field \
-                import has_join_field, lake_sibling_loader, \
-                rewrite_join_field
-
             if has_join_field(dsl):
                 df, table_dsl, jf_flags = rewrite_join_field(
                     df, dsl, name,
                     lake_sibling_loader(self.spark, self.lake_dir))
-
-            def resolve(field: str, _df=df):
-                # ES: a query on a field an index lacks matches nothing
-                # there — two-valued null semantics do exactly that
-                return (F.col(field) if field in _df.columns
-                        else F.lit(None).cast("string"))
-
+            resolve = field_resolver(df)
             try:
                 pred = compile_dsl(table_dsl, field_resolver=resolve,
                                    schema_fields=df.schema)
@@ -2542,14 +2079,11 @@ class LakeService:
                 from sql_database_to_elastic_datalake_spark.plans.es_aggs \
                     import run_aggs
 
-                from sql_database_to_elastic_datalake_spark.plans \
-                    .join_field import lake_sibling_loader as _lsl
-
                 aggregations = run_aggs(
                     matched, aggs, schema_fields=df.schema,
                     background=df, background_pred=pred,
-                    relation_ctx=(name, _lsl(self.spark,
-                                             self.lake_dir)))
+                    relation_ctx=(name, lake_sibling_loader(
+                        self.spark, self.lake_dir)))
             if suggest:
                 # ES computes suggestions against the INDEX, not the
                 # query's match set — pass the unfiltered table
@@ -2564,8 +2098,8 @@ class LakeService:
                 tsort = sort
                 if any(isinstance(s, dict) and "_geo_distance" in s
                        for s in sort):
-                    # r13: geo sort — distance materialized as a
-                    # Column, then the ordinary machinery applies
+                    # geo sort — distance materialized as a Column,
+                    # then the ordinary machinery applies
                     matched, tsort = _rewrite_geo_sort(
                         matched, sort, df.columns)
                 fields, order_cols, getters = _parse_sort(
@@ -2575,180 +2109,79 @@ class LakeService:
                         _search_after_pred(tsort, fields, search_after,
                                            schema=matched.schema)
                     )
-                if k == 0:
-                    # size:0 is ES's aggs-only/total-only request;
-                    # limit(0) + Observation assert-fails (the limit-0
-                    # optimizer rule prunes CollectMetrics), so the
-                    # total is just a count here
-                    if track_total_hits is not False:
-                        total_value += matched.count()
-                    continue
-                # sorted page: TakeOrdered consumes every matched row,
-                # so an Observation yields the exact total in-job
-                from pyspark.sql import Observation
-
-                # project to what the response needs BEFORE the
-                # collect: _source filtering becomes real scan
-                # pruning, and sort/highlight/collapse fields ride
-                # along
-                cfield = collapse["field"] if collapse else None
-                needed = list(dict.fromkeys(
-                    src_cols + fields + [f for f, *_ in hl_fields]
-                    + fout_cols
-                    + ([cfield] if cfield and cfield in df.columns
-                       else []))) or None
-                page = matched.select(*needed) if needed \
-                    else matched.select(F.lit(1).alias("__1"))
-                obs = None
-                if track_total_hits is not False:
-                    obs = Observation()
-                    page = page.observe(
-                        obs, F.count(F.lit(1)).alias("n"))
-                if collapse:
-                    from sql_database_to_elastic_datalake_spark.plans.search \
-                        import collapse_hits
-
-                    # observed pre-collapse (ES totals count matches,
-                    # not groups); an unmapped field is one null group,
-                    # like ES
-                    ckey = (F.col(cfield) if cfield in df.columns
-                            else F.lit(None).cast("string"))
-                    page = collapse_hits(page, ckey, order_cols)
                 # offset pages ride the same TakeOrdered: each table
                 # yields its first from+k rows and the merge slices —
                 # the documented linear deep-offset cost
-                rows = page.orderBy(*order_cols).limit(
-                    from_ + k).collect()
-                if obs is not None:
-                    total_value += obs.get["n"]
-                new_hits = [
-                    _hit(name, r, src_cols, hl_fields, hl_terms,
-                         pre, post, sort_getters=getters,
-                         fields_out=fout)
-                    for r in rows
-                ]
-                if collapse:
-                    # carry the collapse key OUTSIDE _source (which may
-                    # be filtered away) — ES returns it under `fields`;
-                    # the post-merge global re-collapse reads it too
-                    # (merged, not overwritten: the `fields` retrieval
-                    # option may populate the same dict)
-                    for h, r in zip(new_hits, rows):
-                        h.setdefault("fields", {})[cfield] = [
-                            r[cfield] if cfield in df.columns else None]
-                merged += new_hits
+                rows, n = _ordered_page(
+                    _page_projection(matched, shape.columns() + fields),
+                    order_cols, _fetch_size(from_, k, None), tracked,
+                    resolve(cfield) if cfield is not None else None)
+                total += n or 0
+                merged += [shape.hit(name, r, sort_getters=getters)
+                           for r in rows]
             elif k == 0:
                 # total-only request: the k+1 budget trick below would
                 # report the useless bound {0, "gte"} — a count per
                 # table is what the client asked for
-                if track_total_hits is not False:
-                    total_value += matched.count()
+                if tracked:
+                    total += matched.count()
             elif track_total_hits is None:
                 # ONE job per table: an unranked filter stops scanning
                 # at the limit; k+1 rows give the exact total when the
                 # page covers the matches, else ES's track_total_hits
-                # lower bound (r4 verdict nit — no separate count())
-                budget = (k + 1) - total_value
+                # lower bound — no separate count()
+                budget = (k + 1) - total
                 if budget <= 0:
                     total_exact = False
                     break
-                needed = list(dict.fromkeys(
-                    src_cols + [f for f, *_ in hl_fields]
-                    + fout_cols)) or None
-                page = matched.select(*needed) if needed \
-                    else matched.select(F.lit(1).alias("__1"))
-                rows = page.limit(budget).collect()
-                total_value += len(rows)
-                merged += [
-                    _hit(name, r, src_cols, hl_fields, hl_terms,
-                         pre, post, fields_out=fout)
-                    for r in rows
-                ]
+                rows = _page_projection(
+                    matched, shape.columns()).limit(budget).collect()
+                total += len(rows)
+                merged += [shape.hit(name, r) for r in rows]
             else:
                 # explicit track_total_hits: the page and the total
                 # are separate requests (exactly ES's cost model —
                 # true pays a count, an integer bound scans at most
                 # n+1 rows, false pays nothing)
-                needed = list(dict.fromkeys(
-                    src_cols + [f for f, *_ in hl_fields]
-                    + fout_cols)) or None
-                page = matched.select(*needed) if needed \
-                    else matched.select(F.lit(1).alias("__1"))
+                page = _page_projection(matched, shape.columns())
                 row_budget = k - len(merged)
                 if row_budget > 0:
-                    merged += [
-                        _hit(name, r, src_cols, hl_fields, hl_terms,
-                             pre, post, fields_out=fout)
-                        for r in page.limit(row_budget).collect()
-                    ]
+                    merged += [shape.hit(name, r)
+                               for r in page.limit(row_budget).collect()]
                 if track_total_hits is True:
-                    total_value += matched.count()
-                elif track_total_hits is not False:
-                    remaining = (int(track_total_hits) + 1) - total_value
+                    total += matched.count()
+                elif tracked:
+                    remaining = (int(track_total_hits) + 1) - total
                     if remaining > 0:
-                        total_value += page.limit(remaining).count()
+                        total += page.limit(remaining).count()
         if sort or k == 0:
-            merged = _merge_sorted_hits(merged, descs) if sort else []
-            if merged and collapse is not None:
-                # an index-pattern request can hold one hit PER TABLE
-                # for a shared collapse key (each table collapsed
-                # independently) — ES guarantees one hit per key
-                # GLOBALLY, so keep only the first in merged order:
-                # the per-table collapse already picked each table's
-                # best, and the merge is the request sort, so
-                # first-seen IS the global best (r6 advisory)
-                cf = collapse["field"]
-                seen: set = set()
-                uniq = []
-                for h in merged:
-                    v = h.get("fields", {}).get(cf, [None])[0]
-                    key_ = ("\0null",) if v is None else v
-                    if key_ in seen:
-                        continue
-                    seen.add(key_)
-                    uniq.append(h)
-                merged = uniq
+            merged = (_merge_sorted_hits(merged, _sort_directions(sort))
+                      if sort else [])
+            if cfield is not None:
+                merged = _recollapse(merged, cfield)
             merged = merged[from_:from_ + k]
             if inner_hits is not None and merged:
                 # ES's second inner_hits phase: ONE bounded job for
-                # the page's groups — the key set (≤ from+size keys)
-                # pushes into the scan as an In filter, a window
-                # top-(from+size) per key pre-truncates
-                # (WindowGroupLimit), and per-group totals ride a
-                # groupBy over the same pruned scope. `matched` is the
-                # single table's post-post_filter scope (the hits
-                # scope, like ES).
+                # the page's groups. `matched` is the single table's
+                # post-post_filter scope (the hits scope, like ES).
                 self._attach_collapse_inner_hits(
-                    names[0], matched, collapse["field"], inner_hits,
-                    sort, merged)
-            total = {"value": total_value, "relation": "eq"}
+                    names[0], matched, cfield, inner_hits, sort, merged)
+            hits_total = _total(total)
         elif track_total_hits is None:
-            if total_value > k:
-                total_exact = False
-            total = {"value": min(total_value, k) if not total_exact
-                     else total_value,
-                     "relation": "eq" if total_exact else "gte"}
+            exact = total_exact and total <= k
+            hits_total = _total(total if exact else min(total, k),
+                                "eq" if exact else "gte")
             merged = merged[:k]
         else:
             merged = merged[:k]
             if track_total_hits is True:
-                total = {"value": total_value, "relation": "eq"}
-            elif track_total_hits is False:
-                total = None
+                hits_total = _total(total)
             else:
                 cap = int(track_total_hits)
-                total = ({"value": cap, "relation": "gte"}
-                         if total_value > cap
-                         else {"value": total_value, "relation": "eq"})
-        hits_env: dict[str, Any] = {"hits": merged}
-        if track_total_hits is not False:
-            hits_env["total"] = total
-        out: dict[str, Any] = {"hits": hits_env}
-        if aggregations is not None:
-            out["aggregations"] = aggregations
-        if suggestions is not None:
-            out["suggest"] = suggestions
-        return out
+                hits_total = (_total(cap, "gte") if total > cap
+                              else _total(total))
+        return _envelope(merged, hits_total if tracked else None, None,
+                         aggregations, suggestions)
 
     def _attach_collapse_inner_hits(
         self, table: str, matched: DataFrame, cfield: str,
@@ -2761,17 +2194,10 @@ class LakeService:
         window top-(from+size) per key, per-group exact totals."""
         from pyspark.sql import Window
 
-        from sql_database_to_elastic_datalake_spark.plans.search import (
-            resolve_source_columns,
-        )
-
         keys = [h.get("fields", {}).get(cfield, [None])[0]
                 for h in merged]
         non_null = [v for v in keys if v is not None]
-        if cfield not in matched.columns:
-            key_col = F.lit(None).cast("string")
-        else:
-            key_col = F.col(cfield)
+        key_col = field_resolver(matched)(cfield)
         pred = None
         if non_null:
             pred = key_col.isin(non_null)
@@ -2786,8 +2212,8 @@ class LakeService:
         isize = int(inner.get("size", 3))
         ifrom = int(inner.get("from", 0))
         iname = str(inner.get("name") or cfield)
-        src_cols = resolve_source_columns(
-            matched.columns, inner.get("_source"))
+        shape = _HitShape(resolve_source_columns(
+            matched.columns, inner.get("_source")))
         from sql_database_to_elastic_datalake_spark.operators.similarity import (
             tiebreak_columns,
         )
@@ -2802,7 +2228,7 @@ class LakeService:
         ]
         w = Window.partitionBy(key_col).orderBy(*order)
         need = list(dict.fromkeys(
-            src_cols + ifields
+            shape.source + ifields
             + ([cfield] if cfield in matched.columns else [])))
         rows = (
             scoped.withColumn("__rn", F.row_number().over(w))
@@ -2823,13 +2249,9 @@ class LakeService:
         for h, kv in zip(merged, keys):
             grp = by_key.get(kv, [])[:isize]
             h["inner_hits"] = {iname: {"hits": {
-                "total": {"value": counts.get(kv, 0),
-                          "relation": "eq"},
-                "hits": [
-                    _hit(table, r, src_cols, [], {}, "", "",
-                         sort_getters=igetters)
-                    for r in grp
-                ],
+                "total": _total(counts.get(kv, 0)),
+                "hits": [shape.hit(table, r, sort_getters=igetters)
+                         for r in grp],
             }}}
 
 
@@ -3041,13 +2463,11 @@ def _highlight_plan(highlight: dict, columns: list[str]) -> list[tuple]:
 def _expand_patterns(names: list[str], columns: list[str]) -> list[str]:
     """Highlight field names/patterns → concrete columns of one table
     (a pattern matching nothing highlights nothing, like ES)."""
-    import fnmatch as _fn
-
     out: list[str] = []
     for n in names:
         n = str(n)
         if "*" in n or "?" in n:
-            out.extend(c for c in columns if _fn.fnmatchcase(c, n))
+            out.extend(c for c in columns if fnmatch.fnmatchcase(c, n))
         elif n in columns:
             out.append(n)
     return list(dict.fromkeys(out))
@@ -3055,10 +2475,342 @@ def _expand_patterns(names: list[str], columns: list[str]) -> list[str]:
 
 
 
+def _doc_id_column(columns: list[str]) -> str | None:
+    """The engine's document-id column: ``id``, else the first
+    ``*_id`` column (None when the table has neither)."""
+    if "id" in columns:
+        return "id"
+    return next((c for c in columns if c.endswith("_id")), None)
+
+
+def _by_query_response(t0: float, total: int, **counts) -> dict[str, Any]:
+    """The ``_delete_by_query`` / ``_update_by_query`` / ``_reindex``
+    response: ``took`` since ``t0``, the matched ``total`` and the
+    per-outcome ``counts``; versioning and throttling are constant on
+    a snapshot lake (no concurrent versions inside one rewrite)."""
+    return {
+        "took": int((time.monotonic() - t0) * 1000),
+        "timed_out": False, "total": total, "deleted": 0, **counts,
+        "batches": 1 if total else 0, "version_conflicts": 0,
+        "noops": 0, "retries": {"bulk": 0, "search": 0},
+        "throttled_millis": 0, "requests_per_second": -1.0,
+        "throttled_until_millis": 0, "failures": [],
+    }
+
+
+# -- search request stages ----------------------------------------------
+#
+# Every search entry point runs the same stages: resolve its target
+# tables (LakeService._table_names, one DataFrame per table via
+# LakeService._frame, compiled against plans.search.field_resolver),
+# project and page each table (_page_projection, _ordered_page), re-rank
+# the rescore window (_rescore_window), collapse (_collapse_field,
+# _recollapse), and build the response (_HitShape, _envelope).
+
+
+def _total(value: int, relation: str = "eq") -> dict[str, Any]:
+    return {"value": value, "relation": relation}
+
+
+def _envelope(hits: list, total: dict | None, max_score=None,
+              aggregations=None, suggest=None) -> dict[str, Any]:
+    """The ES search response: ``hits`` with its ``total`` (omitted
+    when totals are not tracked) and ``max_score`` (the best matching
+    score of a ranked request whatever the offset; null on unranked
+    pages or when nothing matched), plus ``aggregations`` and
+    ``suggest`` when the request ran them."""
+    env: dict[str, Any] = {"hits": hits, "max_score": max_score}
+    if total is not None:
+        env["total"] = total
+    out: dict[str, Any] = {"hits": env}
+    if aggregations is not None:
+        out["aggregations"] = aggregations
+    if suggest is not None:
+        out["suggest"] = suggest
+    return out
+
+
+def _page_projection(frame: DataFrame, columns: list[str]) -> DataFrame:
+    """``frame`` narrowed to the columns its page's hits need, BEFORE
+    the collect — ``_source`` filtering becomes real scan pruning. A
+    page that needs no column projects a constant."""
+    cols = list(dict.fromkeys(columns))
+    return (frame.select(*cols) if cols
+            else frame.select(F.lit(1).alias("__1")))
+
+
+def _fetch_size(from_: int, k: int, rescore) -> int:
+    """Rows a ranked or sorted page collects: ``from+size``, or the
+    rescore window when that is larger; 0 for a total-only (size 0)
+    request."""
+    window = (int(rescore.get("window_size", 10)) if rescore is not None
+              else 0)
+    return max(window, from_ + k) if k else 0
+
+
+def _ordered_page(page: DataFrame, order: list, n: int, tracked: bool,
+                  collapse_key=None) -> tuple[list, int | None]:
+    """The first ``n`` rows of ``page`` under ``order`` and, when
+    ``tracked``, the exact total. ONE job: TakeOrdered consumes every
+    matched row, so an Observation on its input yields the total for
+    free (counted before ``collapse_key`` groups the rows — ES totals
+    count matches, not groups — through the WindowGroupLimit shape of
+    :func:`.plans.search.collapse_hits`). ``n == 0`` is a total-only
+    request and runs a count instead: limit(0) lets OptimizeLimitZero
+    prune the observation out of the plan."""
+    if n == 0:
+        return [], (page.count() if tracked else None)
+    obs = None
+    if tracked:
+        obs = Observation()
+        page = page.observe(obs, F.count(F.lit(1)).alias("n"))
+    if collapse_key is not None:
+        page = collapse_hits(page, collapse_key, order)
+    rows = page.orderBy(*order).limit(n).collect()
+    return rows, (obs.get["n"] if obs is not None else None)
+
+
+#: rescore ``score_mode`` → combine(original, rescore) of weighted scores
+_RESCORE_MODES = {
+    "total": lambda o, r: o + r,
+    "multiply": lambda o, r: o * r,
+    "avg": lambda o, r: (o + r) / 2.0,
+    "max": max,
+    "min": min,
+}
+
+
+def _rescore_window(rows: list, rescore) -> list[tuple[float, Any]]:
+    """(final score, row) pairs in page order. Without ``rescore`` each
+    row keeps its ``_score``. With it, the first ``window_size`` rows
+    re-rank by the combined score — combined only for docs the rescore
+    query MATCHES (an in-plan membership flag: a matched doc may score
+    0.0 under boost 0 and ES still combines it), the others keeping
+    ``query_weight`` × original — stable on the original rank for
+    equal scores; rows past the window follow with their original
+    score. The re-sort touches the collected window only."""
+    if rescore is None:
+        return [(r["_score"], r) for r in rows]
+    window = int(rescore.get("window_size", 10))
+    rspec = rescore.get("query") or {}
+    qw = float(rspec.get("query_weight", 1.0))
+    rqw = float(rspec.get("rescore_query_weight", 1.0))
+    combine = _RESCORE_MODES[rspec.get("score_mode", "total")]
+    head = sorted(
+        (((combine(qw * r["_score"], rqw * r["_rescore"])
+           if r["_rescore_matched"] else qw * r["_score"]), i, r)
+         for i, r in enumerate(rows[:window])),
+        key=lambda t: (-t[0], t[1]))
+    return ([(s, r) for s, _, r in head]
+            + [(r["_score"], r) for r in rows[window:]])
+
+
+def _rescore_columns(rescore, df: DataFrame) -> list:
+    """The rescore query's secondary score and match flag as in-plan
+    Columns of one table (``_rescore``, ``_rescore_matched``) — they
+    ride the page's scan; none without ``rescore``."""
+    if rescore is None:
+        return []
+    return [_rescore_expr(rescore, df).alias("_rescore"),
+            _rescore_match_expr(rescore, df).alias("_rescore_matched")]
+
+
+def _collapse_field(collapse) -> str | None:
+    """The ``collapse`` option's field (None without collapse);
+    malformed options are named 400s."""
+    if collapse is None:
+        return None
+    if not (isinstance(collapse, dict)
+            and isinstance(collapse.get("field"), str)):
+        raise DslError('collapse requires a "field" string')
+    unknown = sorted(set(collapse) - {"field", "inner_hits"})
+    if unknown:
+        raise DslError(f"unsupported collapse options: {unknown}")
+    return collapse["field"]
+
+
+def _recollapse(hits: list[dict], field: str) -> list[dict]:
+    """One hit per collapse key across tables. Each table collapses on
+    its own, so an index-pattern request can hold one hit PER TABLE
+    for a shared key; ``hits`` are in request order, so the first seen
+    is the global best (ES guarantees one hit per key globally)."""
+    seen: set = set()
+    out = []
+    for h in hits:
+        v = h.get("fields", {}).get(field, [None])[0]
+        key = ("\0null",) if v is None else v
+        if key not in seen:
+            seen.add(key)
+            out.append(h)
+    return out
+
+
+def _index_boosts(indices_boost) -> list[tuple[str, float]]:
+    """ES ``indices_boost``: (index pattern, score factor) pairs from
+    the list of one-key objects (the legacy dict form accepted too).
+    The first matching pattern wins, like ES."""
+    if indices_boost is None:
+        return []
+    entries = (list(indices_boost.items())
+               if isinstance(indices_boost, dict) else [
+                   next(iter(e.items()))
+                   for e in indices_boost
+                   if isinstance(e, dict) and len(e) == 1])
+    if not entries or (isinstance(indices_boost, list) and any(
+            not (isinstance(e, dict) and len(e) == 1)
+            for e in indices_boost)):
+        raise DslError(
+            "indices_boost must be a non-empty list of "
+            "single-entry {index: factor} objects")
+    out = []
+    for pat, factor in entries:
+        if isinstance(factor, bool) or not isinstance(
+                factor, (int, float)) or factor < 0:
+            raise DslError(
+                f"indices_boost factor for {pat!r} must be a "
+                "non-negative number")
+        out.append((str(pat), float(factor)))
+    return out
+
+
+def _score_columns(dsl: dict, df: DataFrame, resolve):
+    """(membership predicate, score Column, the query's own min_score
+    or None) of a top-level scoring query over one table: the
+    :mod:`.plans.score_dsl` compilers for the scoring kinds,
+    ``compile_dsl`` + ``compile_score`` for text-relevance queries."""
+    from pyspark.sql.types import DateType, TimestampNTZType, TimestampType
+
+    from sql_database_to_elastic_datalake_spark.plans.es_dsl import (
+        compile_score,
+    )
+    from sql_database_to_elastic_datalake_spark.plans.score_dsl import (
+        distance_feature_columns,
+        function_score_columns,
+        rank_feature_columns,
+        script_score_columns,
+    )
+
+    kind, body = next(iter(dsl.items()))
+    date_fields = {
+        f.name for f in df.schema.fields
+        if isinstance(f.dataType, (DateType, TimestampType,
+                                   TimestampNTZType))
+    }
+    if kind == "function_score":
+        return function_score_columns(body, resolve, df.columns,
+                                      date_fields)
+    if kind == "rank_feature":
+        return rank_feature_columns(body, resolve)
+    if kind == "distance_feature":
+        return distance_feature_columns(body, resolve, date_fields,
+                                        schema_fields=df.schema)
+    if kind == "script_score":
+        return script_score_columns(body, resolve, df.columns)
+    return (compile_dsl(dsl, field_resolver=resolve,
+                        schema_fields=df.schema),
+            compile_score(dsl, field_resolver=resolve,
+                          schema_fields=df.schema),
+            None)
+
+
+def _boosted_columns(fields: list[str], columns: list[str]) -> list[str]:
+    """``/search`` field names and wildcard patterns → this table's
+    columns, each re-carrying its pattern's ``^boost`` (the ES
+    ``title^2`` idiom); the first pattern naming a column sets its
+    weight."""
+    from sql_database_to_elastic_datalake_spark.plans.es_dsl import (
+        split_field_boost,
+    )
+
+    seen: dict[str, float] = {}
+    for f in fields:
+        name, w = split_field_boost(f, "search field")
+        for c in _expand_patterns([name], columns):
+            seen.setdefault(c, w)
+    return [c if w == 1.0 else f"{c}^{w}" for c, w in seen.items()]
+
+
+class _HitShape:
+    """What each hit of one table carries: the ``_source`` columns,
+    the ``fields`` retrieval entries ((column, format) pairs), the
+    highlight specs with the query's terms per column and the tags,
+    and the collapse key (returned under ``fields`` whether or not
+    ``_source`` keeps it; a field the table lacks is a null key)."""
+
+    def __init__(self, source: list[str], fields: list = (),
+                 highlight: list = (), terms: dict | None = None,
+                 tags: tuple[str, str] = ("", ""),
+                 collapse: str | None = None,
+                 collapse_mapped: bool = False):
+        self.source = list(source)
+        self.fields = list(fields)
+        self.highlight = list(highlight)
+        self.terms = terms or {}
+        self.tags = tags
+        self.collapse = collapse
+        self.collapse_mapped = collapse_mapped
+
+    @classmethod
+    def of(cls, columns: list[str], source, fields_opt,
+           highlight: dict | None = None, dsl=None,
+           collapse: str | None = None,
+           source_columns: list[str] | None = None) -> "_HitShape":
+        """The shape for a table with ``columns``; ``_source`` draws
+        from ``source_columns`` when given (the table's own columns,
+        so runtime fields surface only through ``fields``)."""
+        return cls(
+            resolve_source_columns(
+                columns if source_columns is None else source_columns,
+                source),
+            _resolve_fields_option(fields_opt, columns),
+            _highlight_plan(highlight, columns) if highlight else [],
+            collect_highlight_terms(dsl, columns) if highlight else {},
+            _highlight_tags(highlight),
+            collapse, collapse in columns)
+
+    def columns(self) -> list[str]:
+        """The columns a page must project to build these hits."""
+        return (self.source + [c for c, _ in self.fields]
+                + [f for f, *_ in self.highlight]
+                + ([self.collapse] if self.collapse_mapped else []))
+
+    def hit(self, name: str, row, sort_getters: list | None = None) -> dict:
+        """One response hit: filtered _source, optional sort values,
+        optional ``fields`` arrays, optional highlight snippets
+        (driver-side, returned rows only)."""
+        hit: dict[str, Any] = {
+            "_index": name,
+            "_source": {c: row[c] for c in self.source},
+        }
+        if sort_getters is not None:
+            hit["sort"] = [g(row) for g in sort_getters]
+        # ES always wraps fields values in arrays and omits nulls
+        fv = {c: [_render_field_value(row[c], fmt)]
+              for c, fmt in self.fields if row[c] is not None}
+        if fv:
+            hit["fields"] = fv
+        if self.highlight:
+            pre, post = self.tags
+            hl = {}
+            for f, fs, nof, bc, scan, sc, order in self.highlight:
+                snips = highlight_snippets(
+                    row[f], self.terms.get(f, []), pre, post, fs, nof,
+                    boundary_chars=bc, boundary_max_scan=scan,
+                    boundary_scanner=sc, order=order)
+                if snips:
+                    hl[f] = snips
+            if hl:
+                hit["highlight"] = hl
+        if self.collapse is not None:
+            hit.setdefault("fields", {})[self.collapse] = [
+                row[self.collapse] if self.collapse_mapped else None]
+        return hit
+
+
 def _validate_rescore_options(rescore) -> None:
-    """Named 400s for malformed rescore scalar options (r13 ADVICE:
-    a non-numeric window_size/weight raised ValueError deep in the
-    combine, i.e. a 500, instead of the repo's named-400 posture)."""
+    """Named 400s for malformed rescore scalar options (window_size,
+    weights, score_mode) — checked before any job runs, never a
+    ValueError deep in the combine."""
     if rescore is None:
         return
     if not isinstance(rescore, dict):
@@ -3074,6 +2826,9 @@ def _validate_rescore_options(rescore) -> None:
             if isinstance(wv, bool) or not isinstance(
                     wv, (int, float)):
                 raise DslError(f"rescore {wkey} must be a number")
+        mode = rspec.get("score_mode", "total")
+        if mode not in _RESCORE_MODES:
+            raise DslError(f"unknown rescore score_mode {mode!r}")
 
 
 def _rescore_expr(rescore: dict | None, df: "DataFrame"):
@@ -3112,15 +2867,10 @@ def _rescore_expr(rescore: dict | None, df: "DataFrame"):
         compile_score,
     )
 
-    def resolve(f: str):
-        # a field this table lacks contributes nothing (ES's
-        # missing-field behavior), instead of failing analysis
-        return (F.col(f) if f in df.columns
-                else F.lit(None).cast("string"))
-
-    # r12: boosts (leaf + per-field ^suffix) are honored — the score
-    # compiler shares the leaf semantics with the ranked pages
-    return compile_score(rq, field_resolver=resolve,
+    # a field this table lacks contributes nothing (ES's
+    # missing-field behavior); boosts (leaf + per-field ^suffix) are
+    # honored — the score compiler shares the ranked pages' leaves
+    return compile_score(rq, field_resolver=field_resolver(df),
                          schema_fields=df.schema).cast("double")
 
 
@@ -3131,9 +2881,9 @@ def _rescore_match_expr(rescore: dict | None, df: "DataFrame"):
     from score truthiness: a matched doc can legitimately score 0.0
     (``boost: 0``, a zero-weighted constant leaf) and ES still
     combines it — under multiply/min the combined score is 0 where
-    the truthiness proxy kept ``query_weight * original`` (r12
-    ADVICE). Shape errors are left to :func:`_rescore_expr`, which
-    runs first on the same spec and raises the named 400s."""
+    the truthiness proxy kept ``query_weight * original``. Shape
+    errors are left to :func:`_rescore_expr`, which runs first on the
+    same spec and raises the named 400s."""
     if rescore is None or not isinstance(rescore, dict):
         return F.lit(False)
     rspec = rescore.get("query")
@@ -3147,12 +2897,8 @@ def _rescore_match_expr(rescore: dict | None, df: "DataFrame"):
             isinstance(body, dict) and body.get("fields")):
         return F.lit(False)  # no requested field → nothing matches
 
-    def resolve(f: str):
-        return (F.col(f) if f in df.columns
-                else F.lit(None).cast("string"))
-
     return F.coalesce(
-        compile_dsl(rq, field_resolver=resolve,
+        compile_dsl(rq, field_resolver=field_resolver(df),
                     schema_fields=df.schema),
         F.lit(False))
 
@@ -3172,18 +2918,12 @@ def _hit_id(hit: dict) -> str | None:
     rule): the ``id`` column if the table has one, else the first
     ``*_id`` column."""
     src = hit.get("_source") or {}
-    if "id" in src:
-        return None if src["id"] is None else str(src["id"])
-    for c in src:
-        if c.endswith("_id"):
-            return None if src[c] is None else str(src[c])
-    return None
+    c = _doc_id_column(list(src))
+    return None if c is None or src[c] is None else str(src[c])
 
 
 def _rank_eval_score(mname: str, mspec: dict, ranked: list[str | None],
                      rmap: dict[str, int]) -> float:
-    import math
-
     thr = int(mspec.get("relevant_rating_threshold", 1))
     if mname == "precision":
         rels = [rmap.get(i) for i in ranked]
@@ -3230,8 +2970,6 @@ def _rank_eval_score(mname: str, mspec: dict, ranked: list[str | None],
 def _run_rank_eval(service: "LakeService", body) -> dict[str, Any]:
     """ES ``_rank_eval`` semantics over the engine's ranked pages —
     validation, per-request evaluation, mean score."""
-    from sql_database_to_elastic_datalake_spark.plans.es_dsl import DslError
-
     if not isinstance(body, dict):
         raise DslError("rank_eval body must be a JSON object")
     unknown = sorted(set(body) - {"requests", "metric", "table"})
@@ -3331,8 +3069,6 @@ def _run_rank_eval(service: "LakeService", body) -> dict[str, Any]:
 def _int_opt(container: dict, key: str, default: int) -> int:
     """An integer option or a named 400 — a malformed size/max_edits
     must never surface as an unhandled ValueError (a 500)."""
-    from sql_database_to_elastic_datalake_spark.plans.es_dsl import DslError
-
     v = container.get(key, default)
     if isinstance(v, bool) or not isinstance(v, (int, str)):
         raise DslError(f"{key} must be an integer")
@@ -3344,16 +3080,15 @@ def _int_opt(container: dict, key: str, default: int) -> int:
 
 def _run_suggest(df: "DataFrame", suggest: dict) -> dict[str, Any]:
     """Execute an ES ``suggest`` section — the term suggester
-    (per-token corrections), the phrase suggester (r9, whole-phrase
+    (per-token corrections), the phrase suggester (whole-phrase
     corrections via :func:`plans.search.suggest_phrase`), and the
-    completion suggester in prefix, fuzzy (r10) and regex (r11)
+    completion suggester in prefix, fuzzy and regex
     modes over the value dictionary (the FST-weight divergence is
     documented at the operator). One distributed job per suggester;
     the envelope mirrors ES: per-token entries for ``term``, one
     whole-text entry for ``phrase``, each with offset/length and
     scored options."""
     from sql_database_to_elastic_datalake_spark.plans.es_dsl import (
-        DslError,
         token_spans,
     )
     from sql_database_to_elastic_datalake_spark.plans.search import (
@@ -3403,7 +3138,7 @@ def _run_suggest(df: "DataFrame", suggest: dict) -> dict[str, Any]:
 
             options = []
             if regex is not None:
-                # r11: regex mode — whole-value Lucene-regexp match
+                # regex mode — whole-value Lucene-regexp match
                 # over the value dictionary (the automaton-specific
                 # operators stay named 400s in the translator). The
                 # regex OPTIONS object under completion.regex
@@ -3518,7 +3253,7 @@ def _run_suggest(df: "DataFrame", suggest: dict) -> dict[str, Any]:
         # change lengths, so lowered text is never scanned) AND the
         # token list the Spark job scores, so an entry exists for every
         # token the job can return candidates for, by construction
-        # (r8 ADVICE: deriving them from two patterns let them desync).
+        # (deriving them from two patterns would let them desync).
         spans = token_spans(text)
         rows = []
         if field in df.columns and spans:
@@ -3552,10 +3287,6 @@ def _resolve_fields_option(fields_opt, columns: list[str]) -> list:
     Entries are names or ``{"field": …, "format": …}`` objects;
     wildcard patterns expand against the table schema; a pattern
     matching nothing contributes nothing (like ES)."""
-    import fnmatch as _fn
-
-    from sql_database_to_elastic_datalake_spark.plans.es_dsl import DslError
-
     if fields_opt is None:
         return []
     if not isinstance(fields_opt, list):
@@ -3575,7 +3306,7 @@ def _resolve_fields_option(fields_opt, columns: list[str]) -> list:
             raise DslError(f"malformed fields entry {e!r}")
         if "*" in name or "?" in name:
             out.extend((c, fmt) for c in columns
-                       if _fn.fnmatchcase(c, name))
+                       if fnmatch.fnmatchcase(c, name))
         elif name in columns:
             out.append((name, fmt))
     seen = set()
@@ -3607,47 +3338,6 @@ def _render_field_value(v, fmt):
     return v
 
 
-def _hit(
-    name: str, row, src_cols: list[str], hl_fields: list[str],
-    hl_terms: dict[str, list[str]], pre: str, post: str,
-    sort_getters: list | None = None,
-    fields_out: list | None = None,
-) -> dict:
-    """One response hit: filtered _source, optional sort values,
-    optional ``fields`` arrays, optional highlight snippets
-    (driver-side, returned rows only)."""
-    hit: dict[str, Any] = {
-        "_index": name,
-        "_source": {c: row[c] for c in src_cols},
-    }
-    if sort_getters is not None:
-        hit["sort"] = [g(row) for g in sort_getters]
-    if fields_out:
-        # ES always wraps fields values in arrays and omits nulls
-        fv = {
-            c: [_render_field_value(row[c], fmt)]
-            for c, fmt in fields_out if row[c] is not None
-        }
-        if fv:
-            hit["fields"] = fv
-    if hl_fields:
-        from sql_database_to_elastic_datalake_spark.plans.search import (
-            highlight_snippets,
-        )
-
-        hl = {}
-        for f, fs, nof, bc, scan, sc, order in hl_fields:
-            snips = highlight_snippets(
-                row[f], hl_terms.get(f, []), pre, post, fs, nof,
-                boundary_chars=bc, boundary_max_scan=scan,
-                boundary_scanner=sc, order=order)
-            if snips:
-                hl[f] = snips
-        if hl:
-            hit["highlight"] = hl
-    return hit
-
-
 #: ES unmapped_type → the Spark cast for the null sort placeholder
 _UNMAPPED_TYPES = {
     "keyword": "string", "text": "string", "long": "bigint",
@@ -3667,7 +3357,7 @@ _SORT_MODES = ("min", "max", "avg", "sum")
 
 def _rewrite_geo_sort(df: "DataFrame", sort: list,
                       columns: list[str]) -> tuple["DataFrame", list]:
-    """ES ``_geo_distance`` sort clauses (r13) → a materialized
+    """ES ``_geo_distance`` sort clauses → a materialized
     haversine Column on ``df`` plus a plain field clause, so the
     ordinary sort machinery (projection, TakeOrdered, hit ``sort``
     values, per-table merge) handles it unchanged. The hit's sort
@@ -3738,7 +3428,7 @@ def _parse_sort(
 
     Accepts the string form (``"field"``), the object form
     (``{"field": {"order": "desc"}}``) and the shorthand
-    (``{"field": "desc"}``), plus the r7 option set:
+    (``{"field": "desc"}``), plus the option set:
 
     * ``missing``: ``"_first"`` / ``"_last"`` place null values; any
       other literal substitutes as the sort value (ES's custom-missing
@@ -3752,8 +3442,6 @@ def _parse_sort(
 
     Unknown fields without unmapped_type are the client's error."""
     from pyspark.sql.types import ArrayType
-
-    from sql_database_to_elastic_datalake_spark.plans.es_dsl import DslError
 
     fields: list[str] = []
     order_cols = []
@@ -3898,6 +3586,37 @@ def _sort_has_options(sort: list) -> bool:
     )
 
 
+def _cursor_sort(df: DataFrame, sort: list | None, what: str) -> list:
+    """A request sort totalized for cursor paging (scroll, PIT): the
+    caller's clauses minus ``_doc``/``_shard_doc`` (whose arbitrary
+    order a deterministic engine replaces), extended with the table's
+    atomic orderable tie-break columns
+    (:func:`.operators.similarity.tiebreak_columns`) — ES's implicit
+    ``_shard_doc`` tiebreak — so consecutive ``search_after`` pages can
+    never overlap or gap."""
+    from pyspark.sql.types import ArrayType, BinaryType, StructType
+
+    from sql_database_to_elastic_datalake_spark.operators.similarity import (
+        tiebreak_columns,
+    )
+
+    clauses: list = []
+    seen: set[str] = set()
+    for s in sort or []:
+        f = s if isinstance(s, str) else next(iter(s))
+        if f in ("_doc", "_shard_doc"):
+            continue  # arbitrary order → the tie-break below
+        clauses.append({f: s[f]} if isinstance(s, dict) else {s: "asc"})
+        seen.add(f)
+    clauses.extend(
+        {c: "asc"} for c in tiebreak_columns(df)
+        if c not in seen and not isinstance(
+            df.schema[c].dataType, (ArrayType, StructType, BinaryType)))
+    if not clauses:
+        raise DslError(f"{what} needs at least one sortable column")
+    return clauses
+
+
 def _merge_sorted_hits(hits: list[dict], descs: list) -> list[dict]:
     """Driver-side merge of per-table sorted pages into one global
     order (each page is at most k rows — the heavy sorting happened
@@ -3977,8 +3696,6 @@ def _search_after_pred(sort: list, fields: list[str], after: list,
     malformed cursor into row loss)."""
     from pyspark.sql.types import DateType, TimestampNTZType, TimestampType
 
-    from sql_database_to_elastic_datalake_spark.plans.es_dsl import DslError
-
     if not isinstance(after, list) or len(after) != len(fields):
         raise DslError(
             f"search_after must carry {len(fields)} values "
@@ -4053,6 +3770,16 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
 
     app = Flask("sql_database_to_elastic_datalake_spark")
     app.json = _IsoJSONProvider(app)
+
+    # a malformed/unsupported request is the CALLER's error (ES's 400,
+    # not a 500); a missing table or document ES's 404
+    @app.errorhandler(DslError)
+    def _bad_request(ex):
+        return jsonify({"error": str(ex)}), 400
+
+    @app.errorhandler(NotFoundError)
+    def _not_found(ex):
+        return jsonify({"error": str(ex)}), 404
 
     def _etype(segment):
         return ROUTE_ENTITY.get(segment, segment.rstrip("s"))
@@ -4143,14 +3870,25 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
         "indices_boost", "rescore", "min_score",
     }
 
-    def _page_size(body):
+    def _page_size(body) -> int:
         # "k" or ES's "size" select the page; ES's default of 10
         # applies; a malformed value is the client's error, not a 500
         try:
             k = int(body.get("k", body.get("size", 10)))
         except (TypeError, ValueError):
-            return None
-        return k if k >= 0 else None
+            k = -1
+        if k < 0:
+            raise DslError("k/size must be a non-negative integer")
+        return k
+
+    def _page_from(body) -> int:
+        try:
+            from_ = int(body.get("from", 0))
+        except (TypeError, ValueError):
+            from_ = -1
+        if from_ < 0:
+            raise DslError("from must be a non-negative integer")
+        return from_
 
     def _wire_envelope(out: dict) -> dict:
         """Reference-parity response keys on top of the engine's ES
@@ -4176,8 +3914,6 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
     def search():
         body = request.get_json(force=True)
         k = _page_size(body)
-        if k is None:
-            return jsonify({"error": "k/size must be a non-negative integer"}), 400
         # the reference's request key is search_term (+fields,
         # src/search_api.py:19-21); "query" stays accepted as the
         # engine's original spelling
@@ -4186,28 +3922,19 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
             return jsonify(
                 {"error": "missing query/search_term"}), 400
         # ES's offset idiom works WITHOUT a sort here: the ranked
-        # path's _score order is total (r7 — it used to be rejected)
-        try:
-            from_ = int(body.get("from", 0))
-            if from_ < 0:
-                raise ValueError
-        except (TypeError, ValueError):
-            return jsonify(
-                {"error": "from must be a non-negative integer"}), 400
+        # path's _score order is total
+        from_ = _page_from(body)
         ms = body.get("min_score")
         if ms is not None and not isinstance(ms, (int, float)) \
                 or isinstance(ms, bool):
             return jsonify(
                 {"error": "min_score must be a number"}), 400
-        try:
-            return jsonify(_wire_envelope(
-                service.search(term, body.get("tables"), k=k,
-                               fields=body.get("fields"), from_=from_,
-                               min_score=ms,
-                               rescore=body.get("rescore")),
-            )), 200
-        except DslError as ex:
-            return jsonify({"error": str(ex)}), 400
+        return jsonify(_wire_envelope(
+            service.search(term, body.get("tables"), k=k,
+                           fields=body.get("fields"), from_=from_,
+                           min_score=ms,
+                           rescore=body.get("rescore")),
+        )), 200
 
     @app.route("/search/advanced", methods=["POST"])
     def advanced():
@@ -4215,27 +3942,19 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
 
     def _advanced_body(body):
         """The /search/advanced body pipeline — shared verbatim by the
-        template route (r11): a rendered template IS an advanced body."""
-        from sql_database_to_elastic_datalake_spark.plans.es_dsl import DslError
-
+        template and async routes: a rendered template IS an advanced
+        body."""
         k = _page_size(body)
-        if k is None:
-            return jsonify({"error": "k/size must be a non-negative integer"}), 400
         # the reference forwards this body VERBATIM to ES, so every
         # top-level key a saved query carries has live semantics
         # there. A key this engine does not implement must 400, not
-        # vanish: silently ignoring `from` returned page 1 forever
-        # (r5 verdict #1) — silent wrong results are worse than an
-        # error.
+        # vanish — silent wrong results are worse than an error.
         unknown = sorted(set(body) - _ADVANCED_BODY_KEYS)
         if unknown:
-            return jsonify({"error":
-                            f"unsupported request keys: {unknown} "
-                            f"(supported: {sorted(_ADVANCED_BODY_KEYS)})"}), 400
-        try:
-            from_ = int(body.get("from", 0))
-        except (TypeError, ValueError):
-            return jsonify({"error": "from must be a non-negative integer"}), 400
+            raise DslError(f"unsupported request keys: {unknown} "
+                           f"(supported: {sorted(_ADVANCED_BODY_KEYS)})")
+        from_ = _page_from(body)
+        aggs = body.get("aggs") or body.get("aggregations")
         if body.get("scroll") is not None:
             # scroll TTL accepted-and-ignored: the returned _scroll_id
             # is a stateless continuation token (scroll_search docs)
@@ -4248,120 +3967,72 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
                         # one (the reject-instead-of-drop policy)
                         "pit"):
                 if body.get(bad):
-                    return jsonify({"error":
-                                    f"scroll is not supported with "
-                                    f"{bad} (the token manages the "
-                                    "cursor)"}), 400
-            try:
-                return jsonify(_wire_envelope(service.scroll_search(
-                    table=body.get("table"),
-                    dsl=body.get("query", {"match_all": {}}),
-                    size=k, sort=body.get("sort"),
-                    source=body.get("_source"),
-                    aggs=body.get("aggs") or body.get("aggregations"),
-                ))), 200
-            except DslError as ex:
-                return jsonify({"error": str(ex)}), 400
-        if body.get("pit") is not None:
+                    raise DslError(f"scroll is not supported with {bad} "
+                                   "(the token manages the cursor)")
+            return jsonify(_wire_envelope(service.scroll_search(
+                table=body.get("table"),
+                dsl=body.get("query", {"match_all": {}}),
+                size=k, sort=body.get("sort"),
+                source=body.get("_source"), aggs=aggs,
+            ))), 200
+        # the reference always queries the index pattern
+        # (src/search_api.py:40-44); an explicit table (or narrower
+        # pattern) is the engine's extension
+        table = body.get("table", INDEX_PREFIX + "*")
+        sort, pit = body.get("sort"), body.get("pit")
+        if pit is not None:
             # ES 8.x PIT + search_after: the pit carries the index (no
             # index in the path → no "table" key), the caller manages
             # the search_after cursor from each page's last hit. The
             # sort is totalized with the table's tie-break columns
             # (ES's implicit _shard_doc equivalent).
             if body.get("table"):
-                return jsonify({"error":
-                                "pit is not supported with table "
-                                "(the pit id carries the table, like "
-                                "ES's no-index-in-path rule)"}), 400
+                raise DslError("pit is not supported with table (the pit "
+                               "id carries the table, like ES's "
+                               "no-index-in-path rule)")
             for bad in ("from", "collapse", "knn"):
                 if body.get(bad):
-                    return jsonify({"error":
-                                    f"pit is not supported with "
-                                    f"{bad} (use search_after "
-                                    "paging)"}), 400
-            try:
-                table = service.resolve_pit(body["pit"])
-                out = service.advanced_search(
-                    table, body.get("query", {"match_all": {}}), k=k,
-                    aggs=body.get("aggs") or body.get("aggregations"),
-                    sort=service.pit_total_sort(
-                        table, body.get("sort")),
-                    search_after=body.get("search_after"),
-                    source=body.get("_source"),
-                    highlight=body.get("highlight"),
-                    post_filter=body.get("post_filter"),
-                    track_total_hits=body.get("track_total_hits"),
-                    fields_opt=(
-                        ((body.get("fields") or [])
-                         + (body.get("docvalue_fields") or []))
-                        or None),
-                    suggest=body.get("suggest"),
-                    runtime_mappings=body.get("runtime_mappings"),
-                    script_fields=body.get("script_fields"),
-                )
-                # ES returns the (possibly refreshed) pit_id on every
-                # page; stateless tokens never change
-                pid = body["pit"]
-                out["pit_id"] = (pid.get("id")
-                                 if isinstance(pid, dict) else pid)
-                return jsonify(_wire_envelope(out)), 200
-            except NotFoundError as ex:
-                return jsonify({"error": str(ex)}), 404
-            except DslError as ex:
-                return jsonify({"error": str(ex)}), 400
-        try:
-            return jsonify(_wire_envelope(
-                service.advanced_search(
-                    # the reference always queries the index pattern
-                    # (src/search_api.py:40-44); an explicit table (or
-                    # narrower pattern) is the engine's extension
-                    body.get("table", INDEX_PREFIX + "*"),
-                    # ES defaults an omitted query to match_all —
-                    # aggs-only bodies are a standard Kibana shape
-                    body.get("query", {"match_all": {}}), k=k,
-                    aggs=body.get("aggs") or body.get("aggregations"),
-                    sort=body.get("sort"),
-                    search_after=body.get("search_after"),
-                    from_=from_,
-                    source=body.get("_source"),
-                    highlight=body.get("highlight"),
-                    post_filter=body.get("post_filter"),
-                    collapse=body.get("collapse"),
-                    track_total_hits=body.get("track_total_hits"),
-                    # docvalue_fields is the pre-8.x spelling of the
-                    # fields option — same {field, format} entries,
-                    # same hit["fields"] arrays (what older Kibana
-                    # sends by default); both merge into one list
-                    fields_opt=(
-                        ((body.get("fields") or [])
-                         + (body.get("docvalue_fields") or []))
-                        or None),
-                    suggest=body.get("suggest"),
-                    knn=body.get("knn"),
-                    runtime_mappings=body.get("runtime_mappings"),
-                    script_fields=body.get("script_fields"),
-                    indices_boost=body.get("indices_boost"),
-                    rescore=body.get("rescore"),
-                    min_score=body.get("min_score"),
-                )
-            )), 200
-        except NotFoundError as ex:
-            # r13 late: index-based percolation references a concrete
-            # table/doc — a dangling reference is ES's 404
-            return jsonify({"error": str(ex)}), 404
-        except DslError as ex:
-            # a malformed/unsupported DSL tree is the CALLER's error —
-            # the reference returns ES's 400 for these, not a 500
-            return jsonify({"error": str(ex)}), 400
+                    raise DslError(f"pit is not supported with {bad} "
+                                   "(use search_after paging)")
+            table = service.resolve_pit(pit)
+            sort = service.pit_total_sort(table, sort)
+        out = service.advanced_search(
+            table,
+            # ES defaults an omitted query to match_all — aggs-only
+            # bodies are a standard Kibana shape
+            body.get("query", {"match_all": {}}), k=k, aggs=aggs,
+            sort=sort,
+            search_after=body.get("search_after"),
+            from_=from_,
+            source=body.get("_source"),
+            highlight=body.get("highlight"),
+            post_filter=body.get("post_filter"),
+            collapse=body.get("collapse"),
+            track_total_hits=body.get("track_total_hits"),
+            # docvalue_fields is the pre-8.x spelling of the fields
+            # option — same {field, format} entries, same hit["fields"]
+            # arrays (what older Kibana sends by default); both merge
+            # into one list
+            fields_opt=(((body.get("fields") or [])
+                         + (body.get("docvalue_fields") or [])) or None),
+            suggest=body.get("suggest"),
+            knn=body.get("knn"),
+            runtime_mappings=body.get("runtime_mappings"),
+            script_fields=body.get("script_fields"),
+            indices_boost=body.get("indices_boost"),
+            rescore=body.get("rescore"),
+            min_score=body.get("min_score"),
+        )
+        if pit is not None:
+            # ES returns the (possibly refreshed) pit_id on every
+            # page; stateless tokens never change
+            out["pit_id"] = pit.get("id") if isinstance(pit, dict) else pit
+        return jsonify(_wire_envelope(out)), 200
 
     def _resolve_template(body):
         """(source, params) from a template request body — exactly one
         of inline ``source`` / stored ``id``; unknown keys are named
         400s (the reject-instead-of-drop policy)."""
-        from sql_database_to_elastic_datalake_spark.plans.es_dsl import (
-            DslError,
-        )
-
         if not isinstance(body, dict):
             raise DslError("template request must be a JSON object")
         unknown = sorted(set(body) - {"source", "id", "params", "table"})
@@ -4387,7 +4058,7 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
 
     @app.route("/search/template", methods=["POST"])
     def search_template():
-        """ES ``_search/template`` (r11, verdict #5): render the
+        """ES ``_search/template``: render the
         mustache template, then run the result through the ordinary
         advanced-search pipeline — the rendered body obeys every
         advanced-body rule (unknown keys 400, cursor rules, …)."""
@@ -4396,14 +4067,9 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
         )
 
         body = request.get_json(force=True)
-        try:
-            source, params = _resolve_template(body)
-            rendered = render_search_template(
-                source, params, partials=service.stored_templates)
-        except NotFoundError as ex:
-            return jsonify({"error": str(ex)}), 404
-        except DslError as ex:
-            return jsonify({"error": str(ex)}), 400
+        source, params = _resolve_template(body)
+        rendered = render_search_template(
+            source, params, partials=service.stored_templates)
         # the engine's table extension rides the OUTER request (ES
         # carries the index in the path); the template may also set it
         if body.get("table") is not None and "table" not in rendered:
@@ -4419,14 +4085,9 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
         )
 
         body = request.get_json(force=True)
-        try:
-            source, params = _resolve_template(body)
-            rendered = render_search_template(
-                source, params, partials=service.stored_templates)
-        except NotFoundError as ex:
-            return jsonify({"error": str(ex)}), 404
-        except DslError as ex:
-            return jsonify({"error": str(ex)}), 400
+        source, params = _resolve_template(body)
+        rendered = render_search_template(
+            source, params, partials=service.stored_templates)
         return jsonify({"template_output": rendered}), 200
 
     @app.route("/scripts/<sid>", methods=["PUT", "POST"])
@@ -4435,11 +4096,8 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
             validate_stored_script,
         )
 
-        try:
-            service.stored_templates[sid] = validate_stored_script(
-                request.get_json(force=True))
-        except DslError as ex:
-            return jsonify({"error": str(ex)}), 400
+        service.stored_templates[sid] = validate_stored_script(
+            request.get_json(force=True))
         return jsonify({"acknowledged": True}), 200
 
     @app.route("/scripts/<sid>", methods=["GET"])
@@ -4458,7 +4116,7 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
 
     @app.route("/percolator/<pid>", methods=["PUT", "POST"])
     def put_percolator(pid):
-        """Store a percolator query (r13): the ES idiom of indexing a
+        """Store a percolator query: the ES idiom of indexing a
         doc with a percolator-typed ``query`` field, re-expressed as a
         service-local namespace. The tree is validated through the
         compiler AT STORE TIME (schema-free: unknown kinds/options 400
@@ -4474,13 +4132,11 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
                         field_resolver=lambda f:
                         F.lit(None).cast("string"))
         except GeoResolutionError:
-            # r14 (ADVICE): geo leaves are TOLERATED at store time —
-            # whether the field resolves to a geo_point is a property
-            # of the table percolated against, unknown here; match
-            # time still raises the named 400 on a non-geo target
+            # geo leaves are TOLERATED at store time — whether the
+            # field resolves to a geo_point is a property of the table
+            # percolated against, unknown here; match time still raises
+            # the named 400 on a non-geo target
             pass
-        except DslError as ex:
-            return jsonify({"error": str(ex)}), 400
         service.percolator_queries[pid] = body["query"]
         return jsonify({"acknowledged": True, "_id": pid}), 200
 
@@ -4504,10 +4160,6 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
     def termvectors_route():
         """ES ``_termvectors``: one doc's per-field term vectors with
         optional corpus statistics (service.termvectors docstring)."""
-        from sql_database_to_elastic_datalake_spark.plans.es_dsl import (
-            DslError,
-        )
-
         body = request.get_json(force=True)
         if not isinstance(body, dict):
             return jsonify({"error": "body must be a JSON object"}), 400
@@ -4524,18 +4176,13 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
         if not body.get("table") or body.get("id") is None:
             return jsonify({"error":
                             "termvectors requires table and id"}), 400
-        try:
-            return jsonify(service.termvectors(
-                body["table"], body["id"],
-                fields=body.get("fields"),
-                term_statistics=bool(body.get("term_statistics")),
-                field_statistics=body.get("field_statistics", True)
-                is not False,
-            )), 200
-        except NotFoundError as ex:
-            return jsonify({"error": str(ex)}), 404
-        except DslError as ex:
-            return jsonify({"error": str(ex)}), 400
+        return jsonify(service.termvectors(
+            body["table"], body["id"],
+            fields=body.get("fields"),
+            term_statistics=bool(body.get("term_statistics")),
+            field_statistics=body.get("field_statistics", True)
+            is not False,
+        )), 200
 
     @app.route("/search/mtermvectors", methods=["POST"])
     def mtermvectors_route():
@@ -4543,10 +4190,6 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
         request table, or ``docs`` entries carrying ``_index``/
         ``_id`` (+ per-entry fields/term_statistics). Per-entry
         errors stay inline (the multi-API contract)."""
-        from sql_database_to_elastic_datalake_spark.plans.es_dsl import (
-            DslError,
-        )
-
         body = request.get_json(force=True)
         if not isinstance(body, dict):
             return jsonify({"error": "body must be a JSON object"}), 400
@@ -4601,23 +4244,14 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
 
     @app.route("/search/rank_eval", methods=["POST"])
     def rank_eval_route():
-        """ES ``_rank_eval`` (r11): run each rated request, score the
+        """ES ``_rank_eval``: run each rated request, score the
         ranked page with the chosen metric, return per-request detail
         + the mean — the search-quality tuning endpoint
         (precision/recall@k, MRR, (n)DCG, ERR). Metrics are computed
         driver-side over the page's ids (bounded by k); each request
         is ONE ordinary ranked search."""
-        from sql_database_to_elastic_datalake_spark.plans.es_dsl import (
-            DslError,
-        )
-
         body = request.get_json(force=True)
-        try:
-            out = _run_rank_eval(service, body)
-        except NotFoundError as ex:
-            return jsonify({"error": str(ex)}), 404
-        except DslError as ex:
-            return jsonify({"error": str(ex)}), 400
+        out = _run_rank_eval(service, body)
         return jsonify(out), 200
 
     @app.route("/search/count", methods=["POST"])
@@ -4626,28 +4260,23 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
         One count job per table with the predicate pushed to the
         scan — the same cost ES pays. Runtime fields are honored
         (a Kibana count over a runtime filter works)."""
-        from sql_database_to_elastic_datalake_spark.plans.es_dsl import DslError
-
         body = request.get_json(force=True)
         unknown = sorted(set(body) - {"table", "query",
                                       "runtime_mappings"})
         if unknown:
             return jsonify({"error":
                             f"unsupported count keys: {unknown}"}), 400
-        try:
-            out = service.advanced_search(
-                body.get("table", INDEX_PREFIX + "*"),
-                body.get("query", {"match_all": {}}),
-                k=0, track_total_hits=True,
-                runtime_mappings=body.get("runtime_mappings"))
-            return jsonify({
-                "count": out["hits"]["total"]["value"],
-                # the official client reads _shards for success gating
-                "_shards": {"total": 1, "successful": 1,
-                            "skipped": 0, "failed": 0},
-            }), 200
-        except DslError as ex:
-            return jsonify({"error": str(ex)}), 400
+        out = service.advanced_search(
+            body.get("table", INDEX_PREFIX + "*"),
+            body.get("query", {"match_all": {}}),
+            k=0, track_total_hits=True,
+            runtime_mappings=body.get("runtime_mappings"))
+        return jsonify({
+            "count": out["hits"]["total"]["value"],
+            # the official client reads _shards for success gating
+            "_shards": {"total": 1, "successful": 1,
+                        "skipped": 0, "failed": 0},
+        }), 200
 
     @app.route("/search/delete_by_query", methods=["POST"])
     def delete_by_query_route():
@@ -4657,8 +4286,6 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
         ``conflicts`` abort/proceed is accepted-and-ignored (a
         snapshot lake rewrite has no concurrent versioning to
         conflict with)."""
-        from sql_database_to_elastic_datalake_spark.plans.es_dsl import DslError
-
         body = request.get_json(force=True)
         unknown = sorted(set(body) - {"table", "index", "query",
                                       "conflicts"})
@@ -4675,19 +4302,14 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
         if not isinstance(body.get("query"), dict):
             return jsonify({"error": "delete_by_query requires a "
                                      "query object"}), 400
-        try:
-            return jsonify(service.delete_by_query(
-                table, body["query"])), 200
-        except DslError as ex:
-            return jsonify({"error": str(ex)}), 400
+        return jsonify(service.delete_by_query(
+            table, body["query"])), 200
 
     @app.route("/search/update_by_query", methods=["POST"])
     def update_by_query_route():
         """ES ``_update_by_query`` (service.update_by_query): painless
         assignment subset over the matched set; no ``query`` means
         match_all, like ES."""
-        from sql_database_to_elastic_datalake_spark.plans.es_dsl import DslError
-
         body = request.get_json(force=True)
         unknown = sorted(set(body) - {"table", "index", "query",
                                       "script", "conflicts"})
@@ -4704,11 +4326,8 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
         q = body.get("query")
         if q is not None and not isinstance(q, dict):
             return jsonify({"error": "query must be an object"}), 400
-        try:
-            return jsonify(service.update_by_query(
-                table, q, body.get("script"))), 200
-        except DslError as ex:
-            return jsonify({"error": str(ex)}), 400
+        return jsonify(service.update_by_query(
+            table, q, body.get("script"))), 200
 
     #: completed async searches kept for the GET/DELETE lifecycle
     #: (service-local, like the stored-scripts namespace)
@@ -4726,7 +4345,6 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
         completed response under an id for the GET/DELETE lifecycle;
         ES's partial-results states never occur (documented: they
         require mid-flight reads of a distributed reduce)."""
-        import time as _time
         import uuid as _u
 
         body = dict(request.get_json(force=True))
@@ -4737,12 +4355,8 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
         if not isinstance(keep, bool):
             return jsonify({"error": "keep_on_completion must be a "
                                      "boolean"}), 400
-        resp = _advanced_body(body)
-        payload, status = (resp if isinstance(resp, tuple)
-                           else (resp, 200))
-        if status != 200:
-            return payload, status
-        now = int(_time.time() * 1000)
+        payload, _ = _advanced_body(body)
+        now = int(time.time() * 1000)
         ttl = 5 * 60_000 if keep_alive is None \
             else _parse_keep_alive(keep_alive)
         if ttl is None:
@@ -4767,11 +4381,9 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
 
     @app.route("/search/async/<sid>", methods=["GET"])
     def async_search_get(sid):
-        import time as _time
-
         env = async_store.get(sid)
         if env is not None and \
-                env["expiration_time_in_millis"] < _time.time() * 1000:
+                env["expiration_time_in_millis"] < time.time() * 1000:
             # keep_alive enforcement is LAZY (no background reaper in a
             # request-driven service): an expired entry 404s exactly
             # like ES's reaped one, and drops on touch
@@ -4804,9 +4416,6 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
         create_index_body — one source of truth for wire mappings).
         ``table`` supports the usual wildcard; response keyed per
         index like ES."""
-        import fnmatch as _fn
-        import json as _json
-
         from sql_database_to_elastic_datalake_spark.sinks.bulk_export import (
             create_index_body,
         )
@@ -4817,20 +4426,15 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
         if not table:
             return jsonify({"error": "mapping requires a table/index "
                                      "(query param or body)"}), 400
-        if "*" in table or "?" in table:
-            names = sorted(
-                d for d in os.listdir(service.lake_dir)
-                if _fn.fnmatchcase(d, table)
-                and os.path.isdir(os.path.join(service.lake_dir, d)))
-        else:
-            names = [table]
+        names = (service._matching_tables(table)
+                 if "*" in table or "?" in table else [table])
         out = {}
         for name in names:
             p = os.path.join(service.lake_dir, name)
             if not path_exists(service.spark, p):
                 return jsonify({"error": f"unknown table {name!r}"}), 404
             df = service.spark.read.parquet(p)
-            out[name] = _json.loads(create_index_body(df))
+            out[name] = json.loads(create_index_body(df))
         return jsonify(out), 200
 
     @app.route("/search/stats", methods=["GET", "POST"])
@@ -4840,18 +4444,11 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
         metadata-cheap count job) and on-disk byte/file totals from
         the parquet directory listing. Wildcard tables like
         _mapping."""
-        import fnmatch as _fn
-
         body = request.get_json(silent=True) or {}
         table = request.args.get("table") or body.get("table") \
             or body.get("index") or "*"
-        if "*" in table or "?" in table:
-            names = sorted(
-                d for d in os.listdir(service.lake_dir)
-                if _fn.fnmatchcase(d, table)
-                and os.path.isdir(os.path.join(service.lake_dir, d)))
-        else:
-            names = [table]
+        names = (service._matching_tables(table)
+                 if "*" in table or "?" in table else [table])
         indices = {}
         total_docs, total_bytes = 0, 0
         for name in names:
@@ -4884,26 +4481,20 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
 
     @app.route("/cat/indices", methods=["GET"])
     def cat_indices_route():
-        """ES ``GET _cat/indices`` (r12 — the ops-tooling listing
+        """ES ``GET _cat/indices`` (the ops-tooling listing
         curl/scripts poll): one row per lake table with docs.count and
         store.size. ``format=json`` returns ES's JSON rows; the
         default text format returns the whitespace-aligned columns
         ES prints. ``index`` query param filters by pattern. Health/
         status are constant green/open (no shard states to report);
         uuid/pri/rep are the lake's honest equivalents."""
-        import fnmatch as _fn
-
         pat = request.args.get("index") or "*"
         fmt = request.args.get("format", "text")
         if fmt not in ("text", "json"):
             return jsonify({"error":
                             "format must be text or json"}), 400
-        names = sorted(
-            d for d in os.listdir(service.lake_dir)
-            if _fn.fnmatchcase(d, pat)
-            and os.path.isdir(os.path.join(service.lake_dir, d)))
         rows = []
-        for name in names:
+        for name in service._matching_tables(pat):
             p = os.path.join(service.lake_dir, name)
             n = service.spark.read.parquet(p).count()
             size = 0
@@ -4935,21 +4526,15 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
     def cat_count_route():
         """ES ``GET _cat/count[?index=pattern]``: epoch, timestamp,
         total doc count — the monitoring one-liner."""
-        import fnmatch as _fn
-        import time as _time
-
         pat = request.args.get("index") or "*"
         fmt = request.args.get("format", "text")
         if fmt not in ("text", "json"):
             return jsonify({"error":
                             "format must be text or json"}), 400
-        total = 0
-        for name in sorted(os.listdir(service.lake_dir)):
-            p = os.path.join(service.lake_dir, name)
-            if _fn.fnmatchcase(name, pat) and os.path.isdir(p):
-                total += service.spark.read.parquet(p).count()
-        epoch = int(_time.time())
-        ts = _time.strftime("%H:%M:%S", _time.gmtime(epoch))
+        total = sum(service._frame(name).count()
+                    for name in service._matching_tables(pat))
+        epoch = int(time.time())
+        ts = time.strftime("%H:%M:%S", time.gmtime(epoch))
         if fmt == "json":
             return jsonify([{"epoch": str(epoch), "timestamp": ts,
                              "count": str(total)}]), 200
@@ -4963,8 +4548,6 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
         ``rows`` (+ ``cursor`` when more), cursor pages carry rows
         only, ``columnar: true`` transposes to per-column ``values``
         lists — all per the ES SQL REST docs."""
-        from sql_database_to_elastic_datalake_spark.plans.es_dsl import DslError
-
         body = request.get_json(force=True)
         unknown = sorted(set(body) - {"query", "fetch_size", "cursor",
                                       "columnar"})
@@ -4993,10 +4576,7 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
             if not isinstance(body.get("query"), str):
                 return jsonify({"error": "sql requires a query "
                                          "string"}), 400
-            try:
-                cols, all_rows = service.sql_query(body["query"])
-            except DslError as ex:
-                return jsonify({"error": str(ex)}), 400
+            cols, all_rows = service.sql_query(body["query"])
             rows, rest = all_rows[:fs], all_rows[fs:]
             out = {"columns": cols}
         if columnar:
@@ -5027,8 +4607,6 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
     @app.route("/search/reindex", methods=["POST"])
     def reindex_route():
         """ES ``_reindex`` (service.reindex)."""
-        from sql_database_to_elastic_datalake_spark.plans.es_dsl import DslError
-
         body = request.get_json(force=True)
         unknown = sorted(set(body) - {"source", "dest", "script",
                                       "conflicts"})
@@ -5038,106 +4616,30 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
         if body.get("conflicts") not in (None, "abort", "proceed"):
             return jsonify({"error": "conflicts must be abort or "
                                      "proceed"}), 400
-        try:
-            return jsonify(service.reindex(body)), 200
-        except DslError as ex:
-            return jsonify({"error": str(ex)}), 400
+        return jsonify(service.reindex(body)), 200
 
-    @app.route("/search/msearch", methods=["POST"])
-    def msearch_route():
-        """ES ``_msearch``: NDJSON header/body line pairs → one
-        response per search, errors inline per-item (a bad body fails
-        its slot, not the batch — the multi-API contract). Headers
-        take ``index`` (table/pattern); bodies take the
-        /search/advanced key set."""
-        import json as _json
-
-        from sql_database_to_elastic_datalake_spark.plans.es_dsl import DslError
-
+    def _multi_search(name: str, to_body):
+        """The multi-search wire loop: NDJSON header/body line pairs →
+        one response per pair, errors inline per item (a bad body fails
+        its slot, not the batch — the multi-API contract). Headers take
+        ``index`` (table/pattern); ``to_body`` turns a body line into a
+        search body with the /search/advanced keys."""
         raw = request.get_data(as_text=True) or ""
         lines = [ln for ln in raw.splitlines() if ln.strip()]
         if len(lines) % 2:
-            return jsonify({"error":
-                            "msearch needs header/body line pairs"}), 400
+            raise DslError(f"{name} needs header/body line pairs")
         responses = []
         for i in range(0, len(lines), 2):
             try:
-                header = _json.loads(lines[i])
-                body = _json.loads(lines[i + 1])
+                header = json.loads(lines[i])
+                body = json.loads(lines[i + 1])
             except ValueError:
                 responses.append({"error": "malformed NDJSON line",
                                   "status": 400})
                 continue
             try:
-                k = _page_size(body)
-                if k is None:
-                    raise DslError("k/size must be a non-negative "
-                                   "integer")
-                try:
-                    from_ = int(body.get("from", 0))
-                except (TypeError, ValueError):
-                    # a malformed `from` is ITS slot's 400, never an
-                    # unhandled ValueError -> request-level 500
-                    raise DslError(
-                        "from must be a non-negative integer") from None
-                out = service.advanced_search(
-                    header.get("index",
-                               body.get("table", INDEX_PREFIX + "*")),
-                    body.get("query", {"match_all": {}}), k=k,
-                    aggs=body.get("aggs") or body.get("aggregations"),
-                    sort=body.get("sort"),
-                    from_=from_,
-                    source=body.get("_source"),
-                    track_total_hits=body.get("track_total_hits"),
-                    runtime_mappings=body.get("runtime_mappings"),
-                )
-                responses.append({**_wire_envelope(out), "status": 200})
-            except DslError as ex:
-                responses.append({"error": str(ex), "status": 400})
-        return jsonify({"responses": responses}), 200
-
-    @app.route("/search/msearch_template", methods=["POST"])
-    def msearch_template_route():
-        """ES ``_msearch/template`` (r11): NDJSON header/template-body
-        line pairs — each body carries {source|id, params} and renders
-        through the one mustache engine, then runs as its pair's
-        search. Errors stay inline per-item like _msearch (a missing
-        stored template 404s ITS slot, not the batch)."""
-        import json as _json
-
-        from sql_database_to_elastic_datalake_spark.plans.templates import (
-            render_search_template,
-        )
-
-        raw = request.get_data(as_text=True) or ""
-        lines = [ln for ln in raw.splitlines() if ln.strip()]
-        if len(lines) % 2:
-            return jsonify({"error":
-                            "msearch_template needs header/body line "
-                            "pairs"}), 400
-        responses = []
-        for i in range(0, len(lines), 2):
-            try:
-                header = _json.loads(lines[i])
-                tbody = _json.loads(lines[i + 1])
-            except ValueError:
-                responses.append({"error": "malformed NDJSON line",
-                                  "status": 400})
-                continue
-            try:
-                source, params = _resolve_template(tbody)
-                body = render_search_template(source, params)
-                k = _page_size(body)
-                if k is None:
-                    raise DslError("k/size must be a non-negative "
-                                   "integer")
-                try:
-                    from_ = int(body.get("from", 0))
-                except (TypeError, ValueError):
-                    # a malformed `from` is ITS slot's 400, never an
-                    # unhandled ValueError -> request-level 500
-                    raise DslError(
-                        "from must be a non-negative integer") from None
+                body = to_body(body)
+                k, from_ = _page_size(body), _page_from(body)
                 out = service.advanced_search(
                     header.get("index",
                                body.get("table", INDEX_PREFIX + "*")),
@@ -5156,53 +4658,61 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
                 responses.append({"error": str(ex), "status": 400})
         return jsonify({"responses": responses}), 200
 
+    @app.route("/search/msearch", methods=["POST"])
+    def msearch_route():
+        """ES ``_msearch``: each body takes the /search/advanced key
+        set."""
+        return _multi_search("msearch", lambda body: body)
+
+    @app.route("/search/msearch_template", methods=["POST"])
+    def msearch_template_route():
+        """ES ``_msearch/template``: each body carries {source|id,
+        params} and renders through the one mustache engine, then runs
+        as its pair's search (a missing stored template 404s ITS slot,
+        not the batch)."""
+        from sql_database_to_elastic_datalake_spark.plans.templates import (
+            render_search_template,
+        )
+
+        return _multi_search(
+            "msearch_template",
+            lambda body: render_search_template(*_resolve_template(body)))
+
     @app.route("/search/mget", methods=["POST"])
     def mget_route():
         """ES ``_mget``: batch point lookups, one pushed-In scan per
         distinct table, misses reported per entry (never a request
         error)."""
-        from sql_database_to_elastic_datalake_spark.plans.es_dsl import DslError
-
         body = request.get_json(force=True)
         unknown = sorted(set(body) - {"table", "index", "ids", "docs",
                                       "_source"})
         if unknown:
             return jsonify({"error":
                             f"unsupported mget keys: {unknown}"}), 400
-        try:
-            return jsonify(service.mget(
-                table=body.get("table") or body.get("index"),
-                ids=body.get("ids"), docs=body.get("docs"),
-                source=body.get("_source"))), 200
-        except DslError as ex:
-            return jsonify({"error": str(ex)}), 400
+        return jsonify(service.mget(
+            table=body.get("table") or body.get("index"),
+            ids=body.get("ids"), docs=body.get("docs"),
+            source=body.get("_source"))), 200
 
     @app.route("/search/field_caps", methods=["POST", "GET"])
     def field_caps_route():
         """ES ``_field_caps``: schema capabilities for an index
         pattern — Kibana's first call. Footer metadata only, no job."""
-        from sql_database_to_elastic_datalake_spark.plans.es_dsl import DslError
-
         body = request.get_json(force=True, silent=True) or {}
         unknown = sorted(set(body) - {"table", "index", "fields"})
         if unknown:
             return jsonify({"error":
                             f"unsupported field_caps keys: {unknown}"}), 400
-        try:
-            return jsonify(service.field_caps(
-                table=body.get("table") or body.get("index")
-                or request.args.get("index"),
-                fields=body.get("fields")
-                or request.args.get("fields"))), 200
-        except DslError as ex:
-            return jsonify({"error": str(ex)}), 400
+        return jsonify(service.field_caps(
+            table=body.get("table") or body.get("index")
+            or request.args.get("index"),
+            fields=body.get("fields")
+            or request.args.get("fields"))), 200
 
     @app.route("/search/terms_enum", methods=["POST"])
     def terms_enum_route():
         """ES ``_terms_enum``: prefix autocomplete over a keyword
         field (Kibana's field-value suggestions)."""
-        from sql_database_to_elastic_datalake_spark.plans.es_dsl import DslError
-
         body = request.get_json(force=True)
         unknown = sorted(set(body) - {"table", "index", "field",
                                       "string", "size",
@@ -5216,25 +4726,20 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
             size = int(body.get("size", 10))
         except (TypeError, ValueError):
             return jsonify({"error": "size must be an integer"}), 400
-        try:
-            return jsonify(service.terms_enum(
-                table=(body.get("table") or body.get("index")
-                       or INDEX_PREFIX + "*"),
-                field=body.get("field"),
-                string=str(body.get("string", "") or ""),
-                size=size,
-                case_insensitive=bool(body.get("case_insensitive",
-                                                False)),
-                search_after=body.get("search_after"))), 200
-        except DslError as ex:
-            return jsonify({"error": str(ex)}), 400
+        return jsonify(service.terms_enum(
+            table=(body.get("table") or body.get("index")
+                   or INDEX_PREFIX + "*"),
+            field=body.get("field"),
+            string=str(body.get("string", "") or ""),
+            size=size,
+            case_insensitive=bool(body.get("case_insensitive",
+                                            False)),
+            search_after=body.get("search_after"))), 200
 
     @app.route("/search/analyze", methods=["POST"])
     def analyze_route():
         """ES ``_analyze``: the engine's one analysis chain, echoed
         with original-text offsets. Driver-side only."""
-        from sql_database_to_elastic_datalake_spark.plans.es_dsl import DslError
-
         body = request.get_json(force=True)
         unknown = sorted(set(body) - {"text", "analyzer"})
         if unknown:
@@ -5244,19 +4749,14 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
                             "unimplemented)"}), 400
         if "text" not in body:
             return jsonify({"error": "analyze requires text"}), 400
-        try:
-            return jsonify(analyze_text(
-                body["text"], body.get("analyzer", "standard"))), 200
-        except DslError as ex:
-            return jsonify({"error": str(ex)}), 400
+        return jsonify(analyze_text(
+            body["text"], body.get("analyzer", "standard"))), 200
 
     @app.route("/search/explain", methods=["POST"])
     def explain_route():
         """ES ``_explain``: per-document match breakdown (membership
         explanation — the BM25 tree divergence is documented on the
         service method)."""
-        from sql_database_to_elastic_datalake_spark.plans.es_dsl import DslError
-
         body = request.get_json(force=True)
         unknown = sorted(set(body) - {"table", "index", "id", "query"})
         if unknown:
@@ -5266,32 +4766,22 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
         if not table or body.get("id") is None:
             return jsonify(
                 {"error": "explain requires table and id"}), 400
-        try:
-            out = service.explain(
-                table, body["id"],
-                body.get("query", {"match_all": {}}))
-        except NotFoundError as ex:
-            return jsonify({"error": str(ex)}), 404
-        except DslError as ex:
-            return jsonify({"error": str(ex)}), 400
+        out = service.explain(
+            table, body["id"],
+            body.get("query", {"match_all": {}}))
         # ES returns the found:false envelope with a 404 status
         return jsonify(out), (200 if out.get("found") else 404)
 
     @app.route("/search/scroll", methods=["POST"])
     def scroll_continue():
-        from sql_database_to_elastic_datalake_spark.plans.es_dsl import DslError
-
         body = request.get_json(force=True)
         sid = body.get("scroll_id")
         if not isinstance(sid, str) or not sid:
             return jsonify({"error": "scroll_id is required"}), 400
         # "scroll" (the TTL refresh) is accepted-and-ignored —
         # stateless tokens don't expire (scroll_search docs)
-        try:
-            return jsonify(_wire_envelope(
-                service.scroll_search(scroll_id=sid))), 200
-        except DslError as ex:
-            return jsonify({"error": str(ex)}), 400
+        return jsonify(_wire_envelope(
+            service.scroll_search(scroll_id=sid))), 200
 
     @app.route("/search/scroll", methods=["DELETE"])
     def scroll_clear():
@@ -5304,8 +4794,6 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
         """ES ``POST /<index>/_pit``: mint a point-in-time id
         (open_pit docs — stateless token; keep_alive accepted and
         ignored). Body/query: {"table": ..., "keep_alive": ...}."""
-        from sql_database_to_elastic_datalake_spark.plans.es_dsl import DslError
-
         body = request.get_json(force=True, silent=True) or {}
         unknown = sorted(set(body) - {"table", "index", "keep_alive"})
         if unknown:
@@ -5313,13 +4801,8 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
                             f"unsupported pit keys: {unknown}"}), 400
         table = (body.get("table") or body.get("index")
                  or request.args.get("table"))
-        try:
-            return jsonify(service.open_pit(
-                table, keep_alive=body.get("keep_alive"))), 200
-        except NotFoundError as ex:
-            return jsonify({"error": str(ex)}), 404
-        except DslError as ex:
-            return jsonify({"error": str(ex)}), 400
+        return jsonify(service.open_pit(
+            table, keep_alive=body.get("keep_alive"))), 200
 
     @app.route("/search/validate", methods=["POST"])
     def validate_query():
@@ -5329,11 +4812,6 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
         schema — ``valid`` plus, with ``explain=true``, the ES-shaped
         per-"shard" explanation carrying the error text. Nothing
         executes: compilation only, no Spark job."""
-        from sql_database_to_elastic_datalake_spark.plans.es_dsl import (
-            DslError,
-            compile_dsl,
-        )
-
         body = request.get_json(force=True, silent=True) or {}
         unknown = sorted(set(body) - {"table", "index", "query",
                                       "explain", "rewrite"})

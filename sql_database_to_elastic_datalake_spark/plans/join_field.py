@@ -51,6 +51,7 @@ from sql_database_to_elastic_datalake_spark.plans.es_dsl import (
     DslError,
     compile_dsl,
 )
+from sql_database_to_elastic_datalake_spark.plans.search import field_resolver
 
 #: The lake's declared join-field relations (ES's mapping, restated).
 #: ``child``/``parent`` are LOGICAL table names; the queried table
@@ -221,10 +222,7 @@ def rewrite_join_field(
                 f"{kind} type {type_name!r} resolves to table "
                 f"{sibling!r}, which does not exist")
 
-        def resolve(field: str, _df=other):
-            return (F.col(field) if field in _df.columns
-                    else F.lit(None).cast("string"))
-
+        resolve = field_resolver(other)
         # NO null-coalesce around the inner predicate: filter()
         # already drops null-valued rows (ES's no-match), and a
         # coalesce wrapper would block predicate pushdown to the

@@ -36,6 +36,7 @@ from sql_database_to_elastic_datalake_spark.plans.es_dsl import (
     DslError,
     compile_dsl,
 )
+from sql_database_to_elastic_datalake_spark.plans.search import field_resolver
 
 
 #: Stored-set batch size (r14, r13 verdict #6): beyond this many
@@ -75,10 +76,7 @@ def percolate_corpus(
     if not isinstance(queries, dict) or not queries:
         raise DslError("percolate needs at least one stored query")
 
-    def resolve(f: str, _df=df):
-        return (F.col(f) if f in _df.columns
-                else F.lit(None).cast("string"))
-
+    resolve = field_resolver(df)
     keep = id_cols if id_cols is not None else list(df.columns)
     qids = sorted(queries)
     step = batch_size if batch_size else len(qids)

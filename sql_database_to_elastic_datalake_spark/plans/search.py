@@ -116,6 +116,20 @@ def bm25_rank(
     )
 
 
+def field_resolver(df: DataFrame):
+    """The tolerant field resolver the DSL compilers take for one
+    table: a field the table has is its column, any other field a
+    string null — ES's "a query on a field an index lacks matches
+    nothing there" under two-valued null semantics."""
+    columns = set(df.columns)
+
+    def resolve(field: str):
+        return (F.col(field) if field in columns
+                else F.lit(None).cast("string"))
+
+    return resolve
+
+
 def string_columns(df: DataFrame) -> list[str]:
     return [f.name for f in df.schema.fields if isinstance(f.dataType, StringType)]
 

@@ -1043,6 +1043,45 @@ def test_knn_vector_search(service, spark):
             knn={"field": "ghost", "query_vector": [1.0, 0.0]})
 
 
+def test_knn_malformed_options_are_named_400s(client, service, spark):
+    """A non-integer or negative knn.k and a non-numeric knn.similarity
+    are the client's 400s, not a ValueError / Spark error 500."""
+    spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.0, 1.0])], "id long, vec array<float>",
+    ).write.parquet(os.path.join(service.lake_dir, "data_lake_v"))
+    for bad, msg in (({"k": "x"}, "k must be a positive integer"),
+                     ({"k": -1}, "k must be a positive integer"),
+                     ({"similarity": "hi"}, "similarity must be a number")):
+        r = client.post("/search/advanced", data=json.dumps({
+            "table": "data_lake_v", "knn": {
+                "field": "vec", "query_vector": [1.0, 0.0], **bad}}),
+            content_type="application/json")
+        assert r.status_code == 400, bad
+        assert msg in r.get_json()["error"]
+
+
+def test_missing_search_table_is_404(client, service):
+    """A concrete table that does not exist is a 404 on both search
+    routes (the PIT/explain convention); a pattern matching nothing
+    is still an empty result."""
+    service.ingest("label", [{"name": "spark"}])
+    r = client.post("/search", data=json.dumps(
+        {"query": "spark", "tables": ["data_lake_nope"]}),
+        content_type="application/json")
+    assert r.status_code == 404
+    assert "no such table 'data_lake_nope'" in r.get_json()["error"]
+    r = client.post("/search/advanced", data=json.dumps(
+        {"table": "data_lake_nope", "query": {"match_all": {}}}),
+        content_type="application/json")
+    assert r.status_code == 404
+    assert "no such table 'data_lake_nope'" in r.get_json()["error"]
+    r = client.post("/search/advanced", data=json.dumps(
+        {"table": "data_lake_nope*", "query": {"match_all": {}}}),
+        content_type="application/json")
+    assert r.status_code == 200
+    assert r.get_json()["hits"]["total"] == {"value": 0, "relation": "eq"}
+
+
 def test_docvalue_fields_spelling(client, service, spark):
     """r7: docvalue_fields (the pre-8.x Kibana spelling) feeds the
     same fields-option machinery and merges with `fields`."""
@@ -3735,3 +3774,75 @@ def test_explain_route(client, service, spark):
         content_type="application/json")
     assert r.status_code == 400
     assert "unsupported explain keys" in r.get_json()["error"]
+
+
+def _jobs_per_request(spark, client, path, body):
+    """(status, Spark jobs launched) for one request, counted by
+    running it under its own job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobcount-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, path)
+    try:
+        r = client.post(path, data=json.dumps(body),
+                        content_type="application/json")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return r.status_code, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_search_jobs_per_request(client, service, spark):
+    """Spark jobs per request for the benchmark's search shapes plus the
+    ranked, collapse and default-budget pages — the docstrings' "one
+    job per request" contracts, pinned."""
+    rows = [(i, f"ticket {'spark' if i % 3 else 'pandas'} {i}",
+             i % 2 == 0, ["open", "closed", "triage"][i % 3], float(i))
+            for i in range(1, 41)]
+    spark.createDataFrame(
+        rows, "ticket_number long, ticket_data string, "
+              "isFinalStatus boolean, status_name string, pop double",
+    ).write.parquet(os.path.join(service.lake_dir, "data_lake_t"))
+    spark.createDataFrame(
+        [(i, f"user spark {i}") for i in range(10)],
+        "user_id long, name string",
+    ).write.parquet(os.path.join(service.lake_dir, "data_lake_u"))
+    match = {"match": {"ticket_data": "spark"}}
+    shapes = [
+        ("/search", {"query": "spark ticket", "k": 10,
+                     "tables": ["data_lake_t", "data_lake_u"]}, 3),
+        ("/search/advanced", {
+            "table": "data_lake_t", "size": 10, "track_total_hits": True,
+            "query": {"bool": {"must": [match], "filter": [
+                {"term": {"isFinalStatus": True}}]}}}, 5),
+        ("/search/advanced", {
+            "table": "data_lake_t", "size": 0, "track_total_hits": True,
+            "query": match, "aggs": {"by_status": {
+                "terms": {"field": "status_name", "size": 5},
+                "aggs": {"top": {"max": {"field": "ticket_number"}}}}}}, 7),
+        ("/search/advanced", {
+            "table": "data_lake_t", "query": match, "from": 5, "size": 10,
+            "sort": [{"ticket_number": "asc"}],
+            "track_total_hits": True}, 2),
+        ("/search/advanced", {
+            "table": "data_lake_t", "query": match, "size": 10,
+            "sort": [{"ticket_number": "asc"}], "search_after": [12],
+            "track_total_hits": True}, 2),
+        ("/search/advanced", {
+            "table": "data_lake_t", "size": 5, "query": {"function_score": {
+                "query": match, "functions": [{"field_value_factor": {
+                    "field": "pop"}}]}}}, 2),
+        ("/search/advanced", {
+            "table": "data_lake_t", "query": match, "size": 10,
+            "sort": [{"ticket_number": "desc"}],
+            "collapse": {"field": "status_name"}}, 3),
+        ("/search/advanced", {
+            "table": "data_lake_t", "query": match, "size": 5}, 2),
+    ]
+    got = []
+    for path, body, _ in shapes:
+        status, jobs = _jobs_per_request(spark, client, path, body)
+        assert status == 200, (path, body)
+        got.append(jobs)
+    assert got == [want for _, _, want in shapes]
