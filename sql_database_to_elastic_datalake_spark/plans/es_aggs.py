@@ -7,29 +7,49 @@ other half of the ES request the lake must answer. This module compiles
 that section into DataFrame aggregation plans and assembles the
 documented ES response shapes.
 
-Supported aggregation types:
+Supported aggregation kinds — :data:`_KINDS` at the end of this module
+is the one list: each entry names a kind's accepted body keys, its
+handler, whether it takes sub-aggregations and, for metrics, the
+column builder and envelope reader that let it ride a parent's job.
 
 * metrics — ``avg / sum / min / max / value_count / cardinality /
-  stats / percentiles / missing`` on a field;
+  stats / extended_stats / percentiles / percentile_ranks / missing /
+  weighted_avg / scripted_metric``: every top-level metric shares ONE
+  aggregation job, and the same kinds ride a bucket agg's own job as
+  sub-aggs (gated per predicate under ``filter`` / ``filters``);
+* single-plan metrics — ``string_stats / boxplot / t_test /
+  matrix_stats / median_absolute_deviation / top_metrics /
+  geo_bounds / geo_centroid / geo_line`` (top level; ``top_metrics``
+  also per ``terms`` bucket);
 * buckets — ``terms`` (size + count-desc order, ES tie-break by key),
-  ``histogram`` (numeric interval), ``date_histogram``
-  (``calendar_interval`` minute/hour/day/week/month/year or
-  ``fixed_interval`` like ``"5m"``), ``range`` (from/to bands, which ES
-  allows to OVERLAP — each band is a conditional aggregate, so one job
-  covers all bands), ``filter`` (any query-DSL predicate via
-  :func:`.es_dsl.compile_dsl`), and ``composite`` (key-ordered bucket
-  pages with ``after``-cursor resumption — the scalable bucket API);
-* ``top_hits`` under ``terms`` buckets — per-bucket top documents via
-  the window top-k pattern (WindowGroupLimit pushdown), volume bounded
-  by returned-buckets × size;
-* metric sub-aggs under any bucket agg (computed in the SAME groupBy
-  job as the bucket counts — no extra pass);
-* MULTI-LEVEL bucket chains (r6): ``terms > date_histogram > metrics``
-  and deeper — one ``groupBy`` on the composite key carries every
-  level's counts and every metric's mergeable components through ONE
-  shuffle; the response tree is assembled driver-side from the flat
-  frame (:func:`nested_levels_frame` / :func:`_assemble_levels`).
-  Kibana's standard drill-down trees run as a single job.
+  ``multi_terms``, ``rare_terms``, ``significant_terms`` /
+  ``significant_text``, ``categorize_text``, ``frequent_item_sets``,
+  ``histogram`` / ``date_histogram`` (calendar or fixed interval,
+  time_zone, offset, gap filling), ``auto_date_histogram``,
+  ``variable_width_histogram``, ``range`` / ``date_range`` /
+  ``ip_range`` / ``geo_distance`` (bands, which ES allows to OVERLAP —
+  each band is a conditional aggregate, so one job covers all bands),
+  ``filter`` / ``filters`` / ``adjacency_matrix`` (query-DSL
+  predicates via :func:`.es_dsl.compile_dsl`), ``composite``
+  (key-ordered pages with ``after``-cursor resumption — the scalable
+  bucket API), ``geohash_grid`` / ``geotile_grid``, ``global``,
+  ``sampler`` / ``diversified_sampler``, ``nested`` (+
+  ``reverse_nested``) and ``children`` / ``parent``;
+* ``top_hits`` under ``terms`` buckets and at the deepest level of a
+  chain — per-bucket top documents via the window top-k pattern
+  (WindowGroupLimit pushdown), volume bounded by returned-buckets ×
+  size;
+* pipelines — sibling ``*_bucket`` reductions and parent transforms
+  (``cumulative_sum``, ``derivative``, ``serial_diff``, ``moving_fn``,
+  ``bucket_script`` / ``bucket_selector`` / ``bucket_sort``,
+  ``normalize``, ``cumulative_cardinality``, ``moving_percentiles``,
+  ``rate``) over the computed bucket lists;
+* MULTI-LEVEL bucket chains: ``terms > date_histogram > metrics`` and
+  deeper — one ``groupBy`` on the composite key carries every level's
+  counts and every metric's mergeable components through ONE shuffle;
+  the response tree is assembled driver-side from the flat frame
+  (:func:`nested_levels_frame` / :func:`_assemble_levels`). Kibana's
+  standard drill-down trees run as a single job.
 
 Documented divergences (same contract as :mod:`.es_dsl`):
 
@@ -52,7 +72,8 @@ from __future__ import annotations
 
 import datetime as _dt
 import re
-from typing import Any
+from functools import partial
+from typing import Any, Callable, NamedTuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -131,194 +152,82 @@ def _check_time_zone(tz) -> str | None:
 #: ES default percents for a percentiles agg
 _DEFAULT_PERCENTS = (1.0, 5.0, 25.0, 50.0, 75.0, 95.0, 99.0)
 
-#: implemented body keys per agg kind. Keys that only tune ES-internal
-#: execution (shard_size, collect_mode, …) are accepted-and-ignored —
-#: they cannot change results. Keys that WOULD change results
-#: (time_zone, offset, keyed, script, …) are NOT listed: the reference
-#: forwards bodies verbatim to ES, so silently ignoring one returns
-#: wrong numbers with no error — they 400 instead (the same posture as
-#: the search route's unknown-top-level-key rejection).
-_AGG_BODY_KEYS = {
-    "terms": {"field", "size", "missing", "min_doc_count", "order",
-              "include", "exclude",
-              "shard_size", "show_term_doc_count_error", "collect_mode",
-              "execution_hint"},
-    "histogram": {"field", "interval", "min_doc_count",
-                  "extended_bounds", "offset", "keyed"},
-    "date_histogram": {"field", "calendar_interval", "fixed_interval",
-                       "min_doc_count", "extended_bounds", "format",
-                       "time_zone", "offset", "keyed"},
-    "range": {"field", "ranges", "keyed"},
-    # r14 (r13 verdict #7): ip_range — dotted-quad/CIDR bands over a
-    # string ip column, parsed to longs in column algebra
-    # (functions/ip.py); ipv6 shapes are named 400s
-    "ip_range": {"field", "ranges", "keyed"},
-    "date_range": {"field", "ranges", "keyed", "format"},
-    "filters": {"filters", "other_bucket", "other_bucket_key"},
-    "composite": {"sources", "size", "after"},
-    "top_hits": {"size", "sort", "_source"},
-    "significant_terms": {"field", "size", "min_doc_count",
-                          "shard_size", "shard_min_doc_count",
-                          "background_filter"},
-    # r10: the text twin — same JLH scoring over TOKENS of an
-    # analyzed field (doc frequency: each doc counts once per
-    # distinct token). filter_duplicate_text (ES's near-dup text
-    # suppression) is a named 400, not a silent drop.
-    "significant_text": {"field", "size", "min_doc_count",
-                         "shard_size", "shard_min_doc_count",
-                         "background_filter"},
-    # r10: the cost-bounding wrappers around significant_*/terms on
-    # big indices. execution_hint is a non-result-changing hint in ES
-    # — accepted-and-ignored.
-    # r13: geohash cells at exact-arithmetic precision (functions/
-    # geo.py); shard_size is ES-internal accuracy tuning — ignored
-    "geohash_grid": {"field", "precision", "size", "shard_size"},
-    # r13 late: the rest of the geo agg family. geotile `bounds` is
-    # result-changing and NOT listed (named 400, not a silent drop)
-    "geotile_grid": {"field", "precision", "size", "shard_size"},
-    "geo_distance": {"field", "origin", "ranges", "unit",
-                     "distance_type", "keyed"},
-    "geo_bounds": {"field", "wrap_longitude"},
-    "geo_centroid": {"field"},
-    "geo_line": {"point", "sort", "include_sort", "sort_order",
-                 "size"},
-    # r13 late: rate — only valid under a date_histogram (enforced in
-    # the branch); `unit` beyond week is a named 400 (calendar UNITS
-    # have no fixed second count; calendar bucket SPANS are handled)
-    "rate": {"field", "unit", "mode"},
-    "sampler": {"shard_size"},
-    "diversified_sampler": {"shard_size", "field",
-                            "max_docs_per_value", "execution_hint"},
-    # r7 bucket additions. multi_terms is Kibana Lens's "top values of
-    # multiple fields"; rare_terms the long-tail panel (exact here —
-    # ES's CuckooFilter approximation is a documented divergence,
-    # `precision` accepted-and-ignored); auto_date_histogram is the
-    # Discover histogram (interval choice from a fixed ladder;
-    # intervals >= 30d round on fixed day lengths, not calendar months
-    # — documented divergence for cross-engine reproducibility)
-    "multi_terms": {"terms", "size", "min_doc_count", "order",
-                    "shard_size", "show_term_doc_count_error",
-                    "collect_mode"},
-    "global": set(),
-    "adjacency_matrix": {"filters", "separator"},
-    "rare_terms": {"field", "max_doc_count", "missing", "include",
-                   "exclude", "precision"},
-    "auto_date_histogram": {"field", "buckets", "minimum_interval",
-                            "format"},
-    # r11 late: variable_width_histogram is the largest-gaps exact
-    # variant (initial_buffer/shard_size tune ES's approximation —
-    # accepted-and-ignored); categorize_text is the exact-template
-    # tier (similarity_threshold != 100 is a named 400 in the frame)
-    "variable_width_histogram": {"field", "buckets", "initial_buffer",
-                                 "shard_size"},
-    "categorize_text": {"field", "size", "min_doc_count",
-                        "similarity_threshold",
-                        "categorization_filters", "shard_size"},
-    # r11 late: exact closed-set mining (ES mines per-shard sampled
-    # eclat and calls its own output approximate — divergence
-    # documented in the frame)
-    "frequent_item_sets": {"fields", "minimum_set_size",
-                           "minimum_support", "size"},
-    "nested": {"path"},
-    "reverse_nested": set(),
-    # metric kinds: field + ES's missing-value substitution;
-    # precision_threshold is accepted-ignored (we are exact anyway)
-    # pipeline aggs (r7): driver-side transforms over already-computed
-    # bucket lists — no extra job; gap_policy "skip" is ES's default
-    # and the only implemented policy (insert_zeros would change
-    # results silently if coerced)
-    "avg_bucket": {"buckets_path", "gap_policy"},
-    "sum_bucket": {"buckets_path", "gap_policy"},
-    "min_bucket": {"buckets_path", "gap_policy"},
-    "max_bucket": {"buckets_path", "gap_policy"},
-    "stats_bucket": {"buckets_path", "gap_policy"},
-    "cumulative_sum": {"buckets_path"},
-    "derivative": {"buckets_path", "gap_policy"},
-    # the rest of the TSVB staple family (r7): same driver-side tier.
-    # bucket_script/bucket_selector scripts go through a SAFE
-    # arithmetic evaluator (_eval_bucket_script) — exactly the
-    # `params.x`-algebra subset Kibana TSVB emits; anything beyond it
-    # (method calls, state) is a named 400, never eval()
-    "bucket_script": {"buckets_path", "script", "gap_policy"},
-    "bucket_selector": {"buckets_path", "script", "gap_policy"},
-    "bucket_sort": {"sort", "from", "size", "gap_policy"},
-    "moving_fn": {"buckets_path", "script", "window", "shift",
-                  "gap_policy"},
-    "serial_diff": {"buckets_path", "lag", "gap_policy"},
-    "percentiles_bucket": {"buckets_path", "gap_policy", "percents"},
-    # r14 (r13 verdict #5): the pipeline-agg tail
-    "extended_stats_bucket": {"buckets_path", "gap_policy", "sigma"},
-    "moving_percentiles": {"buckets_path", "window", "shift"},
-    # r9: normalize — per-bucket rescale against the sibling list.
-    # `format` (value_as_string rendering) is unimplemented and names
-    # its 400 here rather than silently dropping the rendered form
-    "normalize": {"buckets_path", "method"},
-    # r9: cumulative_cardinality — EXACT running distinct via the
-    # first-occurrence histogram (ES merges HLL sketches: the same
-    # exactness divergence as cardinality itself). buckets_path must
-    # name a sibling `cardinality` sub-agg; the pipeline re-reads that
-    # agg's field, so script-sourced cardinality is a named 400
-    "cumulative_cardinality": {"buckets_path"},
-    "avg": {"field", "missing", "script"},
-    "sum": {"field", "missing", "script"},
-    "min": {"field", "missing", "script"},
-    "max": {"field", "missing", "script"},
-    "value_count": {"field", "missing", "script"},
-    "cardinality": {"field", "missing", "precision_threshold",
-                    "script"},
-    "stats": {"field", "missing", "script"},
-    "percentiles": {"field", "missing", "percents", "script"},
-    "missing": {"field"},
-    # r7 metric additions. extended_stats/percentile_ranks are exact
-    # (the cardinality-style divergence: ES runs t-digest for ranks);
-    # MAD's `compression` is a t-digest tuning knob — accepted and
-    # ignored because the computation here is exact anyway
-    "extended_stats": {"field", "missing", "sigma", "script"},
-    "percentile_ranks": {"field", "missing", "values", "script"},
-    "weighted_avg": {"value", "weight"},
-    "median_absolute_deviation": {"field", "missing", "compression",
-                                  "script"},
-    "top_metrics": {"metrics", "sort", "size"},
-    # r9: string_stats (top-level only — named 400 under buckets).
-    # count/lengths ride one agg job; the character distribution (and
-    # the entropy derived from it driver-side) is a second bounded
-    # groupBy — see string_stats_frame
-    "string_stats": {"field", "missing", "show_distribution"},
-    # r9: boxplot — exact quantiles + exact IQR-fence whiskers in one
-    # two-scan plan (ES runs TDigest: the same exactness divergence as
-    # percentiles; compression is accepted-and-ignored)
-    "boxplot": {"field", "missing", "compression", "script"},
-    # r9: t_test — two-sample means test. Top-level only (the
-    # conditional-moment pass is per-corpus; under buckets the metric
-    # dispatcher names the 400)
-    "t_test": {"a", "b", "type"},
-    # r9: matrix_stats — `mode` (multi-valued field reduction) has no
-    # meaning over scalar columns and is a named 400 rather than an
-    # accepted-and-diverging knob
-    "matrix_stats": {"fields", "missing"},
-}
-
-
 def check_agg_keys(kind: str, body) -> None:
-    """400 on agg-body keys with unimplemented RESULT-CHANGING
-    semantics (see _AGG_BODY_KEYS)."""
-    if kind == "filter" or kind not in _AGG_BODY_KEYS:
-        return  # filter bodies are query DSL; unknown kinds error later
-    if not isinstance(body, dict):
-        return
-    unknown = sorted(set(body) - _AGG_BODY_KEYS[kind])
+    """400 on agg-body keys outside the kind's accepted set
+    (:data:`_KINDS`). Keys that only tune ES-internal execution
+    (shard_size, collect_mode, …) are accepted-and-ignored — they
+    cannot change results. Keys that WOULD change results and are not
+    implemented are not listed: the reference forwards bodies verbatim
+    to ES, so silently ignoring one would return wrong numbers with no
+    error (the same posture as the search route's unknown-top-level-key
+    rejection)."""
+    keys = _KINDS[kind].keys if kind in _KINDS else None
+    if keys is None or not isinstance(body, dict):
+        return  # query-DSL / self-validating bodies; unknown kinds error later
+    unknown = sorted(set(body) - keys)
     if unknown:
         raise DslError(
             f"unsupported {kind} aggregation options: {unknown} "
-            f"(supported: {sorted(_AGG_BODY_KEYS[kind])})"
+            f"(supported: {sorted(keys)})"
         )
+
+
+def _agg_kind(spec, name: str | None = None):
+    """The agg-type key of one agg spec: the single key that is not
+    ``aggs``/``aggregations``/``meta``. ES JSON key order is
+    client-controlled, so ``meta`` (or the sub-``aggs`` block) may
+    legally precede the type. A malformed spec (not an object, zero or
+    several type keys) returns None — or, given the agg's ``name``,
+    raises the named 400."""
+    kinds = [k for k in spec if k not in ("aggs", "aggregations", "meta")] \
+        if isinstance(spec, dict) else None
+    if kinds is not None and len(kinds) == 1:
+        return kinds[0]
+    if name is None:
+        return None
+    if kinds is None:
+        raise DslError(f"aggregation {name!r} must be an object")
+    raise DslError(f"aggregation {name!r} must have exactly one type")
+
+
+def _subs(spec: dict) -> dict:
+    """The sub-aggregations of one agg spec (``aggs`` or its long
+    spelling)."""
+    return spec.get("aggs") or spec.get("aggregations") or {}
+
+
+def _check_subs(name: str, kind: str, sub) -> None:
+    """A kind the table marks as taking no sub-aggregations rejects
+    them by name, like ES — never a silent drop."""
+    if sub and not (kind in _KINDS and _KINDS[kind].subs):
+        raise DslError(
+            f"{name!r} ({kind}) takes no sub-aggregations (ES rejects "
+            f"sub-aggregations under {kind})")
+
+
+def _size(body: dict, default: int, kind: str, lo: int = 0,
+          hi: int | None = None) -> int:
+    """A validated ``size`` in ``[lo, hi]`` — a named 400 for a string,
+    float, bool or out-of-range value, which would otherwise fail
+    inside Python or Spark."""
+    size = body.get("size", default)
+    if isinstance(size, bool) or not isinstance(size, int) \
+            or size < lo or (hi is not None and size > hi):
+        bound = f">= {lo}" if hi is None else f"in [{lo}, {hi}]"
+        raise DslError(f"{kind} size must be an integer {bound}")
+    return size
+
+
+def _count_if(cond: Column) -> Column:
+    """The conditional doc count every gated bucket shape shares."""
+    return F.sum(F.when(cond, 1).otherwise(0)).cast("bigint")
 
 
 def _metric_source(body: dict) -> Column:
     """The metric's input column, with ES's ``missing`` substitution
     (docs lacking the field aggregate as if they carried this value).
 
-    r9: a ``script`` body (Kibana's "JSON input" idiom) compiles
+    A ``script`` body (Kibana's "JSON input" idiom) compiles
     through the painless-subset Column compiler — same grammar as
     ``script_score``, no ``_score`` in scope, never eval(). Script OR
     field, not both (ES's ``_value``-transform combined form is a
@@ -405,229 +314,219 @@ def _bucket_span_seconds(key, body: dict) -> float:
     return (next_utc - start_utc).total_seconds()
 
 
-def _metric_cols(sub_aggs: dict, prefix: str = "") -> list[Column]:
-    """One aliased aggregate Column per metric sub-agg. ``stats`` and
-    ``percentiles`` expand to several columns reassembled at envelope
-    time; ``missing`` counts docs whose field is null (ES missing
-    agg)."""
-    cols: list[Column] = []
+def _metric_parts(sub_aggs: dict, gate: Column | None = None):
+    """``(name + suffix, Column)`` per aggregate column of metric
+    sub-aggs. ``gate`` restricts every metric to rows matching it —
+    the conditional-aggregation shape of the filter/filters aggs, so a
+    metric kind compiles the same way at top level, under a bucket and
+    under a filter."""
     for name, spec in (sub_aggs or {}).items():
-        if not isinstance(spec, dict):
-            raise DslError(f"aggregation {name!r} must be an object")
-        kinds = [k for k in spec
-                 if k not in ("aggs", "aggregations", "meta")]
-        if len(kinds) != 1:
-            raise DslError(f"aggregation {name!r} must have exactly one type")
-        kind, body = kinds[0], spec[kinds[0]]
-        if kind == "filter":
-            # a filter sub-agg with metric-only children rides the
-            # SAME aggregation job as its parent bucket — gated
-            # conditional aggregates, exactly the filters-agg shape
-            # (Kibana's terms>filter panels; bucket children inside it
-            # still name-error via the gated dispatch)
-            from sql_database_to_elastic_datalake_spark.plans.es_dsl \
-                import _ns
-
-            pred = _ns(compile_dsl(body))
-            cols.append(
-                F.sum(F.when(pred, 1).otherwise(0)).cast("bigint")
-                .alias(f"{prefix}{name}|doc_count"))
-            inner = spec.get("aggs") or spec.get("aggregations") or {}
-            cols.extend(_gated_metric_cols(
-                pred, inner, prefix=f"{prefix}{name}|"))
-            continue
-        if spec.get("aggs") or spec.get("aggregations"):
+        kind = _agg_kind(spec, name)
+        metric = _KINDS[kind].metric if kind in _KINDS else None
+        if metric is None:
             raise DslError(
-                f"sub-aggregations under {name!r} ({kind}) are not "
-                "supported here"
-            )
-        if kind == "weighted_avg":
-            # no top-level field: value/weight sub-objects instead
-            check_agg_keys(kind, body)
-            v = body.get("value") or {}
-            w = body.get("weight") or {}
-            if not (isinstance(v, dict) and v.get("field")
-                    and isinstance(w, dict) and w.get("field")):
-                raise DslError(
-                    f"weighted_avg {name!r} needs value.field and "
-                    "weight.field"
-                )
-            vc, wc = _metric_source(v), _metric_source(w)
-            # ES skips docs where either side is (still) null after
-            # the missing substitutions
-            both = vc.isNotNull() & wc.isNotNull()
-            cols.append(F.sum(F.when(both, vc * wc))
-                        .alias(f"{prefix}{name}.vw"))
-            cols.append(F.sum(F.when(both, wc))
-                        .alias(f"{prefix}{name}.w"))
-            continue
-        if kind == "scripted_metric":
-            # r14 (r13 verdict #4): the deterministic init/map/
-            # combine/reduce subset compiles to ONE aggregate Column
-            # (plans/scripted_metric.py), so it rides every frame
-            # like any single-value metric
-            from sql_database_to_elastic_datalake_spark.plans \
-                .scripted_metric import scripted_metric_column
-
-            cols.append(scripted_metric_column(body)
-                        .alias(f"{prefix}{name}"))
-            continue
-        field = body.get("field") if isinstance(body, dict) else None
-        has_script = isinstance(body, dict) and body.get("script") \
-            is not None and kind != "missing"
-        if field is None and not has_script:
-            raise DslError(
-                f"aggregation {name!r} ({kind}) requires a field"
-                + ("" if kind == "missing" else " or script"))
+                f"unsupported sub-aggregation kind {kind!r} under {name!r}")
+        body, inner = spec[kind], _subs(spec)
+        _check_subs(name, kind, inner)
+        parts = metric.parts(body, gate, inner)
         check_agg_keys(kind, body)
-        src = _metric_source(body)
-        if kind == "extended_stats":
-            # mergeable components; the derived moments (variance,
-            # bounds) assemble at envelope time from the SAME
-            # sum/sum-of-squares arithmetic ES accumulates
-            for stat, c in (
-                ("count", F.count(src)), ("min", F.min(src)),
-                ("max", F.max(src)), ("sum", F.sum(src)),
-                ("sumsq", F.sum(src * src)),
-            ):
-                cols.append(c.alias(f"{prefix}{name}.{stat}"))
-        elif kind == "percentile_ranks":
-            vals = body.get("values")
-            if not isinstance(vals, list) or not vals:
-                raise DslError(
-                    f"percentile_ranks {name!r} needs a non-empty "
-                    "values list"
-                )
-            # EXACT rank: share of non-null values <= v (ES
-            # interpolates a t-digest — same exactness divergence as
-            # cardinality/percentiles)
-            for v in vals:
-                cols.append(
-                    (F.sum(F.when(src <= F.lit(v), 1).otherwise(0))
-                     * 100.0 / F.count(src))
-                    .alias(f"{prefix}{name}<{float(v)}")
-                )
-        elif kind == "stats":
-            for stat, fn in (("count", F.count), ("min", F.min),
-                             ("max", F.max), ("avg", F.avg), ("sum", F.sum)):
-                cols.append(fn(src).alias(f"{prefix}{name}.{stat}"))
-        elif kind == "percentiles":
-            # EXACT interpolated percentiles where ES runs t-digest —
-            # the same exactness divergence as cardinality, same
-            # direction (strictly more accurate)
-            for p in body.get("percents", _DEFAULT_PERCENTS):
-                cols.append(
-                    F.percentile(src, F.lit(float(p) / 100.0))
-                    .alias(f"{prefix}{name}%{float(p)}")
-                )
-        elif kind == "missing":
-            cols.append(
-                F.sum(F.when(F.col(field).isNull(), 1).otherwise(0))
-                .cast("bigint").alias(f"{prefix}{name}")
-            )
-        elif kind in _METRICS:
-            cols.append(_METRICS[kind](src).alias(f"{prefix}{name}"))
-        else:
-            raise DslError(
-                f"unsupported sub-aggregation kind {kind!r} under {name!r}"
-            )
-    return cols
+        for suffix, col in parts:
+            yield name + suffix, col
+
+
+def _metric_cols(sub_aggs: dict, prefix: str = "",
+                 gate: Column | None = None) -> list[Column]:
+    """One aliased aggregate Column per metric component: the columns
+    every bucket frame and the top-level fused job carry, reassembled
+    by :func:`_metric_envelope`."""
+    return [c.alias(prefix + key) for key, c in _metric_parts(sub_aggs, gate)]
 
 
 def _metric_envelope(row, sub_aggs: dict, prefix: str = "") -> dict:
+    """The ES envelope of each metric sub-agg, read from the columns
+    :func:`_metric_cols` named."""
     out = {}
     for name, spec in (sub_aggs or {}).items():
-        kind = next(k for k in spec
-                    if k not in ("aggs", "aggregations", "meta"))
-        if kind == "filter":
-            env = {"doc_count": row[f"{prefix}{name}|doc_count"]}
-            env.update(_metric_envelope(
-                row, spec.get("aggs") or spec.get("aggregations")
-                or {}, prefix=f"{prefix}{name}|"))
-            out[name] = env
-        elif kind == "weighted_avg":
-            w = row[f"{prefix}{name}.w"]
-            out[name] = {"value":
-                         (row[f"{prefix}{name}.vw"] / w)
-                         if w else None}
-        elif kind == "extended_stats":
-            body = spec[kind]
-            cnt = row[f"{prefix}{name}.count"]
-            s = row[f"{prefix}{name}.sum"]
-            sq = row[f"{prefix}{name}.sumsq"]
-            sigma = float(body.get("sigma", 2.0))
-            env: dict[str, Any] = {
-                "count": cnt,
-                "min": row[f"{prefix}{name}.min"],
-                "max": row[f"{prefix}{name}.max"],
-                "sum": s if s is not None else 0,
-                "sum_of_squares": sq,
-                "avg": None, "variance": None,
-                "variance_population": None,
-                "variance_sampling": None,
-                "std_deviation": None,
-                "std_deviation_population": None,
-                "std_deviation_sampling": None,
-                "std_deviation_bounds": {
-                    "upper": None, "lower": None,
-                    "upper_population": None, "lower_population": None,
-                    "upper_sampling": None, "lower_sampling": None,
-                },
-            }
-            if cnt:
-                avg = s / cnt
-                # ES derives variance from the accumulated sum /
-                # sum-of-squares exactly like this (its `variance` is
-                # the POPULATION variance), clamped at 0 against
-                # floating-point cancellation
-                var_p = max(sq / cnt - avg * avg, 0.0)
-                var_s = (max(sq - cnt * avg * avg, 0.0) / (cnt - 1)
-                         if cnt > 1 else None)
-                sd_p = var_p ** 0.5
-                sd_s = var_s ** 0.5 if var_s is not None else None
-                env.update({
-                    "avg": avg, "variance": var_p,
-                    "variance_population": var_p,
-                    "variance_sampling": var_s,
-                    "std_deviation": sd_p,
-                    "std_deviation_population": sd_p,
-                    "std_deviation_sampling": sd_s,
-                    "std_deviation_bounds": {
-                        "upper": avg + sigma * sd_p,
-                        "lower": avg - sigma * sd_p,
-                        "upper_population": avg + sigma * sd_p,
-                        "lower_population": avg - sigma * sd_p,
-                        "upper_sampling":
-                            (avg + sigma * sd_s)
-                            if sd_s is not None else None,
-                        "lower_sampling":
-                            (avg - sigma * sd_s)
-                            if sd_s is not None else None,
-                    },
-                })
-            out[name] = env
-        elif kind == "percentile_ranks":
-            body = spec[kind]
-            out[name] = {"values": {
-                str(float(v)): row[f"{prefix}{name}<{float(v)}"]
-                for v in body.get("values", [])
-            }}
-        elif kind == "stats":
-            out[name] = {
-                stat: row[f"{prefix}{name}.{stat}"]
-                for stat in ("count", "min", "max", "avg", "sum")
-            }
-        elif kind == "percentiles":
-            body = spec[kind]
-            out[name] = {"values": {
-                str(float(p)): row[f"{prefix}{name}%{float(p)}"]
-                for p in body.get("percents", _DEFAULT_PERCENTS)
-            }}
-        elif kind == "missing":
-            out[name] = {"doc_count": row[f"{prefix}{name}"]}
-        else:
-            out[name] = {"value": row[f"{prefix}{name}"]}
+        kind = _agg_kind(spec)
+        out[name] = _KINDS[kind].metric.read(
+            row, prefix + name, spec[kind], _subs(spec))
     return out
+
+
+def _gated(body, gate: Column | None) -> Column:
+    """A metric's input column, restricted to the gate's rows."""
+    src = _metric_source(body)
+    return src if gate is None else F.when(gate, src)
+
+
+def _read_value(row, p, body, _):
+    return {"value": row[p]}
+
+
+def _single(fn) -> _Metric:
+    """A single-value metric: one column, ``{"value": v}``."""
+    return _Metric(lambda body, gate, _: [("", fn(_gated(body, gate)))],
+                   _read_value)
+
+
+_STATS = (("count", F.count), ("min", F.min), ("max", F.max),
+          ("avg", F.avg), ("sum", F.sum))
+
+
+def _stats_parts(body, gate, _):
+    src = _gated(body, gate)
+    return [(f".{stat}", fn(src)) for stat, fn in _STATS]
+
+
+def _stats_read(row, p, body, _):
+    return {stat: row[f"{p}.{stat}"] for stat, _fn in _STATS}
+
+
+def _percents(body) -> list[float]:
+    return [float(x) for x in body.get("percents", _DEFAULT_PERCENTS)]
+
+
+def _percentiles_parts(body, gate, _):
+    # EXACT interpolated percentiles where ES runs t-digest — the same
+    # exactness divergence as cardinality (strictly more accurate)
+    src = _gated(body, gate)
+    return [(f"%{p}", F.percentile(src, F.lit(p / 100.0)))
+            for p in _percents(body)]
+
+
+def _percentiles_read(row, p, body, _):
+    return {"values": {str(x): row[f"{p}%{x}"] for x in _percents(body)}}
+
+
+def _extended_stats_parts(body, gate, _):
+    # mergeable components; the derived moments assemble at envelope
+    # time from the SAME sum/sum-of-squares arithmetic ES accumulates
+    src = _gated(body, gate)
+    return [(".count", F.count(src)), (".min", F.min(src)),
+            (".max", F.max(src)), (".sum", F.sum(src)),
+            (".sumsq", F.sum(src * src))]
+
+
+def _extended_stats_read(row, p, body, _):
+    return _extended_stats_env(
+        row[f"{p}.count"], row[f"{p}.min"], row[f"{p}.max"],
+        row[f"{p}.sum"], row[f"{p}.sumsq"], float(body.get("sigma", 2.0)))
+
+
+def _extended_stats_env(cnt, mn, mx, s, sq, sigma: float) -> dict:
+    """The ES extended_stats envelope from count/min/max/sum/sum of
+    squares — shared by the metric and extended_stats_bucket. ES's
+    ``variance`` is the POPULATION variance, derived from the sums and
+    clamped at 0 against floating-point cancellation."""
+    env: dict[str, Any] = {
+        "count": cnt, "min": mn, "max": mx,
+        "sum": s if s is not None else 0, "sum_of_squares": sq,
+        "avg": None, "variance": None, "variance_population": None,
+        "variance_sampling": None, "std_deviation": None,
+        "std_deviation_population": None, "std_deviation_sampling": None,
+        "std_deviation_bounds": {
+            "upper": None, "lower": None,
+            "upper_population": None, "lower_population": None,
+            "upper_sampling": None, "lower_sampling": None,
+        },
+    }
+    if cnt:
+        avg = s / cnt
+        var_p = max(sq / cnt - avg * avg, 0.0)
+        var_s = (max(sq - cnt * avg * avg, 0.0) / (cnt - 1)
+                 if cnt > 1 else None)
+        sd_p = var_p ** 0.5
+        sd_s = var_s ** 0.5 if var_s is not None else None
+        env.update({
+            "avg": avg, "variance": var_p, "variance_population": var_p,
+            "variance_sampling": var_s, "std_deviation": sd_p,
+            "std_deviation_population": sd_p,
+            "std_deviation_sampling": sd_s,
+            "std_deviation_bounds": {
+                "upper": avg + sigma * sd_p, "lower": avg - sigma * sd_p,
+                "upper_population": avg + sigma * sd_p,
+                "lower_population": avg - sigma * sd_p,
+                "upper_sampling":
+                    (avg + sigma * sd_s) if sd_s is not None else None,
+                "lower_sampling":
+                    (avg - sigma * sd_s) if sd_s is not None else None,
+            },
+        })
+    return env
+
+
+def _percentile_ranks_parts(body, gate, _):
+    vals = body.get("values")
+    if not isinstance(vals, list) or not vals:
+        raise DslError("percentile_ranks needs a non-empty values list")
+    # EXACT rank: share of non-null values <= v (ES interpolates a
+    # t-digest — the cardinality/percentiles exactness divergence)
+    src = _gated(body, gate)
+    return [(f"<{float(v)}",
+             F.sum(F.when(src <= F.lit(v), 1).otherwise(0)) * 100.0
+             / F.count(src)) for v in vals]
+
+
+def _percentile_ranks_read(row, p, body, _):
+    return {"values": {str(float(v)): row[f"{p}<{float(v)}"]
+                       for v in body.get("values", [])}}
+
+
+def _missing_parts(body, gate, _):
+    # docs whose field is null — ES's missing agg (no script form)
+    if not isinstance(body, dict) or body.get("field") is None:
+        raise DslError("missing aggregation requires a field")
+    cond = F.col(body["field"]).isNull()
+    return [("", _count_if(cond if gate is None else gate & cond))]
+
+
+def _weighted_avg_parts(body, gate, _):
+    # no top-level field: value/weight sub-objects; ES skips docs where
+    # either side is (still) null after the missing substitutions
+    v, w = body.get("value") or {}, body.get("weight") or {}
+    if not (isinstance(v, dict) and v.get("field")
+            and isinstance(w, dict) and w.get("field")):
+        raise DslError("weighted_avg needs value.field and weight.field")
+    vc, wc = _gated(v, gate), _gated(w, gate)
+    both = vc.isNotNull() & wc.isNotNull()
+    return [(".vw", F.sum(F.when(both, vc * wc))),
+            (".w", F.sum(F.when(both, wc)))]
+
+
+def _weighted_avg_read(row, p, body, _):
+    w = row[f"{p}.w"]
+    return {"value": (row[f"{p}.vw"] / w) if w else None}
+
+
+def _scripted_metric_parts(body, gate, _):
+    # the deterministic init/map/combine/reduce subset compiles to ONE
+    # aggregate Column (plans/scripted_metric.py); its map script sees
+    # every row, so it cannot be restricted to a filter's rows
+    from sql_database_to_elastic_datalake_spark.plans.scripted_metric \
+        import scripted_metric_column
+
+    if gate is not None:
+        raise DslError(
+            "scripted_metric under a filter/filters aggregation is not "
+            "supported (its map script cannot be gated)")
+    return [("", scripted_metric_column(body))]
+
+
+def _filter_parts(body, gate, inner):
+    # a filter sub-agg with metric-only children rides the SAME job as
+    # its parent: its doc count and children gated by its predicate
+    from sql_database_to_elastic_datalake_spark.plans.es_dsl import _ns
+
+    pred = _ns(compile_dsl(body))
+    if gate is not None:
+        pred = gate & pred
+    return [("|doc_count", _count_if(pred)),
+            *((f"|{k}", c) for k, c in _metric_parts(inner, pred))]
+
+
+def _filter_read(row, p, body, inner):
+    return {"doc_count": row[f"{p}|doc_count"],
+            **_metric_envelope(row, inner, f"{p}|")}
 
 
 def bucket_key(kind: str, body: dict) -> Column:
@@ -733,7 +632,7 @@ def _terms_order(body: dict, sub_aggs: dict | None) -> list[Column]:
                 raise DslError(
                     f"malformed sub-agg spec for terms order {target!r}")
             if kind == "stats":
-                if stat not in ("count", "min", "max", "avg", "sum"):
+                if stat not in dict(_STATS):
                     raise DslError(
                         f"unknown stats path in terms order {target!r}")
                 c = F.col(f"`{base}.{stat}`")
@@ -767,12 +666,12 @@ def _partition_spec(which: str, spec: dict) -> tuple[int, int]:
 
 
 def _include_exclude_pred(key: Column, body: dict) -> Column | None:
-    """ES ``terms`` ``include``/``exclude`` (r7 — Kibana's bucket
+    """ES ``terms`` ``include``/``exclude`` (Kibana's bucket
     filtering): exact-value lists (``isin``) or whole-value-anchored
     regex strings (Lucene semantics), applied to the BUCKET KEY before
     ordering/truncation so ``size`` picks among the surviving terms.
 
-    r10: the partition form ``{"partition": p, "num_partitions": n}``
+    The partition form ``{"partition": p, "num_partitions": n}``
     — Kibana's high-cardinality pager — keeps keys whose md5 bucket is
     p (the engine's deterministic-hash convention). DOCUMENTED
     DIVERGENCE: ES partitions on its own term hash, so WHICH keys land
@@ -834,7 +733,7 @@ def terms_frame(
     parameter folds null keys into a named bucket (via
     :func:`bucket_key`); ``min_doc_count`` drops small buckets BEFORE
     the TakeOrdered."""
-    size = int(body.get("size", 10))
+    size = _size(body, 10, "terms")
     min_dc = int(body.get("min_doc_count", 1))
     key = bucket_key("terms", body)
     src = df.filter(key.isNotNull())
@@ -1010,7 +909,7 @@ def multi_terms_frame(
         if s.get("missing") is not None:
             c = F.coalesce(c, F.lit(s["missing"]))
         keys.append(c.alias(f"k{i}"))
-    size = int(body.get("size", 10))
+    size = _size(body, 10, "multi_terms")
     min_dc = int(body.get("min_doc_count", 1))
     pred = F.lit(True)
     for k in keys:
@@ -1090,7 +989,7 @@ def rare_terms_frame(df: DataFrame, body: dict) -> DataFrame:
 
 
 def string_stats_frame(df: DataFrame, body) -> DataFrame:
-    """Flat rows for ``string_stats`` (r9): one row per distinct
+    """Flat rows for ``string_stats``: one row per distinct
     character — ``ch, n, prob`` — with the length statistics
     (``cnt, min_length, max_length, avg_length``) broadcast onto every
     row (the hits_envelope totals pattern). The entropy ES serves is
@@ -1143,7 +1042,7 @@ def string_stats_frame(df: DataFrame, body) -> DataFrame:
 
 
 def boxplot_frame(df: DataFrame, body) -> DataFrame:
-    """One-row frame for ``boxplot`` (r9): ``min, max, q1, q2, q3``
+    """One-row frame for ``boxplot``: ``min, max, q1, q2, q3``
     (exact interpolated quantiles — ES approximates with TDigest, the
     same exactness divergence as percentiles) plus the Tukey whiskers
     ``lower``/``upper`` — the nearest values inside
@@ -1178,7 +1077,7 @@ def boxplot_frame(df: DataFrame, body) -> DataFrame:
 
 
 def t_test_frame(df: DataFrame, body) -> DataFrame:
-    """One-row frame for ``t_test`` (r9): group moments and the
+    """One-row frame for ``t_test``: group moments and the
     t-statistic, all Spark column algebra in ONE conditional-aggregate
     pass (no per-group scans — ES evaluates both filters per shard the
     same way).
@@ -1367,7 +1266,7 @@ def _matrix_source(df: DataFrame, body) -> tuple[DataFrame, list[str]]:
 
 
 def matrix_stats_frame(df: DataFrame, body) -> DataFrame:
-    """One-row frame for ``matrix_stats`` (r9): doc_count, per-field
+    """One-row frame for ``matrix_stats``: doc_count, per-field
     mean/variance and the upper-triangle covariance + correlation
     matrix, derived from raw moment sums (n, Σx, Σx², Σxy) in FIXED
     operation order — ONE conditional-aggregate pass over the listwise-
@@ -1415,7 +1314,7 @@ def _geo_line_envelope(df: DataFrame, body,
     """The ES ``geo_line`` response: a GeoJSON Feature whose
     LineString connects each doc's point in ``sort``-field order —
     the vessel-track / GPS-trail aggregation. The transfer is bounded
-    IN-PLAN (r14, ADVICE): ``orderBy(sort).limit(size + 1)`` compiles
+    IN-PLAN: ``orderBy(sort).limit(size + 1)`` compiles
     to TakeOrderedAndProject — per-partition top-k then a driver merge
     of ≤ size+1 rows per partition — so a large corpus never
     concentrates every point into one aggregation row. Docs missing
@@ -1435,12 +1334,8 @@ def _geo_line_envelope(df: DataFrame, body,
     order = str(body.get("sort_order", "asc")).lower()
     if order not in ("asc", "desc"):
         raise DslError(f"unknown geo_line sort_order {order!r}")
-    size = body.get("size", 10000)
-    if isinstance(size, bool) or not isinstance(size, int) \
-            or not 1 <= size <= 10000:
-        raise DslError(
-            "geo_line size must be an integer in [1, 10000] (the ES "
-            "cap — it bounds the driver transfer here too)")
+    # ES's cap — it bounds the driver transfer here too
+    size = _size(body, 10000, "geo_line", lo=1, hi=10000)
     include_sort = body.get("include_sort", False)
     if not isinstance(include_sort, bool):
         raise DslError("geo_line include_sort must be a boolean")
@@ -1825,6 +1720,63 @@ def variable_width_histogram_frame(df: DataFrame, body: dict) -> DataFrame:
     )
 
 
+def _ranges(body: dict, kind: str) -> list[dict]:
+    """The validated ``ranges`` of a range-family agg: a non-empty list
+    of objects on a field (named 400s, never a TypeError)."""
+    ranges = body.get("ranges")
+    if body.get("field") is None or not isinstance(ranges, list) \
+            or not ranges:
+        raise DslError(
+            f"{kind} aggregation requires field and a non-empty ranges "
+            "list")
+    for r in ranges:
+        if not isinstance(r, dict):
+            raise DslError(
+                f"malformed {kind} entry {r!r} (each range is an object)")
+    return ranges
+
+
+def _band_pred(c: Column, r: dict, lit=F.lit) -> Column:
+    """One band's membership: ``from`` inclusive, ``to`` exclusive."""
+    pred = c.isNotNull()
+    if r.get("from") is not None:
+        pred = pred & (c >= lit(r["from"]))
+    if r.get("to") is not None:
+        pred = pred & (c < lit(r["to"]))
+    return pred
+
+
+def _band(r: dict, doc_count, render=None) -> dict:
+    """One range/date_range/ip_range/geo_distance band envelope: the
+    doc count, the bounds it sets (``render`` turns a bound into its
+    value and ``*_as_string`` twin) and its key — the entry's own, else
+    ``from-to`` with ``*`` for an open end."""
+    b: dict[str, Any] = {"doc_count": doc_count}
+    parts = []
+    for end in ("from", "to"):
+        if r.get(end) is None:
+            parts.append("*")
+            continue
+        b[end], text = render(r[end]) if render else (r[end], None)
+        if text is not None:
+            b[f"{end}_as_string"] = text
+        parts.append(str(b[end]) if text is None else text)
+    b["key"] = r.get("key", "-".join(parts))
+    return b
+
+
+def _render_buckets(buckets: list, body: dict, ranged: bool) -> dict:
+    """``{"buckets": [...]}``, or an object under ES ``keyed: true``:
+    range bands drop their inline key (it IS the object key); histogram
+    buckets keep it and key by ``key_as_string`` when dated."""
+    if not body.get("keyed"):
+        return {"buckets": buckets}
+    if ranged:
+        return {"buckets": {b.pop("key"): b for b in buckets}}
+    return {"buckets": {str(b.get("key_as_string", b["key"])): b
+                        for b in buckets}}
+
+
 def range_frame(
     df: DataFrame, body: dict, sub_aggs: dict | None = None,
     is_date: bool = False,
@@ -1832,14 +1784,11 @@ def range_frame(
     """All ``range`` bands in ONE aggregation job. ES allows bands to
     overlap, so each is an independent conditional aggregate, not a
     partition of the rows; the output is one row per band in request
-    order (``band_index`` preserves it). ``is_date`` (the
-    ``date_range`` agg, r7) compares against parsed timestamp bounds;
-    date-math bounds (``now-1M``) are a named 400 — the engine has no
-    "now" (a deterministic lake query must not depend on wall clock)."""
-    field = body.get("field")
-    ranges = body.get("ranges")
-    if field is None or not ranges:
-        raise DslError("range aggregation requires field and ranges")
+    order (``band{i}.doc_count``). ``is_date`` (the ``date_range`` agg)
+    compares against parsed timestamp bounds; date-math bounds
+    (``now-1M``) are a named 400 — the engine has no "now" (a
+    deterministic lake query must not depend on wall clock)."""
+    ranges = _ranges(body, "date_range" if is_date else "range")
     if sub_aggs:
         raise DslError(
             "metric sub-aggregations under a range agg are not supported "
@@ -1860,19 +1809,11 @@ def range_frame(
             return F.timestamp_millis(F.lit(int(v)))
         return F.to_timestamp(F.lit(v))
 
-    c = F.col(field)
-    per_band: list[Column] = []
-    for i, r in enumerate(ranges):
-        cond = c.isNotNull()
-        if "from" in r and r["from"] is not None:
-            cond = cond & (c >= lit(r["from"]))
-        if "to" in r and r["to"] is not None:
-            cond = cond & (c < lit(r["to"]))
-        per_band.append(
-            F.sum(F.when(cond, 1).otherwise(0)).cast("bigint")
-            .alias(f"band{i}.doc_count")
-        )
-    return df.agg(*per_band)
+    c = F.col(body["field"])
+    return df.agg(*[
+        _count_if(_band_pred(c, r, lit)).alias(f"band{i}.doc_count")
+        for i, r in enumerate(ranges)
+    ])
 
 
 def top_hits_frame(
@@ -1890,7 +1831,7 @@ def top_hits_frame(
     determinism divergence as terms ordering)."""
     from pyspark.sql import Window
 
-    size = int(body.get("size", 3))
+    size = _size(body, 3, "top_hits")
     order: list[Column] = []
     for s in body.get("sort") or []:
         if isinstance(s, str):
@@ -1938,15 +1879,15 @@ def composite_frame(
 
     ``sources`` may mix ``terms`` / ``histogram`` / ``date_histogram``
     keys. ES's default ``missing_bucket=false`` applies: rows with a
-    null key column are excluded; ``missing_bucket: true`` (r7 —
-    Kibana's paged group-by over sparse fields) keeps them as a null
+    null key column are excluded; ``missing_bucket: true`` (Kibana's
+    paged group-by over sparse fields) keeps them as a null
     key that sorts FIRST (ES's default missing_order), including
     through the ``after`` cursor.
     """
     sources = body.get("sources")
     if not isinstance(sources, list) or not sources:
         raise DslError("composite requires a non-empty sources list")
-    size = int(body.get("size", 10))
+    size = _size(body, 10, "composite")
     names: list[str] = []
     keys: list[Column] = []
     kinds: list[str] = []
@@ -1960,7 +1901,7 @@ def composite_frame(
             raise DslError(f"composite source {name!r} must have one kind")
         kind, kbody = next(iter(spec.items()))
         # composite sources take the key expression's inputs plus
-        # missing_bucket and per-source order (r7); anything else
+        # missing_bucket and per-source order; anything else
         # would change results silently if ignored → 400
         allowed = {"field", "interval", "calendar_interval",
                    "fixed_interval", "time_zone", "offset",
@@ -2030,7 +1971,7 @@ def composite_frame(
 _LEVEL_KINDS = ("terms", "histogram", "date_histogram")
 
 #: hard cap on the flat composite-key rows a nested chain may collect
-#: (the driver-memory bound the r6 advisory asked to enforce in-plan)
+#: (the driver-memory bound, enforced in-plan)
 _NESTED_FLAT_BUDGET = 100_000
 
 
@@ -2043,9 +1984,9 @@ def _split_chains(
     path: ``levels[i] = (agg_name, kind, body)`` top-down,
     ``metrics_per_level[i]`` the metric sub-aggs attaching to
     level-``i`` buckets, ``top_hits`` the ``top_hits`` specs at the
-    chain's DEEPEST level (r7 — named errors above it).
+    chain's DEEPEST level (named errors above it).
 
-    SIBLING bucket sub-aggs (r7 — previously a named error) branch the
+    SIBLING bucket sub-aggs branch the
     walk: each sibling becomes its own chain sharing the ancestor
     prefix, and every shared ancestor level carries the SAME metric
     dict in every chain — so each chain's driver-side assembly orders
@@ -2053,23 +1994,21 @@ def _split_chains(
     :func:`run_aggs` graft the sibling subtrees onto one response tree
     by bucket key. Cost: one composite-key shuffle per leaf chain
     (ES's own cost model — every sibling is its own aggregation)."""
-    if isinstance(body, dict) and body.get("keyed"):
-        raise DslError(
-            "keyed is not supported inside a nested bucket chain "
-            "(the chain response is assembled as lists)"
-        )
     chains: list = []
 
     def walk(levels: list, mets_prefix: list, sub: dict | None) -> None:
-        sub = sub or {}
+        if isinstance(levels[-1][2], dict) and levels[-1][2].get("keyed"):
+            raise DslError(
+                "keyed is not supported inside a nested bucket chain "
+                "(the chain response is assembled as lists)"
+            )
         buckets: dict = {}
         mets: dict = {}
         ths: dict = {}
-        for n, s in sub.items():
+        for n, s in (sub or {}).items():
             if not isinstance(s, dict):
                 raise DslError(f"aggregation {n!r} must be an object")
-            k = next((x for x in s if x not in ("aggs", "aggregations")),
-                     None)
+            k = _agg_kind(s)
             if k in _LEVEL_KINDS:
                 buckets[n] = s
             elif k == "top_hits":
@@ -2092,15 +2031,9 @@ def _split_chains(
             chains.append((levels, mets_prefix + [mets], ths))
             return
         for n, s in buckets.items():
-            k = next(x for x in s if x not in ("aggs", "aggregations"))
+            k = _agg_kind(s)
             check_agg_keys(k, s[k])
-            if isinstance(s[k], dict) and s[k].get("keyed"):
-                raise DslError(
-                    "keyed is not supported inside a nested bucket "
-                    "chain (the chain response is assembled as lists)"
-                )
-            walk(levels + [(n, k, s[k])], mets_prefix + [mets],
-                 s.get("aggs") or s.get("aggregations"))
+            walk(levels + [(n, k, s[k])], mets_prefix + [mets], _subs(s))
 
     walk([(name, kind, body)], [], sub)
     return chains
@@ -2143,10 +2076,9 @@ def _component_cols(
     cols: list[Column] = []
     for li, mets in enumerate(metrics):
         for name, spec in mets.items():
-            if not isinstance(spec, dict) or len(spec) != 1:
-                raise DslError(
-                    f"aggregation {name!r} must have exactly one type")
-            kind, body = next(iter(spec.items()))
+            kind = _agg_kind(spec, name)
+            body = spec[kind]
+            _check_subs(name, kind, _subs(spec))
             field = body.get("field") if isinstance(body, dict) else None
             if field is None:
                 raise DslError(
@@ -2235,7 +2167,8 @@ def _rollup_metrics(rows: list, mets: dict, li: int) -> dict:
     """Metric envelopes for one bucket from its flat rows' components."""
     out: dict[str, Any] = {}
     for name, spec in mets.items():
-        kind, body = next(iter(spec.items()))
+        kind = _agg_kind(spec)
+        body = spec[kind]
         p = f"{li}|{name}|"
 
         def vals(comp: str) -> list:
@@ -2357,7 +2290,7 @@ def _metric_order_getter(target: str, mets: dict, li: int):
         raise DslError(
             f"terms order target {target!r} has a malformed sub-agg spec")
     if mkind == "stats":
-        if stat not in ("count", "min", "max", "avg", "sum"):
+        if stat not in dict(_STATS):
             raise DslError(
                 f"unknown stats path in terms order {target!r}")
     elif mkind in ("percentiles", "missing"):
@@ -2390,7 +2323,7 @@ def _assemble_levels(
     ]
     total = sum(t[2] for t in items)
     if kind == "terms":
-        size = int(body.get("size", 10))
+        size = _size(body, 10, "terms")
         min_dc = int(body.get("min_doc_count", 1))
         if body.get("include") is not None \
                 or body.get("exclude") is not None:
@@ -2420,9 +2353,8 @@ def _assemble_levels(
                 items.sort(key=lambda t: t[0],
                            reverse=direction == "desc")
             else:
-                # order by a metric sub-agg AT THIS LEVEL (r7 —
-                # Kibana's "order by metric" on a nested terms
-                # panel): the metric's mergeable components already
+                # order by a metric sub-agg AT THIS LEVEL (Kibana's
+                # "order by metric" on a nested terms panel): the metric's mergeable components already
                 # rode the one shuffle, so its per-bucket value
                 # rolls up from the item's flat rows exactly like
                 # the envelope's — no extra job. Null metric values
@@ -2501,13 +2433,10 @@ def _assemble_levels(
 #: (ES enforces the same restriction — a running diff over unordered
 #: terms buckets is meaningless); the script family works under any
 #: multi-bucket agg, terms included.
-_SIBLING_PIPELINES = ("avg_bucket", "sum_bucket", "min_bucket",
-                      "max_bucket", "stats_bucket",
-                      "percentiles_bucket", "extended_stats_bucket")
 _ORDERED_PIPELINES = ("cumulative_sum", "derivative", "serial_diff",
                       "moving_fn")
 _SCRIPT_PIPELINES = ("bucket_script", "bucket_selector", "bucket_sort")
-#: normalize (r9) rescales each bucket's value against the whole
+#: normalize rescales each bucket's value against the whole
 #: sibling list — order-free, so any multi-bucket parent qualifies
 #: (ES allows it under terms as well as histograms)
 _VALUE_PIPELINES = ("normalize",)
@@ -2832,8 +2761,8 @@ def _apply_parent_pipelines(
     selectors: list[tuple[str, dict]] = []
     sorts: list[tuple[str, dict]] = []
     for pname, pspec in pipes.items():
-        pk, pb = next(iter(pspec.items()))
-        check_agg_keys(pk, pb)
+        pk = _agg_kind(pspec)
+        pb = pspec[pk]
         _check_gap_policy(pb if isinstance(pb, dict) else {})
         if pk in _ORDERED_PIPELINES and not ordered:
             raise DslError(
@@ -2962,7 +2891,6 @@ def _sibling_pipeline_envelope(kind: str, body: dict, out: dict) -> dict:
     agg's per-bucket metric to one value. ``buckets_path`` is
     ``"sibling>metric"`` (or ``sibling>_count``); null values skip —
     ES's default gap policy."""
-    check_agg_keys(kind, body)
     _check_gap_policy(body)
     path = body.get("buckets_path")
     if not path or ">" not in path:
@@ -3007,58 +2935,15 @@ def _sibling_pipeline_envelope(kind: str, body: dict, out: dict) -> dict:
             "sum": sum(vals) if vals else 0,
         }
     if kind == "extended_stats_bucket":
-        # r14: stats_bucket plus the moment family — the SAME
-        # sum/sum-of-squares arithmetic the extended_stats METRIC
-        # derives its envelope from (ES shares the implementation
-        # between them too). Floats throughout: a decimal-typed
-        # sibling metric would poison the sqrt
+        # stats_bucket plus the moment family — the extended_stats
+        # metric's envelope (ES shares the implementation too). Floats
+        # throughout: a decimal-typed sibling metric would poison sqrt
         vals = [float(v) for v in vals]
-        cnt = len(vals)
-        s = sum(vals)
-        sq = sum(v * v for v in vals)
-        sigma = float(body.get("sigma", 2.0))
-        env: dict[str, Any] = {
-            "count": cnt,
-            "min": min(vals) if vals else None,
-            "max": max(vals) if vals else None,
-            "sum": s if vals else 0,
-            "sum_of_squares": sq if vals else None,
-            "avg": None, "variance": None,
-            "variance_population": None, "variance_sampling": None,
-            "std_deviation": None, "std_deviation_population": None,
-            "std_deviation_sampling": None,
-            "std_deviation_bounds": {
-                "upper": None, "lower": None,
-                "upper_population": None, "lower_population": None,
-                "upper_sampling": None, "lower_sampling": None,
-            },
-        }
-        if cnt:
-            avg = s / cnt
-            var_p = max(sq / cnt - avg * avg, 0.0)
-            var_s = (max(sq - cnt * avg * avg, 0.0) / (cnt - 1)
-                     if cnt > 1 else None)
-            sd_p = var_p ** 0.5
-            sd_s = var_s ** 0.5 if var_s is not None else None
-            env.update({
-                "avg": avg, "variance": var_p,
-                "variance_population": var_p,
-                "variance_sampling": var_s,
-                "std_deviation": sd_p,
-                "std_deviation_population": sd_p,
-                "std_deviation_sampling": sd_s,
-                "std_deviation_bounds": {
-                    "upper": avg + sigma * sd_p,
-                    "lower": avg - sigma * sd_p,
-                    "upper_population": avg + sigma * sd_p,
-                    "lower_population": avg - sigma * sd_p,
-                    "upper_sampling": (avg + sigma * sd_s)
-                    if sd_s is not None else None,
-                    "lower_sampling": (avg - sigma * sd_s)
-                    if sd_s is not None else None,
-                },
-            })
-        return env
+        return _extended_stats_env(
+            len(vals), min(vals, default=None), max(vals, default=None),
+            sum(vals) if vals else None,
+            sum(v * v for v in vals) if vals else None,
+            float(body.get("sigma", 2.0)))
     if not vals:
         return {"value": None if kind != "sum_bucket" else 0}
     if kind == "avg_bucket":
@@ -3092,9 +2977,8 @@ def _attach_chain_top_hits(
     df: DataFrame, frame: DataFrame, rows: list, tree: dict,
     levels: list, ths: dict
 ) -> None:
-    """``top_hits`` at the DEEPEST level of a nested chain (r7 —
-    Kibana's "top documents per group per bucket"; previously a named
-    error). One window job per request: candidate rows are restricted
+    """``top_hits`` at the DEEPEST level of a nested chain (Kibana's
+    "top documents per group per bucket"). One window job per request: candidate rows are restricted
     to the RETURNED innermost buckets via a broadcast semi-join on the
     composite key (volume ≤ returned buckets × size — the response
     bound), with WindowGroupLimit pre-truncating per partition."""
@@ -3150,7 +3034,7 @@ def _attach_chain_top_hits(
     )
 
     for th_name, th_body in ths.items():
-        size = int(th_body.get("size", 3))
+        size = _size(th_body, 3, "top_hits")
         order: list[Column] = []
         for s in th_body.get("sort") or []:
             if isinstance(s, str):
@@ -3204,19 +3088,18 @@ def significant_terms_frame(
     field = body.get("field")
     if field is None:
         raise DslError("significant_terms requires a field")
-    size = int(body.get("size", 10))
+    size = _size(body, 10, "significant_terms")
     min_dc = int(body.get("min_doc_count", 3))
     key = F.col(field)
     fgc = (fg.filter(key.isNotNull()).groupBy(key.alias("key"))
            .agg(F.count(F.lit(1)).alias("doc_count")))
-    # ONE background pass (r14, guide §2.2 fewer passes): group
-    # WITHOUT the null filter so the total doc count bt (which counts
-    # null-key docs too, ES's doc_count basis) rides the grouped
-    # result as an unpartitioned-window sum — term-cardinality rows,
-    # one single-partition gather. The old shape paid a SECOND full
-    # background scan for that one scalar (and a two-branch reuse
-    # attempt fails: the key-null filter pushes into one branch's
-    # scan and breaks exchange-subtree identity).
+    # ONE background pass: group WITHOUT the null filter so the total
+    # doc count bt (which counts null-key docs too, ES's doc_count
+    # basis) rides the grouped result as an unpartitioned-window sum —
+    # term-cardinality rows, one single-partition gather, no second
+    # background scan for that one scalar (a two-branch reuse fails:
+    # the key-null filter pushes into one branch's scan and breaks
+    # exchange-subtree identity).
     from pyspark.sql.window import Window as _W
 
     bgc = (
@@ -3262,7 +3145,7 @@ def significant_text_frame(
     split/filter/array_distinct/explode are native expressions.
     ``min_doc_count`` defaults to 3 like ES.
 
-    ``bg_pred`` is ES's ``background_filter`` (r10): the background
+    ``bg_pred`` is ES's ``background_filter``: the background
     scope narrows to rows matching it. The one-scan contract holds —
     the scan covers ``fg_pred OR bg_pred`` rows with TWO flag columns
     and the bg count becomes its own conditional sum."""
@@ -3274,7 +3157,7 @@ def significant_text_frame(
     field = body.get("field")
     if field is None:
         raise DslError("significant_text requires a field")
-    size = int(body.get("size", 10))
+    size = _size(body, 10, "significant_text")
     min_dc = int(body.get("min_doc_count", 3))
     toks = F.array_distinct(F.filter(
         F.split(F.lower(F.col(field).cast("string")),
@@ -3347,7 +3230,7 @@ def categorize_text_frame(df: DataFrame, body: dict) -> DataFrame:
     field = body.get("field")
     if field is None:
         raise DslError("categorize_text requires a field")
-    size = int(body.get("size", 10))
+    size = _size(body, 10, "categorize_text")
     min_dc = int(body.get("min_doc_count", 1))
     thresh = body.get("similarity_threshold")
     if thresh is not None and thresh != 100:
@@ -3458,7 +3341,7 @@ def frequent_item_sets_result(df: DataFrame, body: dict) -> list[dict]:
             or not (0 < float(min_support) <= 1):
         raise DslError(
             "frequent_item_sets minimum_support must be in (0, 1]")
-    size = int(body.get("size", 10))
+    size = _size(body, 10, "frequent_item_sets")
 
     from pyspark.sql.types import ArrayType
 
@@ -3711,36 +3594,8 @@ def filters_frame(
         preds[str(body.get("other_bucket_key", "_other_"))] = other
     cols: list[Column] = []
     for name, pred in preds.items():
-        cols.append(
-            F.sum(F.when(pred, 1).otherwise(0)).cast("bigint")
-            .alias(f"{name} doc_count")
-        )
-        for mname, spec in (sub_aggs or {}).items():
-            kind = _agg_kind(spec)
-            if kind is None:
-                raise DslError(
-                    f"malformed sub-aggregation spec {mname!r}")
-            _reject_metric_subaggs(mname, kind, spec)
-            mbody = spec[kind]
-            if mbody.get("field") is None:
-                raise DslError(
-                    f"aggregation {mname!r} ({kind}) requires a field")
-            check_agg_keys(kind, mbody)
-            gated = F.when(pred, _metric_source(mbody))
-            if kind in _METRICS:
-                cols.append(_METRICS[kind](gated)
-                            .alias(f"{name} {mname}"))
-            elif kind == "stats":
-                for stat, fn in (("count", F.count), ("min", F.min),
-                                 ("max", F.max), ("avg", F.avg),
-                                 ("sum", F.sum)):
-                    cols.append(fn(gated).alias(
-                        f"{name} {mname}.{stat}"))
-            else:
-                raise DslError(
-                    f"unsupported sub-aggregation kind {kind!r} under "
-                    "a filters aggregation"
-                )
+        cols.append(_count_if(pred).alias(f"{name} doc_count"))
+        cols.extend(_metric_cols(sub_aggs, f"{name} ", gate=pred))
     return df.agg(*cols)
 
 
@@ -3754,64 +3609,8 @@ def filter_frame(
     predicate, via the same compiler the search path uses — one
     conditional-aggregation job, no second scan of the matched set."""
     pred = compile_dsl(body, schema_fields=schema_fields)
-    cols = [F.sum(F.when(pred, 1).otherwise(0)).cast("bigint")
-            .alias("doc_count")]
-    cols.extend(_gated_metric_cols(pred, sub_aggs or {}))
-    return df.agg(*cols)
-
-
-def _reject_metric_subaggs(name: str, kind: str, spec: dict) -> None:
-    """A metric agg cannot accept sub-aggregations (ES names the same
-    error). Key order is client-controlled, so the ``aggs`` block may
-    precede the type — now that dispatch resolves the type via
-    :func:`_agg_kind` (r8 ADVICE: these sites used the first key), the
-    stray block must be rejected rather than silently dropped."""
-    nested = spec.get("aggs") or spec.get("aggregations")
-    if nested:
-        raise DslError(
-            f"sub-aggregations under {name!r} ({kind}) are not "
-            "supported here"
-        )
-
-
-def _gated_metric_cols(
-    pred: Column, sub_aggs: dict, prefix: str = ""
-) -> list[Column]:
-    """Metric aggregate Columns gated by a predicate — the shared
-    conditional-aggregation shape of the filter/filters aggs and of
-    filter sub-aggs riding a parent bucket's groupBy."""
-    cols: list[Column] = []
-    for name, spec in sub_aggs.items():
-        kind = _agg_kind(spec)
-        if kind is None:
-            raise DslError(f"malformed sub-aggregation spec {name!r}")
-        _reject_metric_subaggs(name, kind, spec)
-        mbody = spec[kind]
-        field = mbody.get("field") if isinstance(mbody, dict) else None
-        if field is None:
-            raise DslError(f"aggregation {name!r} ({kind}) requires a field")
-        check_agg_keys(kind, mbody)
-        gated = F.when(pred, _metric_source(mbody))
-        if kind == "stats":
-            for stat, fn in (("count", F.count), ("min", F.min),
-                             ("max", F.max), ("avg", F.avg), ("sum", F.sum)):
-                cols.append(fn(gated).alias(f"{prefix}{name}.{stat}"))
-        elif kind == "percentiles":
-            for p in mbody.get("percents", _DEFAULT_PERCENTS):
-                cols.append(
-                    F.percentile(gated, F.lit(float(p) / 100.0))
-                    .alias(f"{prefix}{name}%{float(p)}")
-                )
-        elif kind == "missing":
-            cols.append(
-                F.sum(F.when(pred & F.col(field).isNull(), 1).otherwise(0))
-                .cast("bigint").alias(f"{prefix}{name}")
-            )
-        elif kind in _METRICS:
-            cols.append(_METRICS[kind](gated).alias(f"{prefix}{name}"))
-        else:
-            raise DslError(f"unsupported sub-aggregation kind {kind!r}")
-    return cols
+    return df.agg(_count_if(pred).alias("doc_count"),
+                  *_metric_cols(sub_aggs, gate=pred))
 
 
 def _key_envelope(v) -> Any:
@@ -3833,7 +3632,7 @@ def _java_to_strftime(fmt: str) -> str:
     """The common Java date-pattern subset (``yyyy-MM-dd HH:mm:ss`` and
     friends) → strftime. A letter run outside the implemented set is a
     named 400 — honoring ``format`` partially would silently change
-    ``key_as_string`` (the r6 advisory's accepted-and-ignored class)."""
+    ``key_as_string`` (an accepted-and-ignored knob)."""
     out: list[str] = []
     pos = 0
     for m in _JAVA_RUN_RE.finditer(fmt):
@@ -3910,10 +3709,7 @@ def _top_metrics_spec(body: dict) -> tuple[list[str], str, str, int]:
         raise DslError(f"malformed top_metrics sort {clause!r}")
     if sd not in ("asc", "desc"):
         raise DslError(f"unknown top_metrics sort order {sd!r}")
-    size = int(body.get("size", 1))
-    if size < 1:
-        raise DslError("top_metrics size must be >= 1")
-    return fields, str(sf), sd, size
+    return fields, str(sf), sd, _size(body, 1, "top_metrics", lo=1)
 
 
 def _top_metrics_rows(rows, fields: list[str], sf: str) -> list[dict]:
@@ -3932,9 +3728,8 @@ def _strip_nested_prefix(path: str, sub_aggs: dict | None) -> dict:
     fields either."""
     out: dict = {}
     for name, spec in (sub_aggs or {}).items():
-        if not isinstance(spec, dict) or len(spec) != 1:
-            raise DslError(f"aggregation {name!r} must have exactly one type")
-        kind, body = next(iter(spec.items()))
+        kind = _agg_kind(spec, name)
+        body = spec[kind]
         if not isinstance(body, dict) or not body.get("field"):
             raise DslError(
                 f"nested sub-aggregation {name!r} ({kind}) requires a "
@@ -3946,11 +3741,11 @@ def _strip_nested_prefix(path: str, sub_aggs: dict | None) -> dict:
                 f"nested sub-aggregation {name!r} must address fields "
                 f"under {path!r} (got {field!r})"
             )
-        out[name] = {kind: {**body, "field": field[len(path) + 1:]}}
+        out[name] = {**spec, kind: {**body, "field": field[len(path) + 1:]}}
     return out
 
 
-def _nested_envelope(df: DataFrame, path: str, sub: dict | None) -> dict:
+def _nested_agg(scope: _Scope, name: str, body: dict, sub: dict) -> dict:
     """The ES ``nested`` aggregation: switch scope to the elements of
     an array-of-struct column. Spark shape: ONE explode (a generator,
     no shuffle) carrying a parent row id; ``doc_count`` (total nested
@@ -3966,8 +3761,12 @@ def _nested_envelope(df: DataFrame, path: str, sub: dict | None) -> dict:
     tickets (src/sync_service.py label embedding) and its saved
     queries facet on them — this is the aggs half of the existing
     ``nested`` query leaf (plans/es_dsl.py)."""
+    from pyspark.sql import Observation
     from pyspark.sql.types import ArrayType, StructType
 
+    if not isinstance(body, dict) or not body.get("path"):
+        raise DslError("nested aggregation requires a path")
+    df, path = scope.df, str(body["path"])
     try:
         ftype = df.schema[path].dataType
     except KeyError:
@@ -3984,54 +3783,30 @@ def _nested_envelope(df: DataFrame, path: str, sub: dict | None) -> dict:
         .select("__pid", F.explode(path).alias("__e"))
         .select("__pid", F.col("__e.*"))
     )
-    env: dict[str, Any] = {}
-    sub = sub or {}
-    metrics: dict = {}
-    bucket_name = None
-    for name, spec in sub.items():
-        if not isinstance(spec, dict):
-            raise DslError(f"aggregation {name!r} must be an object")
-        kind = next((k for k in spec
-                     if k not in ("aggs", "aggregations")), None)
-        if kind == "terms":
-            if bucket_name is not None:
-                raise DslError(
-                    "one bucket sub-aggregation per nested scope is "
-                    "supported"
-                )
-            bucket_name = name
-        elif kind in _METRICS or kind in ("stats", "percentiles",
-                                          "missing"):
-            metrics[name] = spec
-        else:
+    terms, metrics = _pick(sub, ("terms",))
+    if len(terms) > 1:
+        raise DslError(
+            "one bucket sub-aggregation per nested scope is supported")
+    for name, spec in metrics.items():
+        if not _rides_job(spec):
             raise DslError(
-                f"unsupported sub-aggregation kind {kind!r} under "
-                "nested (metrics, or one terms bucket)"
-            )
-    from pyspark.sql import Observation
-
+                f"unsupported sub-aggregation kind {_agg_kind(spec)!r} "
+                "under nested (metrics, or one terms bucket)")
     obs = Observation()
     exo = ex.observe(obs, F.count(F.lit(1)).alias("n"))
-    if bucket_name is None:
-        # _metric_cols key-checks each body
+    if not terms:
         mstripped = _strip_nested_prefix(path, metrics)
-        if mstripped:
-            row = exo.agg(*_metric_cols(mstripped)).collect()[0]
-            env.update(_metric_envelope(row, mstripped))
-            env["doc_count"] = obs.get["n"]
-        else:
-            env["doc_count"] = ex.count()
-        return env
+        if not mstripped:
+            return {"doc_count": ex.count()}
+        row = exo.agg(*_metric_cols(mstripped)).collect()[0]
+        return {**_metric_envelope(row, mstripped), "doc_count": obs.get["n"]}
     if metrics:
         raise DslError(
             "metrics beside a terms bucket inside nested are not "
             "supported (put them under the terms bucket)"
         )
-    tspec = sub[bucket_name]
-    tbody = dict(next(iter(
-        v for k, v in tspec.items() if k == "terms")))
-    check_agg_keys("terms", tbody)
-    tsub = tspec.get("aggs") or tspec.get("aggregations") or {}
+    ((bucket_name, tspec),) = terms.items()
+    tbody = dict(tspec["terms"])
     tfield = str(tbody.get("field", ""))
     if not tfield.startswith(path + "."):
         raise DslError(
@@ -4039,23 +3814,8 @@ def _nested_envelope(df: DataFrame, path: str, sub: dict | None) -> dict:
             f"(got {tfield!r})"
         )
     tbody["field"] = tfield[len(path) + 1:]
-    reverse: list[str] = []
-    tmetrics: dict = {}
-    for name, spec in tsub.items():
-        kind = next((k for k in spec
-                     if k not in ("aggs", "aggregations")), None)
-        if kind == "reverse_nested":
-            check_agg_keys("reverse_nested", spec[kind])
-            if spec.get("aggs") or spec.get("aggregations"):
-                raise DslError(
-                    "sub-aggregations under reverse_nested are not "
-                    "supported"
-                )
-            reverse.append(name)
-        else:
-            tmetrics[name] = spec
+    reverse, tmetrics = _pick(_subs(tspec), ("reverse_nested",))
     tmetrics = _strip_nested_prefix(path, tmetrics)
-    size = int(tbody.get("size", 10))
     min_dc = int(tbody.get("min_doc_count", 1))
     key = bucket_key("terms", tbody)
     grouped = (
@@ -4068,47 +3828,16 @@ def _nested_envelope(df: DataFrame, path: str, sub: dict | None) -> dict:
     )
     if min_dc > 1:
         grouped = grouped.filter(F.col("doc_count") >= min_dc)
-    rows = grouped.orderBy(
-        *_terms_order(tbody, tmetrics)).limit(size).collect()
+    rows = grouped.orderBy(*_terms_order(tbody, tmetrics)).limit(
+        _size(tbody, 10, "terms")).collect()
     buckets = []
     for r in rows:
-        b = {"key": _key_envelope(r["key"]),
-             "doc_count": r["doc_count"],
-             **_metric_envelope(r, tmetrics)}
+        b = _bucket(r, tmetrics)
         for rn in reverse:
             b[rn] = {"doc_count": r[f"__rn|{rn}"]}
         buckets.append(b)
-    env["doc_count"] = obs.get["n"]
-    env[bucket_name] = {
-        "doc_count_error_upper_bound": 0,
-        "buckets": buckets,
-    }
-    return env
-
-
-
-#: Metric kinds that compile to aliased aggregate Columns and can
-#: therefore share ONE ``df.agg`` job (the run_aggs top-level fusion;
-#: r15 also fuses the children/parent scope-switch's doc_count into
-#: the same job).
-_FUSABLE_METRIC_KINDS = (
-    *_METRICS, "stats", "percentiles", "missing", "extended_stats",
-    "percentile_ranks", "weighted_avg", "scripted_metric",
-)
-
-
-def _agg_kind(spec):
-    """The agg-type key of one agg spec: the single key that is not
-    ``aggs``/``aggregations``/``meta``. ES JSON key order is
-    client-controlled, so ``meta`` (or the sub-``aggs`` block) may
-    legally precede the type — ``next(iter(spec))`` would mis-route
-    those specs. Returns None when the spec is malformed (zero or
-    several type keys); callers treat that as "not this partition" and
-    the main dispatcher raises the named error."""
-    if not isinstance(spec, dict):
-        return None
-    kinds = [k for k in spec if k not in ("aggs", "aggregations", "meta")]
-    return kinds[0] if len(kinds) == 1 else None
+    return {"doc_count": obs.get["n"], bucket_name: {
+        "doc_count_error_upper_bound": 0, "buckets": buckets}}
 
 
 def _strip_meta(sub_aggs):
@@ -4127,31 +3856,38 @@ def _strip_meta(sub_aggs):
     return out
 
 
+def _rides_job(spec, gated: bool = False) -> bool:
+    """True when the spec compiles to aggregate Columns of its parent's
+    job: a metric kind (the top-level fused job, children/parent), or
+    under a ``gated`` filter/filters agg also a filter, which gates its
+    own metric sub-aggs."""
+    entry = _KINDS.get(_agg_kind(spec))
+    return entry is not None and entry.metric is not None \
+        and (gated or not entry.subs)
 
-_METRIC_KINDS = (*_METRICS, "stats", "percentiles", "missing",
-                 "extended_stats", "percentile_ranks", "weighted_avg",
-                 "scripted_metric", "filter")
+
+def _pick(sub: dict, kinds) -> tuple[dict, dict]:
+    """Split sub-aggs into (those of ``kinds``, the rest), order kept;
+    the picked specs' keys and sub-aggregations are validated."""
+    picked = {n: s for n, s in sub.items() if _agg_kind(s) in kinds}
+    for n, s in picked.items():
+        kind = _agg_kind(s)
+        check_agg_keys(kind, s[kind])
+        _check_subs(n, kind, _subs(s))
+    return picked, {n: s for n, s in sub.items() if n not in picked}
 
 
-def _has_bucket_subs(sub) -> bool:
-    """True when any sub-agg is a bucket kind (needs scope recursion
-    rather than the one-job gated-metric path; `filter` counts as a
-    metric here because it rides the parent job gated)."""
-    return any(
-        isinstance(s, dict)
-        and next((x for x in s
-                  if x not in ("aggs", "aggregations", "meta")),
-                 None) not in _METRIC_KINDS
-        for s in (sub or {}).values()
-    )
+def _bucket(r, sub: dict, key=None) -> dict:
+    """One bucket of a grouped frame: key, doc_count, metric sub-aggs."""
+    return {"key": _key_envelope(r["key"]) if key is None else key,
+            "doc_count": r["doc_count"], **_metric_envelope(r, sub)}
 
 
 def _apply_moving_percentiles(
     df: DataFrame, kind: str, body: dict, sub: dict,
     rows: list, buckets: list, movpct: dict,
 ) -> None:
-    """ES ``moving_percentiles`` under a (date_)histogram (r14, r13
-    verdict #5): per bucket, the percentiles of the raw values in the
+    """ES ``moving_percentiles`` under a (date_)histogram: per bucket, the percentiles of the raw values in the
     sliding bucket window ``[i - window + shift, i + shift)`` — the
     same window convention as ``moving_fn``.
 
@@ -4175,7 +3911,6 @@ def _apply_moving_percentiles(
     key_col = bucket_key(kind, body)
     for pname, spec in movpct.items():
         pb = spec["moving_percentiles"]
-        check_agg_keys("moving_percentiles", pb)
         window = pb.get("window")
         if isinstance(window, bool) or not isinstance(window, int) \
                 or window < 1:
@@ -4270,7 +4005,6 @@ def _apply_cumulative_cardinality(
     key = bucket_key(kind, body)
     for pname, spec in cum_cards.items():
         pb = spec["cumulative_cardinality"]
-        check_agg_keys("cumulative_cardinality", pb)
         path = str(pb.get("buckets_path") or "")
         target = sub.get(path)
         if target is None or _agg_kind(target) != "cardinality":
@@ -4300,6 +4034,876 @@ def _apply_cumulative_cardinality(
             b[pname] = {"value": run}
 
 
+class _Scope(NamedTuple):
+    """The context a handler runs in: the matched frame, the schema
+    fields, the unfiltered table and the predicate that produced the
+    frame from it (significant_*), the join-field relation context
+    (children/parent), and the envelopes computed so far at this level
+    (sibling pipelines read them)."""
+    df: DataFrame
+    schema_fields: Any
+    background: DataFrame | None
+    background_pred: Column | None
+    relation_ctx: tuple | None
+    siblings: dict
+
+
+def _narrowed(scope: _Scope, frame: DataFrame, sub: dict, **kw) -> dict:
+    """A bucket over a narrowed frame — range bands with sub-trees,
+    filter(s) with bucket subs, global, sampler, children/parent: its
+    doc_count (one count job) plus the sub-aggs run recursively over
+    the frame, keeping the schema and background unless ``kw``
+    overrides them."""
+    env = {"doc_count": frame.count()}
+    if sub:
+        env.update(run_aggs(frame, sub, **{
+            "schema_fields": scope.schema_fields,
+            "background": scope.background, **kw}))
+    return env
+
+
+def _has_level_subs(sub: dict) -> bool:
+    return any(_agg_kind(s) in _LEVEL_KINDS for s in sub.values())
+
+
+def _chain_agg(scope: _Scope, name: str, kind: str, body: dict,
+               sub: dict) -> dict:
+    """A multi-level bucket chain: ONE shuffle PER LEAF CHAIN on its
+    composite key, the tree assembled from the flat frame(s). Sibling
+    bucket sub-aggs become separate chains whose assemblies truncate
+    the shared ancestor levels identically (same metrics ride every
+    chain), then graft onto one response tree by bucket key. Each
+    collect is HARD-BOUNDED: limit(B+1) caps the transfer and the
+    overflow is a named error, not a driver OOM."""
+    trees = []
+    for levels, per_level, ths in _split_chains(name, kind, body, sub):
+        frame = nested_levels_frame(scope.df, levels, per_level)
+        rows = frame.limit(_NESTED_FLAT_BUDGET + 1).collect()
+        if len(rows) > _NESTED_FLAT_BUDGET:
+            raise DslError(
+                f"nested aggregation {name!r} produces more than "
+                f"{_NESTED_FLAT_BUDGET} flat buckets before terms-size "
+                "truncation — narrow the levels or use a composite "
+                "aggregation (the paged bucket API) for unbounded key "
+                "domains"
+            )
+        tree = _assemble_levels(rows, levels, per_level, 0)
+        if ths:
+            _attach_chain_top_hits(scope.df, frame, rows, tree, levels, ths)
+        trees.append((levels, tree))
+    primary, merged = trees[0]
+    for levels_s, tree_s in trees[1:]:
+        d = next(i for i in range(min(len(primary), len(levels_s)))
+                 if primary[i][0] != levels_s[i][0])
+        _graft_sibling(merged, tree_s, levels_s, 0, d)
+    return merged
+
+
+def _hits_by_key(df: DataFrame, body: dict, rows: list,
+                 hits_body: dict) -> dict:
+    """Per returned ``terms`` bucket, its top rows (the window top-k
+    of :func:`top_hits_frame`), keyed like the bucket envelopes
+    (``_key_envelope``: datetime → epoch millis); a null field value
+    belongs to the ``missing`` bucket."""
+    hit_rows = top_hits_frame(df, bucket_key("terms", body),
+                              [r["key"] for r in rows], hits_body).collect()
+    by_key: dict = {}
+    for hr in hit_rows:
+        raw = hr[body["field"]]
+        if raw is None:
+            raw = body.get("missing")
+        by_key.setdefault(_key_envelope(raw), []).append(hr)
+    return by_key
+
+
+def _terms_agg(scope: _Scope, name: str, body: dict, sub: dict) -> dict:
+    """``terms``: TakeOrdered(size) buckets with their metric subs in one
+    job, ``sum_other_doc_count`` from one count job, then per-bucket
+    ``top_hits`` / ``top_metrics`` (one window job each) and parent
+    pipelines over the returned buckets."""
+    if _has_level_subs(sub):
+        return _chain_agg(scope, name, "terms", body, sub)
+    from sql_database_to_elastic_datalake_spark.plans.search import (
+        resolve_source_columns,
+    )
+
+    df = scope.df
+    hits, sub = _pick(sub, ("top_hits",))
+    tops, sub = _pick(sub, ("top_metrics",))
+    pipes, metrics = _pick(sub, _PARENT_PIPELINES)
+    rows = terms_frame(df, body, metrics).collect()
+    # bucket_key, not the raw column: a `missing` value means null-key
+    # docs belong to a bucket and count in the total; include/exclude
+    # scopes the total the same way it scopes the buckets
+    key = bucket_key("terms", body)
+    pred = key.isNotNull()
+    ie = _include_exclude_pred(key, body)
+    if ie is not None:
+        pred = pred & ie
+    total = df.filter(pred).count()
+    buckets = [_bucket(r, metrics) for r in rows]
+    for hname, hspec in hits.items():
+        hbody = hspec["top_hits"]
+        by_key = _hits_by_key(df, body, rows, hbody)
+        # `_source` restricts the RETURNED fields; the frame keeps
+        # every column so the bucket key stays readable
+        src = resolve_source_columns(df.columns, hbody.get("_source"))
+        for b in buckets:
+            b[hname] = {"hits": {
+                "total": {"value": b["doc_count"], "relation": "eq"},
+                "hits": [{"_source": {c: hr[c] for c in hr.asDict()
+                                      if c != "__rn" and c in src}}
+                         for hr in by_key.get(b["key"], [])],
+            }}
+    for tname, tspec in tops.items():
+        # Lens's "last value per bucket": the top_hits window plan
+        # projected to the sort + metric fields
+        fields, sf, sd, size = _top_metrics_spec(tspec["top_metrics"])
+        by_key = _hits_by_key(df.filter(F.col(sf).isNotNull()), body, rows,
+                              {"size": size, "sort": [{sf: sd}]})
+        for b in buckets:
+            b[tname] = {"top": _top_metrics_rows(
+                by_key.get(b["key"], []), fields, sf)}
+    if pipes:
+        # the script family runs over the RETURNED buckets, like ES's
+        # reduce phase; the running family names its error
+        buckets = _apply_parent_pipelines(buckets, pipes, ordered=False)
+    return {
+        "doc_count_error_upper_bound": 0,  # exact (divergence note)
+        "sum_other_doc_count": int(total - sum(r["doc_count"] for r in rows)),
+        "buckets": buckets,
+    }
+
+
+def _histogram_agg(kind: str, scope: _Scope, name: str, body: dict,
+                   sub: dict) -> dict:
+    """``histogram`` / ``date_histogram``: one groupBy (gap-filled in
+    plan for ``min_doc_count: 0``), then the per-bucket pipelines.
+
+    ``rate`` (date_histogram only, ES's constraint) rides the frame as
+    its sum/value_count component and divides by bucket span / unit
+    driver-side, where the bucket key — so the CALENDAR span (28 vs
+    31-day months, DST days) — is known. ``moving_percentiles`` is one
+    auxiliary explode+groupBy job; ``cumulative_cardinality`` two
+    shrinking groupBys, applied before the generic pipelines so a
+    bucket_script can read the running count."""
+    if _has_level_subs(sub):
+        return _chain_agg(scope, name, kind, body, sub)
+    df = scope.df
+    pipes, sub = _pick(sub, _PARENT_PIPELINES)
+    cards, sub = _pick(sub, ("cumulative_cardinality",))
+    rates, sub = _pick(sub, ("rate",))
+    movpct, sub = _pick(sub, ("moving_percentiles",))
+    if rates and kind != "date_histogram":
+        raise DslError(
+            "rate can only be used inside a date_histogram aggregation "
+            "(ES's own constraint)")
+    comps: dict[str, str | None] = {}
+    for n, s in rates.items():
+        mode = s["rate"].get("mode", "sum")
+        if mode not in ("sum", "value_count"):
+            raise DslError(f"unknown rate mode {mode!r}")
+        comps[n] = None  # doc_count-based rate
+        if s["rate"].get("field") is not None:
+            # a synthetic component name that never shadows a user agg
+            comps[n] = f"__rate_{n}"
+            while comps[n] in sub:
+                comps[n] = f"_{comps[n]}"
+            sub[comps[n]] = {mode: {"field": s["rate"]["field"]}}
+    rows = histogram_frame(df, kind, body, sub).collect()
+    # hide ONLY the tracked synthetic components (a user sub-agg
+    # literally named "__rate_x" stays visible)
+    shown = {n: s for n, s in sub.items() if n not in comps.values()}
+    buckets = []
+    for r in rows:
+        b = _bucket(r, shown)
+        if isinstance(r["key"], _dt.datetime):
+            b["key_as_string"] = _key_as_string(r["key"], body)
+        for n, comp in comps.items():
+            raw = float(r["doc_count"] if comp is None else r[comp] or 0.0)
+            unit = rates[n]["rate"].get("unit")
+            if unit is None:
+                # ES default: the rate unit IS the bucket interval
+                b[n] = {"value": raw}
+            else:
+                span = _bucket_span_seconds(r["key"], body)
+                b[n] = {"value": raw * _rate_unit_seconds(unit) / span
+                        if span else 0.0}
+        buckets.append(b)
+    if movpct:
+        _apply_moving_percentiles(df, kind, body, sub, rows, buckets, movpct)
+    if cards:
+        _apply_cumulative_cardinality(df, kind, body, sub, buckets, cards)
+    if pipes:
+        buckets = _apply_parent_pipelines(buckets, pipes, ordered=True)
+    return _render_buckets(buckets, body, ranged=False)
+
+
+def _range_agg(is_date: bool, scope: _Scope, name: str, body: dict,
+               sub: dict) -> dict:
+    """``range`` / ``date_range``: all bands in one conditional-aggregate
+    job; with sub-aggs (plain ``range`` only — Kibana's banded
+    drill-down) each band recurses over its predicate, ES's cost."""
+    if sub:
+        ranges = _ranges(body, "range")
+        c = F.col(body["field"])
+        buckets = []
+        for r in ranges:
+            env = _narrowed(scope, scope.df.filter(_band_pred(c, r)), sub)
+            buckets.append({**_band(r, env.pop("doc_count")), **env})
+        return _render_buckets(buckets, body, ranged=True)
+    row = range_frame(scope.df, body, is_date=is_date).collect()[0]
+
+    def as_date(v):
+        d = (_dt.datetime.fromtimestamp(v / 1000, _dt.timezone.utc)
+             .replace(tzinfo=None) if isinstance(v, (int, float))
+             else _dt.datetime.fromisoformat(str(v)))
+        return _key_envelope(d), _key_as_string(d, body)
+
+    return _render_buckets(
+        [_band(r, row[f"band{i}.doc_count"], as_date if is_date else None)
+         for i, r in enumerate(body["ranges"])], body, ranged=True)
+
+
+def _ip_range_agg(scope: _Scope, name: str, body: dict, sub: dict) -> dict:
+    """``ip_range``: each band [from, to) or CIDR mask becomes two
+    numeric comparisons over the parsed long, all bands in ONE
+    conditional-count job. ES semantics: from inclusive, to exclusive,
+    mask = [network, network + 2^(32-prefix)) with host bits masked
+    off. IPv6 literals are named 400s (128-bit arithmetic, unbuilt)."""
+    from sql_database_to_elastic_datalake_spark.functions.ip import (
+        int_to_ipv4,
+        ip_to_long,
+        ipv4_to_int,
+        parse_cidr,
+    )
+
+    bands = []  # (band entry, lo, hi)
+    for r in _ranges(body, "ip_range"):
+        unknown = sorted(set(r) - {"from", "to", "mask", "key"})
+        if unknown:
+            raise DslError(f"unsupported ip_range entry keys: {unknown}")
+        try:
+            if "mask" not in r:
+                lo, hi = (ipv4_to_int(r[e]) if r.get(e) is not None
+                          else None for e in ("from", "to"))
+                bands.append((r, lo, hi))
+                continue
+            if "from" in r or "to" in r:
+                raise DslError(
+                    "an ip_range entry takes mask OR from/to, not both")
+            lo, hi = parse_cidr(r["mask"])
+        except ValueError as ex:
+            raise DslError(str(ex)) from None
+        bands.append(({"from": int_to_ipv4(lo),
+                       "to": int_to_ipv4(hi) if hi <= 0xFFFFFFFF else None,
+                       "key": r.get("key", str(r["mask"]))}, lo, hi))
+    ipn = ip_to_long(F.col(body["field"]).cast("string"))
+    row = scope.df.agg(*[
+        _count_if(_band_pred(ipn, {"from": lo, "to": hi})).alias(f"band{i}")
+        for i, (_, lo, hi) in enumerate(bands)]).collect()[0]
+    return _render_buckets([_band(r, row[f"band{i}"])
+                            for i, (r, _, _) in enumerate(bands)],
+                           body, ranged=True)
+
+
+def _geo_distance_agg(scope: _Scope, name: str, body: dict,
+                      sub: dict) -> dict:
+    """``geo_distance`` rings, rewritten into the range handler over a
+    materialized haversine column — keyed form, sub-aggregations and
+    the band envelope come from the one implementation. Distances and
+    from/to are in the requested ES unit (agg default: metres)."""
+    from sql_database_to_elastic_datalake_spark.functions.geo import (
+        haversine_km,
+        parse_distance_km,
+    )
+    from sql_database_to_elastic_datalake_spark.plans.es_dsl import (
+        _geo_field_cols,
+        _parse_geo_point,
+    )
+
+    df = scope.df
+    if not body.get("field"):
+        raise DslError("geo_distance requires a field")
+    if body.get("origin") is None:
+        raise DslError("geo_distance requires an origin")
+    if body.get("distance_type", "arc") != "arc":
+        raise DslError(
+            "unsupported geo_distance distance_type "
+            f"{body['distance_type']!r} (arc only)")
+    ranges = _ranges(body, "geo_distance")
+    unit = body.get("unit", "m")
+    try:
+        per_unit_km = parse_distance_km(f"1{unit}")
+    except ValueError:
+        raise DslError(f"unknown geo_distance unit {unit!r}") from None
+    plat, plon = _parse_geo_point(body["origin"])
+    fields = scope.schema_fields or df.columns
+    lat_c, lon_c = _geo_field_cols(body["field"], F.col, fields,
+                                   schema=df.schema)
+    tmp = "__geo_distance_band"
+    scoped = df.withColumn(
+        tmp, haversine_km(lat_c, lon_c, F.lit(plat), F.lit(plon))
+        * F.lit(1.0 / per_unit_km))
+    inner = {"field": tmp, "ranges": ranges,
+             **({"keyed": body["keyed"]} if "keyed" in body else {})}
+    return _range_agg(False, scope._replace(
+        df=scoped, schema_fields=[*fields, tmp], background_pred=None,
+        relation_ctx=None, siblings={}), name, inner, sub)
+
+
+def _geo_grid_agg(kind: str, default: int, lo: int, hi: int,
+                  scope: _Scope, name: str, body: dict, sub: dict) -> dict:
+    """``geohash_grid`` / ``geotile_grid``: per-cell doc counts — the
+    cell is EXACT bit arithmetic (functions/geo.py), one groupBy
+    shuffle, buckets by (doc_count desc, key asc) like ES. geohash
+    stops at precision 8 (9+ exceeds the exact-arithmetic cell width
+    this engine guarantees); geotile ``bounds`` is result-changing and
+    unlisted, so a named 400."""
+    from sql_database_to_elastic_datalake_spark.functions import geo
+    from sql_database_to_elastic_datalake_spark.plans.es_dsl import (
+        _geo_field_cols,
+    )
+
+    if not body.get("field"):
+        raise DslError(f"{kind} requires a field")
+    precision = body.get("precision", default)
+    if isinstance(precision, bool) or not isinstance(precision, int) \
+            or not lo <= precision <= hi:
+        raise DslError(
+            f"{kind} precision must be an integer in [{lo}, {hi}]")
+    size = _size(body, 10000, kind, lo=1)
+    df = scope.df
+    lat_c, lon_c = _geo_field_cols(
+        body["field"], F.col, scope.schema_fields or df.columns,
+        schema=df.schema)
+    cell = getattr(geo, kind.removesuffix("_grid"))
+    rows = (
+        df.filter(lat_c.isNotNull() & lon_c.isNotNull())
+        .groupBy(cell(lat_c, lon_c, precision).alias("key"))
+        .agg(F.count(F.lit(1)).alias("doc_count"))
+        .orderBy(F.col("doc_count").desc(), F.col("key").asc())
+        .limit(size)
+        .collect()
+    )
+    return {"buckets": [{"key": r["key"], "doc_count": r["doc_count"]}
+                        for r in rows]}
+
+
+def _composite_agg(scope: _Scope, name: str, body: dict, sub: dict) -> dict:
+    rows = composite_frame(scope.df, body, sub).collect()
+    names = [next(iter(s)) for s in body["sources"]]
+    buckets = [_bucket(r, sub, {n: _key_envelope(r[n]) for n in names})
+               for r in rows]
+    env: dict[str, Any] = {"buckets": buckets}
+    if buckets and len(rows) == _size(body, 10, "composite"):
+        # a full page may have more behind it: hand back the
+        # resumption cursor exactly like ES
+        env["after_key"] = buckets[-1]["key"]
+    return env
+
+
+def _filters_agg(scope: _Scope, name: str, body: dict, sub: dict) -> dict:
+    """``filters``: one conditional-aggregation job when every sub-agg
+    rides it (metric subs gated per filter); bucket sub-trees recurse
+    per filter over its compiled predicate instead."""
+    specs = body.get("filters")
+    anon = isinstance(specs, list)
+    other = body.get("other_bucket") or body.get("other_bucket_key")
+    if all(_rides_job(s, gated=True) for s in sub.values()):
+        row = filters_frame(scope.df, body, sub,
+                            scope.schema_fields).collect()[0]
+        names = [str(i) for i in range(len(specs))] if anon else list(specs)
+        if other:
+            names.append(str(body.get("other_bucket_key", "_other_")))
+        envs = {nm: {"doc_count": row[f"{nm} doc_count"],
+                     **_metric_envelope(row, sub, f"{nm} ")}
+                for nm in names}
+    else:
+        if other:
+            raise DslError(
+                "other_bucket with bucket sub-aggregations is not "
+                "supported"
+            )
+        named = dict(enumerate(specs)) if anon else specs or {}
+        envs = {str(nm): _narrowed(scope, scope.df.filter(compile_dsl(
+                    q, schema_fields=scope.schema_fields)), sub)
+                for nm, q in named.items()}
+    return {"buckets": list(envs.values()) if anon else envs}
+
+
+def _filter_agg(scope: _Scope, name: str, body: dict, sub: dict) -> dict:
+    """``filter``: one conditional-aggregation job with its metric
+    subs; bucket sub-aggs recurse over the filtered scope — one extra
+    job per sub-tree, exactly ES's cost."""
+    if all(_rides_job(s, gated=True) for s in sub.values()):
+        row = filter_frame(scope.df, body, sub,
+                           scope.schema_fields).collect()[0]
+        return {"doc_count": row["doc_count"], **_metric_envelope(row, sub)}
+    return _narrowed(scope, scope.df.filter(compile_dsl(
+        body, schema_fields=scope.schema_fields)), sub)
+
+
+def _global_agg(scope: _Scope, name: str, body: dict, sub: dict) -> dict:
+    """ES's global bucket: sub-aggs see the WHOLE index, not the query
+    scope — faceted navigation's "totals" column."""
+    if scope.background is None:
+        raise DslError(
+            "global needs the unfiltered table — this entry point has no "
+            "table context (use /search/advanced, which passes it)"
+        )
+    if body not in ({}, None):
+        raise DslError("global takes no options")
+    return _narrowed(scope, scope.background, sub)
+
+
+def _sample_pred(scoped: DataFrame) -> Column | None:
+    """The membership predicate of a materialized sample inside its
+    background table, so a significant_text foreground flag stays one
+    tokenized scan: an ``isin`` on a unique ``id``; otherwise the FULL
+    atomic tiebreak tuple (the lead key may be a non-unique foreign key,
+    whose isin would count background rows sharing it), width-bounded
+    — past the bound None, and significant_* names its 400."""
+    from pyspark.sql.types import ArrayType, BinaryType, StructType
+
+    from sql_database_to_elastic_datalake_spark.operators.similarity import (
+        tiebreak_columns,
+    )
+
+    keys = tiebreak_columns(scoped)
+    if not keys:
+        return None
+    if keys[0] == "id":
+        vals = [r["id"] for r in scoped.select("id").collect()]
+        return F.col("id").isin(vals) if vals else F.lit(False)
+    atomic = [c for c in keys if not isinstance(
+        scoped.schema[c].dataType, (ArrayType, StructType, BinaryType))]
+    if not atomic:
+        return None
+    rows = scoped.select(*atomic).collect()
+    if not rows:
+        return F.lit(False)
+    if len(rows) * len(atomic) > 20_000:
+        return None
+    pred = None
+    for r in rows:
+        conj = None
+        for c in atomic:
+            eq = F.col(c).eqNullSafe(F.lit(r[c]))
+            conj = eq if conj is None else conj & eq
+        pred = conj if pred is None else pred | conj
+    return pred
+
+
+def _sampler_agg(kind: str, scope: _Scope, name: str, body: dict,
+                 sub: dict) -> dict:
+    """``sampler`` / ``diversified_sampler``: sub-aggs see at most
+    ``shard_size`` docs of the query scope (:func:`sampler_scope` — the
+    deterministic-hash divergence is documented there)."""
+    scoped = sampler_scope(scope.df, body,
+                           diversified=kind == "diversified_sampler")
+    pred = _sample_pred(scoped) if sub and scope.background is not None \
+        and scoped.columns else None
+    return _narrowed(scope, scoped, sub, background_pred=pred)
+
+
+def _adjacency_matrix_agg(scope: _Scope, name: str, body: dict,
+                          sub: dict) -> dict:
+    """Pairwise filter intersections (the Kibana graph panel): N(N+1)/2
+    conditional counts in ONE job; empty intersections are omitted
+    like ES."""
+    from sql_database_to_elastic_datalake_spark.plans.es_dsl import _ns
+
+    specs = body.get("filters")
+    if not isinstance(specs, dict) or not specs:
+        raise DslError("adjacency_matrix requires a named filters object")
+    sep = str(body.get("separator", "&"))
+    # null-safe: a NULL predicate (missing field) must count as
+    # no-match, not poison the pairwise AND
+    preds = {n: _ns(compile_dsl(q, schema_fields=scope.schema_fields))
+             for n, q in specs.items()}
+    names = sorted(preds)
+    cells = []
+    for i, a in enumerate(names):
+        cells.append((a, preds[a]))
+        cells += [(f"{a}{sep}{b}", preds[a] & preds[b])
+                  for b in names[i + 1:]]
+    row = scope.df.agg(*[_count_if(p).alias(f"am|{n}")
+                         for n, p in cells]).collect()[0]
+    return {"buckets": [{"key": n, "doc_count": row[f"am|{n}"]}
+                        for n, _ in cells if row[f"am|{n}"]]}
+
+
+def _top_metrics_agg(scope: _Scope, name: str, body: dict,
+                     sub: dict) -> dict:
+    """The doc(s) with the extreme sort value: ONE TakeOrdered (docs
+    missing the sort field are skipped, like ES)."""
+    fields, sf, sd, size = _top_metrics_spec(body)
+    rows = (
+        scope.df.filter(F.col(sf).isNotNull())
+        .select(*dict.fromkeys([sf, *fields]))
+        .orderBy(F.col(sf).desc() if sd == "desc" else F.col(sf).asc())
+        .limit(size).collect()
+    )
+    return {"top": _top_metrics_rows(rows, fields, sf)}
+
+
+def _mad_agg(scope: _Scope, name: str, body: dict, sub: dict) -> dict:
+    """Exact median absolute deviation: the median first, so two jobs
+    by construction (ES's t-digest avoids that — the percentiles
+    exactness divergence)."""
+    src = _metric_source(body)
+    med = scope.df.agg(F.percentile(src, F.lit(0.5)).alias("m")) \
+        .collect()[0]["m"]
+    if med is None:
+        return {"value": None}
+    return {"value": scope.df.agg(F.percentile(
+        F.abs(src - F.lit(med)), F.lit(0.5)).alias("m")).collect()[0]["m"]}
+
+
+def _boxplot_agg(scope: _Scope, name: str, body: dict, sub: dict) -> dict:
+    r = boxplot_frame(scope.df, body).collect()[0]
+    return {k: r[k] for k in ("min", "max", "q1", "q2", "q3", "lower",
+                              "upper")}
+
+
+def _multi_terms_agg(scope: _Scope, name: str, body: dict,
+                     sub: dict) -> dict:
+    rows = multi_terms_frame(scope.df, body, sub).collect()
+    kn = [f"k{i}" for i in range(len(body["terms"]))]
+    return {"buckets": [
+        {**_bucket(r, sub, [_key_envelope(r[k]) for k in kn]),
+         "key_as_string": "|".join(str(r[k]) for k in kn)}
+        for r in rows
+    ]}
+
+
+def _rare_terms_agg(scope: _Scope, name: str, body: dict,
+                    sub: dict) -> dict:
+    rows = rare_terms_frame(scope.df, body) \
+        .limit(_RARE_TERMS_BUDGET + 1).collect()
+    if len(rows) > _RARE_TERMS_BUDGET:
+        raise DslError(
+            f"rare_terms returns more than {_RARE_TERMS_BUDGET} buckets — "
+            "raise max_doc_count selectivity or filter the scope"
+        )
+    return {"buckets": [{"key": _key_envelope(r["key"]),
+                         "doc_count": r["doc_count"]} for r in rows]}
+
+
+def _vwh_agg(scope: _Scope, name: str, body: dict, sub: dict) -> dict:
+    return {"buckets": [
+        {"min": r["min"], "key": r["key"], "max": r["max"],
+         "doc_count": r["doc_count"]}
+        for r in variable_width_histogram_frame(scope.df, body).collect()
+    ]}
+
+
+def _categorize_text_agg(scope: _Scope, name: str, body: dict,
+                         sub: dict) -> dict:
+    return {"buckets": [
+        {"key": r["key"], "doc_count": r["doc_count"],
+         "regex": ".*?" + ".*?".join(
+             re.escape(t) for t in r["key"].split(" ")) + ".*?",
+         "max_matching_length": r["max_matching_length"]}
+        for r in categorize_text_frame(scope.df, body).collect()
+    ]}
+
+
+def _auto_date_histogram_agg(scope: _Scope, name: str, body: dict,
+                             sub: dict) -> dict:
+    frame, label = auto_date_histogram_plan(scope.df, body, sub)
+    rows = frame.collect() if frame is not None else []
+    return {"buckets": [{**_bucket(r, sub),
+                         "key_as_string": _key_as_string(r["key"], body)}
+                        for r in rows],
+            "interval": label}
+
+
+def _significant_env(df: DataFrame, bg: DataFrame, rows: list) -> dict:
+    """The significant_terms / significant_text envelope: scope and
+    background doc counts (one count job each) plus the scored
+    buckets."""
+    return {"doc_count": df.count(), "bg_count": bg.count(), "buckets": [
+        {"key": _key_envelope(r["key"]), "doc_count": r["doc_count"],
+         "bg_count": r["bg_count"], "score": r["score"]} for r in rows]}
+
+
+def _significant_terms_agg(scope: _Scope, name: str, body: dict,
+                           sub: dict) -> dict:
+    if scope.background is None:
+        raise DslError(
+            "significant_terms needs the background set — this entry "
+            "point has no table context (use /search/advanced, which "
+            "passes it)"
+        )
+    bg = scope.background
+    if body.get("background_filter") is not None:
+        # ES's background_filter narrows the contrast scope
+        bg = bg.filter(compile_dsl(body["background_filter"],
+                                   schema_fields=scope.schema_fields))
+        body = {k: v for k, v in body.items() if k != "background_filter"}
+    rows = significant_terms_frame(scope.df, bg, body).collect()
+    return _significant_env(scope.df, bg, rows)
+
+
+def _significant_text_agg(scope: _Scope, name: str, body: dict,
+                          sub: dict) -> dict:
+    if scope.background is None or scope.background_pred is None:
+        raise DslError(
+            "significant_text needs the background set and the query "
+            "predicate — this entry point has no table context (use "
+            "/search/advanced, which passes both)"
+        )
+    bg_pred = None
+    if body.get("background_filter") is not None:
+        bg_pred = compile_dsl(body["background_filter"],
+                              schema_fields=scope.schema_fields)
+        body = {k: v for k, v in body.items() if k != "background_filter"}
+    rows = significant_text_frame(scope.background, scope.background_pred,
+                                  body, bg_pred=bg_pred).collect()
+    return _significant_env(scope.df, scope.background if bg_pred is None
+                            else scope.background.filter(bg_pred), rows)
+
+
+def _relation_agg(kind: str, scope: _Scope, name: str, body: dict,
+                  sub: dict) -> dict:
+    """``children`` / ``parent``: scope-switch across the declared
+    join-field relation — ``children`` moves the agg scope from matched
+    parents to their child rows, ``parent`` from matched children to
+    their parents. ONE distinct-key semi-join (pinned shuffle_hash like
+    the has_child/has_parent leaves); metric-only sub-aggs share one
+    job with the doc_count, others recurse over the switched frame."""
+    from sql_database_to_elastic_datalake_spark.plans.join_field import (
+        RELATIONS,
+        _match_side,
+    )
+
+    if scope.relation_ctx is None:
+        raise DslError(
+            f"the {kind} aggregation needs table context (the search "
+            "route passes it; this entry point compiles single-table "
+            "aggs only)")
+    table, load_sibling = scope.relation_ctx
+    type_name = body.get("type")
+    if not isinstance(type_name, str) or not type_name:
+        raise DslError(f"{kind} aggregation requires a 'type' string")
+    rel = next((r for r in RELATIONS if r["child"] == type_name), None)
+    side = rel and _match_side(
+        table, rel["parent" if kind == "children" else "child"])
+    if rel is None or side is None:
+        raise DslError(
+            f"no join-field relation maps the {kind} aggregation type "
+            f"{type_name!r} onto table {table!r}")
+    target = side + (rel["child"] if kind == "children" else rel["parent"])
+    other = load_sibling(target)
+    if other is None:
+        raise DslError(
+            f"{kind} aggregation type {type_name!r} resolves to table "
+            f"{target!r}, which does not exist")
+    here, there = (("parent_key", "child_key") if kind == "children"
+                   else ("child_key", "parent_key"))
+    keys = (scope.df.select(F.col(rel[here]).alias("__rel_k"))
+            .filter(F.col("__rel_k").isNotNull()).distinct())
+    scoped = other.join(keys.hint("shuffle_hash"),
+                        on=F.col(rel[there]) == F.col("__rel_k"),
+                        how="left_semi")
+    if all(_rides_job(s) for s in sub.values()):
+        # doc_count rides the metrics job: ONE run of the semi-join
+        row = scoped.agg(
+            F.count(F.lit(1)).cast("bigint").alias("__rel_doc_count"),
+            *_metric_cols(sub)).collect()[0]
+        return {"doc_count": int(row["__rel_doc_count"]),
+                **_metric_envelope(row, sub)}
+    return _narrowed(scope, scoped, sub, schema_fields=scoped.schema,
+                     background=scoped,
+                     relation_ctx=(target, load_sibling))
+
+
+class _Metric(NamedTuple):
+    """How a metric kind rides a parent's aggregation job: ``parts(body,
+    gate, sub) → [(suffix, Column)]`` builds its columns (restricted to
+    ``gate``'s rows when given) and ``read(row, prefix, body, sub)``
+    rebuilds its ES envelope from them."""
+    parts: Callable
+    read: Callable
+
+
+class _Kind(NamedTuple):
+    """One aggregation kind. ``keys``: the accepted body keys (None —
+    the body is query DSL or validates itself). ``handler``: ``(scope,
+    name, body, sub) → envelope`` where the kind runs its own plan
+    (None — valid only inside a parent: top_hits, rate, parent
+    pipelines, reverse_nested). ``subs``: takes sub-aggregations.
+    ``metric``: rides its parent's job (fused at top level unless it
+    takes subs — the filter gate). ``deferred``: runs after its
+    siblings, over their envelopes (sibling pipelines)."""
+    keys: set | None
+    handler: Callable | None = None
+    subs: bool = False
+    metric: _Metric | None = None
+    deferred: bool = False
+
+
+def _sibling_pipeline(kind: str, *keys: str) -> _Kind:
+    return _Kind({"buckets_path", "gap_policy", *keys},
+                 lambda scope, name, body, sub: _sibling_pipeline_envelope(
+                     kind, body, scope.siblings), deferred=True)
+
+
+#: the metric body keys: a field or script source plus ES's missing
+#: substitution
+_METRIC_KEYS = {"field", "missing", "script"}
+
+#: every aggregation kind the compiler knows (see :class:`_Kind`)
+_KINDS: dict[str, _Kind] = {
+    # metrics — one shared job at top level, riding a bucket's job
+    # below it; exact where ES approximates (precision_threshold and
+    # MAD/boxplot `compression` are accepted-and-ignored)
+    **{k: _Kind(_METRIC_KEYS, metric=_single(fn))
+       for k, fn in _METRICS.items()},
+    "cardinality": _Kind({*_METRIC_KEYS, "precision_threshold"},
+                         metric=_single(F.count_distinct)),
+    "stats": _Kind(_METRIC_KEYS, metric=_Metric(_stats_parts, _stats_read)),
+    "extended_stats": _Kind({*_METRIC_KEYS, "sigma"}, metric=_Metric(
+        _extended_stats_parts, _extended_stats_read)),
+    "percentiles": _Kind({*_METRIC_KEYS, "percents"}, metric=_Metric(
+        _percentiles_parts, _percentiles_read)),
+    "percentile_ranks": _Kind({*_METRIC_KEYS, "values"}, metric=_Metric(
+        _percentile_ranks_parts, _percentile_ranks_read)),
+    "missing": _Kind({"field"}, metric=_Metric(
+        _missing_parts, lambda row, p, body, _: {"doc_count": row[p]})),
+    "weighted_avg": _Kind({"value", "weight"}, metric=_Metric(
+        _weighted_avg_parts, _weighted_avg_read)),
+    "scripted_metric": _Kind(None, metric=_Metric(
+        _scripted_metric_parts, _read_value)),
+    # single-plan metrics (top level only)
+    "median_absolute_deviation": _Kind(
+        {*_METRIC_KEYS, "compression"}, _mad_agg),
+    "boxplot": _Kind({*_METRIC_KEYS, "compression"}, _boxplot_agg),
+    "string_stats": _Kind(
+        {"field", "missing", "show_distribution"},
+        lambda scope, name, body, sub: _string_stats_envelope(scope.df, body)),
+    "t_test": _Kind({"a", "b", "type"}, lambda scope, name, body, sub:
+                    _t_test_envelope(scope.df, body)),
+    # `mode` (multi-valued field reduction) has no meaning over scalar
+    # columns: a named 400, not an accepted-and-diverging knob
+    "matrix_stats": _Kind({"fields", "missing"}, lambda scope, name, body,
+                          sub: _matrix_stats_envelope(scope.df, body)),
+    "top_metrics": _Kind({"metrics", "sort", "size"}, _top_metrics_agg),
+    "geo_bounds": _Kind({"field", "wrap_longitude"}, lambda scope, name,
+                        body, sub: _geo_bounds_envelope(
+                            scope.df, body, scope.schema_fields)),
+    "geo_centroid": _Kind({"field"}, lambda scope, name, body, sub:
+                          _geo_centroid_envelope(
+                              scope.df, body, scope.schema_fields)),
+    "geo_line": _Kind({"point", "sort", "include_sort", "sort_order",
+                       "size"}, lambda scope, name, body, sub:
+                      _geo_line_envelope(scope.df, body, scope.schema_fields)),
+    # buckets
+    "terms": _Kind({"field", "size", "missing", "min_doc_count", "order",
+                    "include", "exclude", "shard_size",
+                    "show_term_doc_count_error", "collect_mode",
+                    "execution_hint"}, _terms_agg, subs=True),
+    "multi_terms": _Kind({"terms", "size", "min_doc_count", "order",
+                          "shard_size", "show_term_doc_count_error",
+                          "collect_mode"}, _multi_terms_agg, subs=True),
+    # exact where ES approximates with a CuckooFilter (`precision`
+    # accepted-and-ignored)
+    "rare_terms": _Kind({"field", "max_doc_count", "missing", "include",
+                         "exclude", "precision"}, _rare_terms_agg),
+    # JLH over terms / over the TOKENS of an analyzed field;
+    # filter_duplicate_text is a named 400, not a silent drop
+    "significant_terms": _Kind(
+        {"field", "size", "min_doc_count", "shard_size",
+         "shard_min_doc_count", "background_filter"},
+        _significant_terms_agg),
+    "significant_text": _Kind(
+        {"field", "size", "min_doc_count", "shard_size",
+         "shard_min_doc_count", "background_filter"},
+        _significant_text_agg),
+    "categorize_text": _Kind({"field", "size", "min_doc_count",
+                              "similarity_threshold",
+                              "categorization_filters", "shard_size"},
+                             _categorize_text_agg),
+    "frequent_item_sets": _Kind(
+        {"fields", "minimum_set_size", "minimum_support", "size"},
+        lambda scope, name, body, sub: {
+            "buckets": frequent_item_sets_result(scope.df, body)}),
+    "histogram": _Kind({"field", "interval", "min_doc_count",
+                        "extended_bounds", "offset", "keyed"},
+                       partial(_histogram_agg, "histogram"), subs=True),
+    "date_histogram": _Kind({"field", "calendar_interval", "fixed_interval",
+                             "min_doc_count", "extended_bounds", "format",
+                             "time_zone", "offset", "keyed"},
+                            partial(_histogram_agg, "date_histogram"),
+                            subs=True),
+    "auto_date_histogram": _Kind({"field", "buckets", "minimum_interval",
+                                  "format"}, _auto_date_histogram_agg,
+                                 subs=True),
+    # initial_buffer/shard_size tune ES's approximation — ignored here
+    "variable_width_histogram": _Kind(
+        {"field", "buckets", "initial_buffer", "shard_size"}, _vwh_agg),
+    "range": _Kind({"field", "ranges", "keyed"},
+                   partial(_range_agg, False), subs=True),
+    "date_range": _Kind({"field", "ranges", "keyed", "format"},
+                        partial(_range_agg, True)),
+    "ip_range": _Kind({"field", "ranges", "keyed"}, _ip_range_agg),
+    "geo_distance": _Kind({"field", "origin", "ranges", "unit",
+                           "distance_type", "keyed"}, _geo_distance_agg,
+                          subs=True),
+    "filter": _Kind(None, _filter_agg, subs=True,
+                    metric=_Metric(_filter_parts, _filter_read)),
+    "filters": _Kind({"filters", "other_bucket", "other_bucket_key"},
+                     _filters_agg, subs=True),
+    "adjacency_matrix": _Kind({"filters", "separator"},
+                              _adjacency_matrix_agg),
+    "composite": _Kind({"sources", "size", "after"}, _composite_agg,
+                       subs=True),
+    "geohash_grid": _Kind({"field", "precision", "size", "shard_size"},
+                          partial(_geo_grid_agg, "geohash_grid", 5, 1, 8)),
+    "geotile_grid": _Kind({"field", "precision", "size", "shard_size"},
+                          partial(_geo_grid_agg, "geotile_grid", 7, 0, 29)),
+    "global": _Kind(set(), _global_agg, subs=True),
+    "sampler": _Kind({"shard_size"}, partial(_sampler_agg, "sampler"),
+                     subs=True),
+    "diversified_sampler": _Kind(
+        {"shard_size", "field", "max_docs_per_value", "execution_hint"},
+        partial(_sampler_agg, "diversified_sampler"), subs=True),
+    "nested": _Kind({"path"}, _nested_agg, subs=True),
+    "reverse_nested": _Kind(set()),
+    "children": _Kind({"type"}, partial(_relation_agg, "children"),
+                      subs=True),
+    "parent": _Kind({"type"}, partial(_relation_agg, "parent"), subs=True),
+    "top_hits": _Kind({"size", "sort", "_source"}),
+    # pipelines: driver-side transforms over computed bucket lists — no
+    # extra job. gap_policy "skip" (ES's default) is the only policy
+    # implemented; bucket_script/bucket_selector run a SAFE arithmetic
+    # evaluator, never eval(); normalize's `format` is unimplemented
+    **{k: _sibling_pipeline(k) for k in ("avg_bucket", "sum_bucket",
+                                         "min_bucket", "max_bucket",
+                                         "stats_bucket")},
+    "percentiles_bucket": _sibling_pipeline("percentiles_bucket",
+                                            "percents"),
+    "extended_stats_bucket": _sibling_pipeline("extended_stats_bucket",
+                                               "sigma"),
+    "cumulative_sum": _Kind({"buckets_path"}),
+    "derivative": _Kind({"buckets_path", "gap_policy"}),
+    "bucket_script": _Kind({"buckets_path", "script", "gap_policy"}),
+    "bucket_selector": _Kind({"buckets_path", "script", "gap_policy"}),
+    "bucket_sort": _Kind({"sort", "from", "size", "gap_policy"}),
+    "moving_fn": _Kind({"buckets_path", "script", "window", "shift",
+                        "gap_policy"}),
+    "serial_diff": _Kind({"buckets_path", "lag", "gap_policy"}),
+    "moving_percentiles": _Kind({"buckets_path", "window", "shift"}),
+    "normalize": _Kind({"buckets_path", "method"}),
+    "cumulative_cardinality": _Kind({"buckets_path"}),
+    # `unit` beyond week is a named 400 (calendar units have no fixed
+    # second count; calendar bucket SPANS are handled)
+    "rate": _Kind({"field", "unit", "mode"}),
+}
+
+
 def run_aggs(
     df: DataFrame,
     aggs: dict,
@@ -4312,6 +4916,11 @@ def run_aggs(
     response envelope: ``{name: {"buckets": [...]}}`` for bucket aggs,
     ``{name: {"value": v}}`` / stats object for metrics.
 
+    Every top-level metric rides ONE fused aggregation job; every other
+    agg runs its :data:`_KINDS` handler; sibling pipelines run last,
+    over the computed envelopes (ES resolves buckets_path the same
+    way, whatever the body order); ``meta`` echoes verbatim.
+
     ``background`` is the UNFILTERED table — ``significant_terms``
     contrasts the matched scope against it (the API layer passes the
     table's full DataFrame). ``background_pred`` is the predicate
@@ -4322,1152 +4931,35 @@ def run_aggs(
         _norm_schema_fields,
     )
 
-    schema_fields = _norm_schema_fields(schema_fields)
     if not isinstance(aggs, dict):
         raise DslError("aggs must be an object")
     out: dict[str, Any] = {}
-
-    # all TOP-LEVEL metric aggs share one job
-    top_metrics = {
-        n: s for n, s in aggs.items()
-        if _agg_kind(s) in _FUSABLE_METRIC_KINDS
-    }
-    if top_metrics:
-        row = df.agg(*_metric_cols(top_metrics)).collect()[0]
-        out.update(_metric_envelope(row, top_metrics))
-
-    sibling_pipes: dict[str, tuple[str, dict]] = {}
+    scope = _Scope(df, _norm_schema_fields(schema_fields), background,
+                   background_pred, relation_ctx, out)
+    fused = {n: s for n, s in aggs.items() if _rides_job(s)}
+    if fused:
+        row = df.agg(*_metric_cols(fused)).collect()[0]
+        out.update(_metric_envelope(row, fused))
+    deferred = []
     for name, spec in aggs.items():
-        if name in top_metrics:
+        if name in fused:
             continue
-        if not isinstance(spec, dict):
-            raise DslError(f"aggregation {name!r} must be an object")
-        # sub-agg `meta` is accepted-and-ignored (pure client metadata
-        # — it cannot change results; the top-level echo below is what
-        # Kibana reads back)
-        sub = _strip_meta(spec.get("aggs") or spec.get("aggregations"))
-        # `meta` is ES's client-metadata echo (Kibana stamps every agg
-        # with one) — not an agg type
-        kinds = [k for k in spec
-                 if k not in ("aggs", "aggregations", "meta")]
-        if len(kinds) != 1:
-            raise DslError(f"aggregation {name!r} must have exactly one type")
-        kind = kinds[0]
-        body = spec[kind]
-        if kind in _SIBLING_PIPELINES:
-            # deferred: pipeline reductions run over the computed
-            # sibling envelopes after the main pass (free — no job)
-            sibling_pipes[name] = (kind, body)
-            continue
-        if kind == "string_stats":
-            # r9: top-level only (the per-bucket char explode would
-            # hide a corpus-sized shuffle — named 400 via the metric
-            # dispatcher when nested)
-            if sub:
-                raise DslError(
-                    "string_stats takes no sub-aggregations")
-            out[name] = _string_stats_envelope(df, body)
-            continue
-        if kind == "t_test":
-            if sub:
-                raise DslError("t_test takes no sub-aggregations")
-            out[name] = _t_test_envelope(df, body)
-            continue
-        if kind == "matrix_stats":
-            if sub:
-                raise DslError("matrix_stats takes no sub-aggregations")
-            out[name] = _matrix_stats_envelope(df, body)
-            continue
-        if kind == "geo_line":
-            # r13 late: ES's track/path agg — points connected into a
-            # GeoJSON LineString ordered by a sort field. ONE
-            # sort_array(collect_list(struct)) agg job; the transfer
-            # is bounded by ES's own 10k size cap, truncation is
-            # flagged via properties.complete exactly like ES.
-            if sub:
-                raise DslError("geo_line takes no sub-aggregations")
-            check_agg_keys(kind, body)
-            out[name] = _geo_line_envelope(df, body, schema_fields)
-            continue
-        if kind in ("geo_bounds", "geo_centroid"):
-            # r13 late: geo metric aggs — ONE df.agg job each, pure
-            # conditional min/max/avg column algebra (ES's
-            # GeoBounds/GeoCentroid aggregators restated; wrap choice
-            # is a driver-side closed form over 6 aggregates)
-            if sub:
-                raise DslError(f"{kind} takes no sub-aggregations")
-            check_agg_keys(kind, body)
-            out[name] = (_geo_bounds_envelope(df, body, schema_fields)
-                         if kind == "geo_bounds"
-                         else _geo_centroid_envelope(
-                             df, body, schema_fields))
-            continue
-        check_agg_keys(kind, body)
-        has_bucket_sub = any(
-            isinstance(s, dict)
-            and next((x for x in s if x not in ("aggs", "aggregations")),
-                     None) in _LEVEL_KINDS
-            for s in (sub or {}).values()
-        )
-        if kind in _LEVEL_KINDS and has_bucket_sub:
-            # multi-level bucket chain (r6): ONE shuffle PER LEAF
-            # CHAIN on its composite key, tree assembled from the
-            # flat frame(s). Sibling bucket sub-aggs (r7) become
-            # separate chains whose assemblies truncate the shared
-            # ancestor levels identically (same metrics ride every
-            # chain), then graft onto one response tree by bucket
-            # key. Each collect is HARD-BOUNDED (r6 advisory): the
-            # limit(B+1) caps the transfer and the overflow becomes
-            # a named error, not a driver OOM.
-            chains = _split_chains(name, kind, body, sub)
-            trees = []
-            for levels, per_level, ths in chains:
-                frame = nested_levels_frame(df, levels, per_level)
-                rows = frame.limit(_NESTED_FLAT_BUDGET + 1).collect()
-                if len(rows) > _NESTED_FLAT_BUDGET:
-                    raise DslError(
-                        f"nested aggregation {name!r} produces more "
-                        f"than {_NESTED_FLAT_BUDGET} flat buckets "
-                        "before terms-size truncation — narrow the "
-                        "levels or use a composite aggregation (the "
-                        "paged bucket API) for unbounded key domains"
-                    )
-                tree = _assemble_levels(rows, levels, per_level, 0)
-                if ths:
-                    _attach_chain_top_hits(
-                        df, frame, rows, tree, levels, ths)
-                trees.append((levels, tree))
-            primary_levels, merged = trees[0]
-            for levels_s, tree_s in trees[1:]:
-                d = next(
-                    i for i in range(min(len(primary_levels),
-                                         len(levels_s)))
-                    if primary_levels[i][0] != levels_s[i][0]
-                )
-                _graft_sibling(merged, tree_s, levels_s, 0, d)
-            out[name] = merged
-        elif kind == "geohash_grid":
-            # r13 (r12 verdict stretch #9): per-geohash-cell doc
-            # counts — the cell is EXACT bit arithmetic
-            # (functions/geo.py), one groupBy shuffle, buckets by
-            # (doc_count desc, key asc) like ES. Sub-aggregations are
-            # a named 400 (bucket chains belong to the nested-levels
-            # machinery; grafting geo cells there is future work, and
-            # silently dropping subs would return wrong envelopes).
-            from sql_database_to_elastic_datalake_spark.functions.geo import (
-                geohash,
-            )
-            from sql_database_to_elastic_datalake_spark.plans.es_dsl import (
-                _geo_field_cols,
-            )
-
-            if sub:
-                raise DslError(
-                    "geohash_grid sub-aggregations are not supported")
-            field = body.get("field")
-            if not field:
-                raise DslError("geohash_grid requires a field")
-            precision = body.get("precision", 5)
-            if isinstance(precision, bool) or not isinstance(
-                    precision, int) or not 1 <= precision <= 8:
-                raise DslError(
-                    "geohash_grid precision must be an integer in "
-                    "[1, 8] (9+ exceeds the exact-arithmetic cell "
-                    "width this engine guarantees)")
-            size = body.get("size", 10000)
-            if isinstance(size, bool) or not isinstance(size, int) \
-                    or size < 1:
-                raise DslError("geohash_grid size must be a positive "
-                               "integer")
-            lat_c, lon_c = _geo_field_cols(
-                field, F.col, schema_fields or df.columns,
-                schema=df.schema)
-            rows = (
-                df.filter(lat_c.isNotNull() & lon_c.isNotNull())
-                .groupBy(geohash(lat_c, lon_c, precision).alias("key"))
-                .agg(F.count(F.lit(1)).alias("doc_count"))
-                .orderBy(F.col("doc_count").desc(), F.col("key").asc())
-                .limit(size)
-                .collect()
-            )
-            out[name] = {"buckets": [
-                {"key": r["key"], "doc_count": r["doc_count"]}
-                for r in rows
-            ]}
-        elif kind == "geotile_grid":
-            # r13 late: OSM slippy-map tiles ("z/x/y" keys) — the
-            # Kibana Maps default grid. Same shape as geohash_grid
-            # (one groupBy shuffle, buckets by doc_count desc / key
-            # asc); `bounds` is unlisted in _AGG_BODY_KEYS → named
-            # 400. Boundary-stability note on functions/geo.py:geotile.
-            from sql_database_to_elastic_datalake_spark.functions.geo import (
-                geotile,
-            )
-            from sql_database_to_elastic_datalake_spark.plans.es_dsl import (
-                _geo_field_cols,
-            )
-
-            if sub:
-                raise DslError(
-                    "geotile_grid sub-aggregations are not supported")
-            field = body.get("field")
-            if not field:
-                raise DslError("geotile_grid requires a field")
-            precision = body.get("precision", 7)
-            if isinstance(precision, bool) or not isinstance(
-                    precision, int) or not 0 <= precision <= 29:
-                raise DslError(
-                    "geotile_grid precision must be an integer in "
-                    "[0, 29]")
-            size = body.get("size", 10000)
-            if isinstance(size, bool) or not isinstance(size, int) \
-                    or size < 1:
-                raise DslError("geotile_grid size must be a positive "
-                               "integer")
-            lat_c, lon_c = _geo_field_cols(
-                field, F.col, schema_fields or df.columns,
-                schema=df.schema)
-            rows = (
-                df.filter(lat_c.isNotNull() & lon_c.isNotNull())
-                .groupBy(geotile(lat_c, lon_c, precision).alias("key"))
-                .agg(F.count(F.lit(1)).alias("doc_count"))
-                .orderBy(F.col("doc_count").desc(), F.col("key").asc())
-                .limit(size)
-                .collect()
-            )
-            out[name] = {"buckets": [
-                {"key": r["key"], "doc_count": r["doc_count"]}
-                for r in rows
-            ]}
-        elif kind == "geo_distance":
-            # r13 late: distance-ring buckets — REWRITTEN into the
-            # range machinery over a materialized haversine column,
-            # so keyed form, sub-aggregations (bucket AND metric),
-            # and the bucket envelope all come from the one
-            # implementation. Distances and from/to are in the
-            # requested ES unit (agg default: metres).
-            from sql_database_to_elastic_datalake_spark.functions.geo import (
-                haversine_km,
-                parse_distance_km,
-            )
-            from sql_database_to_elastic_datalake_spark.plans.es_dsl import (
-                _geo_field_cols,
-                _parse_geo_point,
-            )
-
-            field = body.get("field")
-            if not field:
-                raise DslError("geo_distance requires a field")
-            if body.get("origin") is None:
-                raise DslError("geo_distance requires an origin")
-            if body.get("distance_type", "arc") != "arc":
-                raise DslError(
-                    "unsupported geo_distance distance_type "
-                    f"{body['distance_type']!r} (arc only)")
-            ranges = body.get("ranges")
-            if not isinstance(ranges, list) or not ranges:
-                raise DslError("geo_distance requires ranges")
-            unit = body.get("unit", "m")
-            try:
-                per_unit_km = parse_distance_km(f"1{unit}")
-            except ValueError:
-                raise DslError(
-                    f"unknown geo_distance unit {unit!r}") from None
-            plat, plon = _parse_geo_point(body["origin"])
-            lat_c, lon_c = _geo_field_cols(
-                field, F.col, schema_fields or df.columns,
-                schema=df.schema)
-            tmp = "__geo_distance_band"
-            scoped = df.withColumn(
-                tmp,
-                haversine_km(lat_c, lon_c, F.lit(plat), F.lit(plon))
-                * F.lit(1.0 / per_unit_km))
-            inner: dict[str, Any] = {
-                "range": {"field": tmp, "ranges": ranges,
-                          **({"keyed": body["keyed"]}
-                             if "keyed" in body else {})}}
-            if sub:
-                inner["aggs"] = (spec.get("aggs")
-                                 or spec.get("aggregations"))
-            res = run_aggs(
-                scoped, {name: inner},
-                schema_fields=[*(schema_fields or df.columns), tmp],
-                background=background)
-            out[name] = res[name]
-        elif kind == "terms":
-            top_hits = {
-                n: s for n, s in (sub or {}).items()
-                if _agg_kind(s) == "top_hits"
-            }
-            parent_pipes = {
-                n: s for n, s in (sub or {}).items()
-                if _agg_kind(s) in _PARENT_PIPELINES
-            }
-            top_mets = {
-                n: s for n, s in (sub or {}).items()
-                if _agg_kind(s) == "top_metrics"
-            }
-            metrics = {n: s for n, s in (sub or {}).items()
-                       if n not in top_hits and n not in parent_pipes
-                       and n not in top_mets}
-            rows = terms_frame(df, body, metrics).collect()
-            returned = sum(r["doc_count"] for r in rows)
-            # bucket_key, not the raw column: a `missing` value means
-            # null-key docs belong to a bucket and count in the total;
-            # include/exclude scopes the total the same way it scopes
-            # the buckets (ES's sum_other counts only included terms)
-            tkey = bucket_key("terms", body)
-            tpred = tkey.isNotNull()
-            ie = _include_exclude_pred(tkey, body)
-            if ie is not None:
-                tpred = tpred & ie
-            total = df.filter(tpred).count()
-            buckets = [
-                {"key": _key_envelope(r["key"]),
-                 "doc_count": r["doc_count"],
-                 **_metric_envelope(r, metrics)}
-                for r in rows
-            ]
-            for th_name, th_spec in top_hits.items():
-                keys = [r["key"] for r in rows]
-                th_body = th_spec["top_hits"]
-                hit_rows = top_hits_frame(
-                    df, bucket_key("terms", body), keys, th_body
-                ).collect()
-                # the `_source` spec restricts the RETURNED fields (r6
-                # advisory: listed-but-unapplied would silently hand a
-                # saved query extra fields); the frame itself keeps
-                # every column — the bucket key below must stay
-                # readable regardless of the projection
-                from sql_database_to_elastic_datalake_spark.plans.search \
-                    import resolve_source_columns
-
-                th_src = resolve_source_columns(
-                    [c for c in df.columns], th_body.get("_source"))
-                by_key: dict = {}
-                for hr in hit_rows:
-                    # buckets carry _key_envelope-converted keys
-                    # (datetime → epoch millis), so the lookup table
-                    # must be keyed the same way — raw datetime keys
-                    # here made top_hits under a timestamp terms agg
-                    # attach empty hits arrays (r5 advisory); a null
-                    # field value belongs to the `missing` bucket
-                    raw = hr[body["field"]]
-                    if raw is None:
-                        raw = body.get("missing")
-                    by_key.setdefault(_key_envelope(raw), []).append({
-                        "_source": {c: hr[c] for c in hr.asDict()
-                                    if c != "__rn" and c in th_src}
-                    })
-                for b in buckets:
-                    b[th_name] = {"hits": {
-                        "total": {"value": b["doc_count"],
-                                  "relation": "eq"},
-                        "hits": by_key.get(b["key"], []),
-                    }}
-            for tm_name, tm_spec in top_mets.items():
-                # Lens's "last value per bucket": the SAME window
-                # top-k plan as top_hits (WindowGroupLimit
-                # pre-truncation, isin pushdown to the returned
-                # buckets), projected to sort + metric fields
-                tm_body = tm_spec["top_metrics"]
-                check_agg_keys("top_metrics", tm_body)
-                fields, sf, sd, size = _top_metrics_spec(tm_body)
-                keys = [r["key"] for r in rows]
-                hit_rows = top_hits_frame(
-                    df.filter(F.col(sf).isNotNull()),
-                    bucket_key("terms", body), keys,
-                    {"size": size, "sort": [{sf: sd}]},
-                ).collect()
-                by_key: dict = {}
-                for hr in hit_rows:
-                    raw = hr[body["field"]]
-                    if raw is None:
-                        raw = body.get("missing")
-                    by_key.setdefault(_key_envelope(raw), []).append(hr)
-                for b in buckets:
-                    b[tm_name] = {"top": _top_metrics_rows(
-                        by_key.get(b["key"], []), fields, sf)}
-            if parent_pipes:
-                # the script family (bucket_script/selector/sort —
-                # Kibana TSVB's "math" panels) runs over the RETURNED
-                # terms buckets, like ES's reduce phase; the running
-                # family needs histogram ordering and names its error
-                buckets = _apply_parent_pipelines(
-                    buckets, parent_pipes, ordered=False)
-            out[name] = {
-                "doc_count_error_upper_bound": 0,  # exact (divergence note)
-                "sum_other_doc_count": int(total - returned),
-                "buckets": buckets,
-            }
-        elif kind in ("histogram", "date_histogram"):
-            sub = sub or {}
-            parent_pipes = {
-                n: s for n, s in sub.items()
-                if _agg_kind(s) in _PARENT_PIPELINES
-            }
-            cum_cards = {
-                n: s for n, s in sub.items()
-                if _agg_kind(s) == "cumulative_cardinality"
-            }
-            # r13 late: the rate agg — ES allows it only under a
-            # date_histogram (or composite date source). Each rate
-            # rewrites to its sum/value_count component riding the
-            # same frame; the per-bucket division by
-            # bucket_span/unit happens driver-side where the bucket
-            # key (and so the CALENDAR span — 28 vs 31-day months,
-            # DST days) is known.
-            rates = {
-                n: s for n, s in sub.items()
-                if _agg_kind(s) == "rate"
-            }
-            if rates and kind != "date_histogram":
-                raise DslError(
-                    "rate can only be used inside a date_histogram "
-                    "aggregation (ES's own constraint)")
-            # r14 (r13 verdict #5): moving_percentiles — percentiles
-            # of the WINDOW'S RAW VALUES per bucket (ES merges the
-            # window's t-digests; this engine computes the exact
-            # interpolated percentile over the same value set — the
-            # same documented exactness divergence as the percentiles
-            # metric). Runs as ONE auxiliary explode+groupBy job
-            # after the bucket keys are known (_moving_percentiles).
-            movpct = {
-                n: s for n, s in sub.items()
-                if _agg_kind(s) == "moving_percentiles"
-            }
-            sub = {n: s for n, s in sub.items()
-                   if n not in parent_pipes and n not in cum_cards
-                   and n not in rates and n not in movpct}
-            rate_comp: dict[str, str | None] = {}
-            for n, s in rates.items():
-                rb = s["rate"]
-                check_agg_keys("rate", rb)
-                mode = rb.get("mode", "sum")
-                if mode not in ("sum", "value_count"):
-                    raise DslError(
-                        f"unknown rate mode {mode!r}")
-                if rb.get("field") is not None:
-                    mk = ("sum" if mode == "sum" else "value_count")
-                    # synthetic component name — uniquified against
-                    # the user's agg names so a user agg that happens
-                    # to share the name is neither overwritten nor
-                    # stripped from the envelope (r14, ADVICE)
-                    comp = f"__rate_{n}"
-                    while comp in sub:
-                        comp = f"_{comp}"
-                    sub[comp] = {mk: {"field": rb["field"]}}
-                    rate_comp[n] = comp
-                else:
-                    rate_comp[n] = None  # doc_count-based rate
-            rows = histogram_frame(df, kind, body, sub).collect()
-            buckets = []
-            # strip ONLY the tracked synthetic rate components, not
-            # anything that merely looks like one — a user sub-agg
-            # literally named "__rate_x" stays visible (r14, ADVICE)
-            rate_synth = {c for c in rate_comp.values()
-                          if c is not None}
-            for r in rows:
-                vis = {n: s for n, s in sub.items()
-                       if n not in rate_synth}
-                b = {"key": _key_envelope(r["key"]),
-                     "doc_count": r["doc_count"],
-                     **_metric_envelope(r, vis)}
-                if isinstance(r["key"], _dt.datetime):
-                    b["key_as_string"] = _key_as_string(r["key"], body)
-                for n, comp in rate_comp.items():
-                    if comp is None:
-                        raw = float(r["doc_count"])
-                    else:
-                        v = r[comp]
-                        raw = float(v) if v is not None else 0.0
-                    unit = rates[n]["rate"].get("unit")
-                    if unit is None:
-                        # ES default: the rate unit IS the histogram
-                        # interval — the value is the bucket's own
-                        # sum/count
-                        b[n] = {"value": raw}
-                    else:
-                        span = _bucket_span_seconds(r["key"], body)
-                        b[n] = {"value": raw * _rate_unit_seconds(unit)
-                                / span if span else 0.0}
-                buckets.append(b)
-            if movpct:
-                _apply_moving_percentiles(
-                    df, kind, body, sub, rows, buckets, movpct)
-            if cum_cards:
-                # applied BEFORE the generic pipelines so a
-                # bucket_script/selector can reference the running
-                # count through buckets_path, like ES's reduce order
-                _apply_cumulative_cardinality(
-                    df, kind, body, sub, buckets, cum_cards)
-            if parent_pipes:
-                buckets = _apply_parent_pipelines(
-                    buckets, parent_pipes, ordered=True)
-            if body.get("keyed"):
-                # ES `keyed: true`: buckets as an object — the
-                # date form keys by key_as_string, the numeric form
-                # by the key's string rendering; each bucket keeps
-                # its inline key fields like ES
-                out[name] = {"buckets": {
-                    str(b.get("key_as_string", b["key"])): b
-                    for b in buckets
-                }}
-            else:
-                out[name] = {"buckets": buckets}
-        elif kind == "range":
-            if body.get("field") is None or not body.get("ranges"):
-                raise DslError(
-                    "range aggregation requires field and ranges")
-            if sub:
-                # sub-trees under range bands (Kibana's banded
-                # drill-down): recurse per band over the band
-                # predicate — one job set per band, ES's cost.
-                # r13 late: metric subs take this path too (they
-                # used to be a named 400 pointing at the filter-agg
-                # form; the per-band recursion handles them for free
-                # and geo_distance rings inherit it)
-                buckets = []
-                c = F.col(body["field"])
-                for r in body["ranges"]:
-                    pred = c.isNotNull()
-                    parts = []
-                    if r.get("from") is not None:
-                        pred = pred & (c >= F.lit(r["from"]))
-                        parts.append(str(r["from"]))
-                    else:
-                        parts.append("*")
-                    if r.get("to") is not None:
-                        pred = pred & (c < F.lit(r["to"]))
-                        parts.append(str(r["to"]))
-                    else:
-                        parts.append("*")
-                    scoped = df.filter(pred)
-                    b = {"doc_count": scoped.count()}
-                    if r.get("from") is not None:
-                        b["from"] = r["from"]
-                    if r.get("to") is not None:
-                        b["to"] = r["to"]
-                    b["key"] = r.get("key", "-".join(parts))
-                    b.update(run_aggs(scoped, sub,
-                                      schema_fields=schema_fields,
-                                      background=background))
-                    buckets.append(b)
-                out[name] = {"buckets": ({b.pop("key"): b
-                                          for b in buckets}
-                                         if body.get("keyed")
-                                         else buckets)}
-                continue
-            row = range_frame(df, body, sub).collect()[0]
-            buckets = []
-            for i, r in enumerate(body["ranges"]):
-                b: dict[str, Any] = {"doc_count": row[f"band{i}.doc_count"]}
-                parts = []
-                if r.get("from") is not None:
-                    b["from"] = r["from"]
-                    parts.append(str(r["from"]))
-                else:
-                    parts.append("*")
-                if r.get("to") is not None:
-                    b["to"] = r["to"]
-                    parts.append(str(r["to"]))
-                else:
-                    parts.append("*")
-                b["key"] = r.get("key", "-".join(parts))
-                buckets.append(b)
-            if body.get("keyed"):
-                # ES keyed ranges drop the inline "key" (it IS the
-                # object key) but keep from/to
-                out[name] = {"buckets": {
-                    b.pop("key"): b for b in buckets
-                }}
-            else:
-                out[name] = {"buckets": buckets}
-        elif kind == "ip_range":
-            # r14 (r13 verdict #7): each band [from, to) or CIDR mask
-            # becomes two numeric comparisons over the parsed long —
-            # all bands ride ONE shared conditional-count agg job,
-            # exactly the plain range agg's cost. ES semantics: from
-            # inclusive, to exclusive, mask = [network, network +
-            # 2^(32-prefix)), host bits masked off. IPv6 literals are
-            # named 400s (128-bit two-long arithmetic, unbuilt).
-            from sql_database_to_elastic_datalake_spark.functions.ip \
-                import int_to_ipv4, ip_to_long, ipv4_to_int, parse_cidr
-
-            if body.get("field") is None \
-                    or not isinstance(body.get("ranges"), list) \
-                    or not body["ranges"]:
-                raise DslError(
-                    "ip_range aggregation requires field and a "
-                    "non-empty ranges list")
-            if sub:
-                raise DslError(
-                    "sub-aggregations under ip_range are not "
-                    "supported (use the filter-agg form with CIDR "
-                    "terms)")
-            ipn = ip_to_long(F.col(body["field"]).cast("string"))
-            bands = []
-            for r in body["ranges"]:
-                if not isinstance(r, dict):
-                    raise DslError(
-                        f"malformed ip_range entry {r!r}")
-                unknown = sorted(set(r) - {"from", "to", "mask",
-                                           "key"})
-                if unknown:
-                    raise DslError(
-                        f"unsupported ip_range entry keys: {unknown}")
-                try:
-                    if "mask" in r:
-                        if "from" in r or "to" in r:
-                            raise DslError(
-                                "an ip_range entry takes mask OR "
-                                "from/to, not both")
-                        lo, hi = parse_cidr(r["mask"])
-                        frm = int_to_ipv4(lo)
-                        to = (int_to_ipv4(hi) if hi <= 0xFFFFFFFF
-                              else None)
-                        key = r.get("key", str(r["mask"]))
-                    else:
-                        frm, to = r.get("from"), r.get("to")
-                        lo = (ipv4_to_int(frm) if frm is not None
-                              else None)
-                        hi = (ipv4_to_int(to) if to is not None
-                              else None)
-                        key = r.get(
-                            "key",
-                            f"{frm if frm is not None else '*'}-"
-                            f"{to if to is not None else '*'}")
-                except ValueError as ex:
-                    raise DslError(str(ex)) from None
-                bands.append((key, frm, to, lo, hi))
-            conds = []
-            for i, (_, _, _, lo, hi) in enumerate(bands):
-                pred = ipn.isNotNull()
-                if lo is not None:
-                    pred = pred & (ipn >= F.lit(lo))
-                if hi is not None:
-                    pred = pred & (ipn < F.lit(hi))
-                conds.append(
-                    F.sum(F.when(pred, 1).otherwise(0))
-                    .cast("bigint").alias(f"band{i}"))
-            row = df.agg(*conds).collect()[0]
-            buckets = []
-            for i, (key, frm, to, lo, hi) in enumerate(bands):
-                b: dict[str, Any] = {"key": key,
-                                     "doc_count": row[f"band{i}"]}
-                if frm is not None:
-                    b["from"] = frm
-                if to is not None:
-                    b["to"] = to
-                buckets.append(b)
-            if body.get("keyed"):
-                out[name] = {"buckets": {b.pop("key"): b
-                                         for b in buckets}}
-            else:
-                out[name] = {"buckets": buckets}
-        elif kind == "date_range":
-            row = range_frame(df, body, sub, is_date=True).collect()[0]
-
-            def _dr_parse(v) -> _dt.datetime:
-                if isinstance(v, (int, float)):
-                    return _dt.datetime.fromtimestamp(
-                        v / 1000, _dt.timezone.utc).replace(tzinfo=None)
-                return _dt.datetime.fromisoformat(str(v))
-
-            buckets = []
-            for i, r in enumerate(body["ranges"]):
-                b = {"doc_count": row[f"band{i}.doc_count"]}
-                parts = []
-                for end in ("from", "to"):
-                    if r.get(end) is not None:
-                        d = _dr_parse(r[end])
-                        b[end] = _key_envelope(d)
-                        b[f"{end}_as_string"] = _key_as_string(d, body)
-                        parts.append(b[f"{end}_as_string"])
-                    else:
-                        parts.append("*")
-                b["key"] = r.get("key", "-".join(parts))
-                buckets.append(b)
-            if body.get("keyed"):
-                out[name] = {"buckets": {
-                    b.pop("key"): b for b in buckets
-                }}
-            else:
-                out[name] = {"buckets": buckets}
-        elif kind == "composite":
-            rows = composite_frame(df, body, sub).collect()
-            src_names = [next(iter(s)) for s in body["sources"]]
-            buckets = [
-                {"key": {n: _key_envelope(r[n]) for n in src_names},
-                 "doc_count": r["doc_count"],
-                 **_metric_envelope(r, sub)}
-                for r in rows
-            ]
-            env = {"buckets": buckets}
-            if len(rows) == int(body.get("size", 10)) and buckets:
-                # a full page may have more behind it: hand back the
-                # resumption cursor exactly like ES
-                env["after_key"] = buckets[-1]["key"]
-            out[name] = env
-        elif kind == "filters":
-            specs = body.get("filters")
-            anon = isinstance(specs, list)
-            if _has_bucket_subs(sub):
-                # bucket sub-trees under named filters: recurse per
-                # filter over its compiled predicate
-                fspecs = ({str(i): q for i, q in enumerate(specs)}
-                          if anon else specs)
-                if body.get("other_bucket") or \
-                        body.get("other_bucket_key"):
-                    raise DslError(
-                        "other_bucket with bucket sub-aggregations is "
-                        "not supported"
-                    )
-                fbuckets = {}
-                for fname, q in (fspecs or {}).items():
-                    scoped = df.filter(compile_dsl(
-                        q, schema_fields=schema_fields))
-                    env = {"doc_count": scoped.count()}
-                    env.update(run_aggs(scoped, sub,
-                                        schema_fields=schema_fields,
-                                        background=background))
-                    fbuckets[fname] = env
-                out[name] = {"buckets": (list(fbuckets.values())
-                                         if anon else fbuckets)}
-                continue
-            row = filters_frame(df, body, sub, schema_fields).collect()[0]
-            bnames = [str(i) for i in range(len(specs))] if anon \
-                else list(specs)
-            if body.get("other_bucket") or body.get("other_bucket_key"):
-                bnames.append(
-                    str(body.get("other_bucket_key", "_other_")))
-
-            def fbucket(nm: str) -> dict:
-                b: dict[str, Any] = {"doc_count": row[f"{nm} doc_count"]}
-                for mname, spec in (sub or {}).items():
-                    mk = _agg_kind(spec)
-                    if mk == "stats":
-                        b[mname] = {
-                            stat: row[f"{nm} {mname}.{stat}"]
-                            for stat in ("count", "min", "max",
-                                         "avg", "sum")
-                        }
-                    else:
-                        b[mname] = {"value": row[f"{nm} {mname}"]}
-                return b
-
-            out[name] = {"buckets": (
-                [fbucket(nm) for nm in bnames] if anon
-                else {nm: fbucket(nm) for nm in bnames}
-            )}
-        elif kind == "filter":
-            if _has_bucket_subs(sub):
-                # bucket sub-aggs under filter (Kibana's filtered
-                # panel): recurse over the filtered scope — one extra
-                # job per sub-tree, exactly ES's cost
-                pred = compile_dsl(body, schema_fields=schema_fields)
-                scoped = df.filter(pred)
-                env = {"doc_count": scoped.count()}
-                env.update(run_aggs(scoped, sub,
-                                    schema_fields=schema_fields,
-                                    background=background))
-            else:
-                row = filter_frame(df, body, sub,
-                                   schema_fields).collect()[0]
-                env = {"doc_count": row["doc_count"]}
-                env.update(_metric_envelope(row, sub))
-            out[name] = env
-        elif kind == "global":
-            # ES's global bucket: sub-aggs see the WHOLE index, not
-            # the query scope — faceted navigation's "totals" column.
-            # Recurse on the unfiltered table; doc_count is one count
-            # job (ES pays the same).
-            if background is None:
-                raise DslError(
-                    "global needs the unfiltered table — this entry "
-                    "point has no table context (use /search/advanced,"
-                    " which passes it)"
-                )
-            if body not in ({}, None):
-                raise DslError("global takes no options")
-            genv: dict[str, Any] = {"doc_count": background.count()}
-            if sub:
-                genv.update(run_aggs(background, sub,
-                                     schema_fields=schema_fields,
-                                     background=background))
-            out[name] = genv
-        elif kind in ("sampler", "diversified_sampler"):
-            # the cost-bounding wrapper: sub-aggs see at most
-            # shard_size docs of the query scope (sampler_scope —
-            # the deterministic-hash divergence is documented there).
-            # The sample is a materialized local relation, so a
-            # significant_text foreground flag is a membership
-            # predicate on the sample's identity (bounded by
-            # shard_size, pushdown-friendly) — the one-tokenized-scan
-            # contract holds under the wrapper too.
-            scoped = sampler_scope(
-                df, body, diversified=kind == "diversified_sampler")
-            senv: dict[str, Any] = {"doc_count": scoped.count()}
-            if sub:
-                sample_pred = None
-                if background is not None and scoped.columns:
-                    from pyspark.sql.types import (
-                        ArrayType, BinaryType, StructType,
-                    )
-
-                    from sql_database_to_elastic_datalake_spark.operators.similarity import (  # noqa: E501
-                        tiebreak_columns,
-                    )
-
-                    skeys = tiebreak_columns(scoped)
-                    if skeys and skeys[0] == "id":
-                        # the unique-by-construction id column: a
-                        # plain In-membership identifies the sample
-                        vals = [r["id"]
-                                for r in scoped.select("id").collect()]
-                        sample_pred = F.col("id").isin(vals) \
-                            if vals else F.lit(False)
-                    elif skeys:
-                        # the lead tiebreak may be a NON-unique *_id
-                        # foreign key — an isin() on it would count
-                        # background rows sharing the key value as
-                        # foreground and skew JLH. Identify sample
-                        # rows by the FULL atomic tiebreak tuple
-                        # (null-safe equality), width-bounded; a
-                        # too-wide predicate leaves sample_pred None
-                        # so significant_* raises its existing named
-                        # 400 instead of returning skewed scores.
-                        akeys = [
-                            c for c in skeys
-                            if not isinstance(
-                                scoped.schema[c].dataType,
-                                (ArrayType, StructType, BinaryType))
-                        ]
-                        rows = (scoped.select(*akeys).collect()
-                                if akeys else [])
-                        if not akeys:
-                            pass
-                        elif not rows:
-                            sample_pred = F.lit(False)
-                        elif len(rows) * len(akeys) <= 20_000:
-                            sample_pred = None
-                            for r in rows:
-                                conj = None
-                                for c in akeys:
-                                    eq = F.col(c).eqNullSafe(
-                                        F.lit(r[c]))
-                                    conj = eq if conj is None \
-                                        else conj & eq
-                                sample_pred = conj \
-                                    if sample_pred is None \
-                                    else sample_pred | conj
-                senv.update(run_aggs(scoped, sub,
-                                     schema_fields=schema_fields,
-                                     background=background,
-                                     background_pred=sample_pred))
-            out[name] = senv
-        elif kind == "adjacency_matrix":
-            # pairwise filter intersections (the Kibana graph panel):
-            # N(N+1)/2 conditional aggregates in ONE job — the same
-            # one-pass shape as the filters agg; empty intersections
-            # are omitted like ES
-            specs = body.get("filters")
-            if not isinstance(specs, dict) or not specs:
-                raise DslError(
-                    "adjacency_matrix requires a named filters object")
-            if sub:
-                raise DslError(
-                    "sub-aggregations under adjacency_matrix are not "
-                    "supported"
-                )
-            sep = str(body.get("separator", "&"))
-            from sql_database_to_elastic_datalake_spark.plans.es_dsl \
-                import _ns
-
-            # null-safe: a NULL predicate (missing field) must count
-            # as no-match, not poison the pairwise AND
-            preds = {
-                n: _ns(compile_dsl(q, schema_fields=schema_fields))
-                for n, q in specs.items()
-            }
-            names_am = sorted(preds)
-            cells: list[tuple[str, Any]] = []
-            for i, a in enumerate(names_am):
-                cells.append((a, preds[a]))
-                for b in names_am[i + 1:]:
-                    cells.append((f"{a}{sep}{b}", preds[a] & preds[b]))
-            row = df.agg(*[
-                F.sum(F.when(p, 1).otherwise(0)).cast("bigint")
-                .alias(f"am|{n}")
-                for n, p in cells
-            ]).collect()[0]
-            out[name] = {"buckets": [
-                {"key": n, "doc_count": row[f"am|{n}"]}
-                for n, _ in cells if row[f"am|{n}"]
-            ]}
-        elif kind == "top_metrics":
-            # the doc(s) with the extreme sort value: ONE TakeOrdered
-            # (docs missing the sort field are skipped, like ES)
-            fields, sf, sd, size = _top_metrics_spec(body)
-            oc = F.col(sf).desc() if sd == "desc" else F.col(sf).asc()
-            rows = (
-                df.filter(F.col(sf).isNotNull())
-                .select(*dict.fromkeys([sf, *fields]))
-                .orderBy(oc).limit(size).collect()
-            )
-            out[name] = {"top": _top_metrics_rows(rows, fields, sf)}
-        elif kind == "median_absolute_deviation":
-            # exact MAD needs the median first — two jobs by
-            # construction (ES avoids it with an approximate t-digest;
-            # exactness divergence, same direction as percentiles)
-            src = _metric_source(body)
-            med = df.agg(
-                F.percentile(src, F.lit(0.5)).alias("m")
-            ).collect()[0]["m"]
-            if med is None:
-                out[name] = {"value": None}
-            else:
-                out[name] = {"value": df.agg(F.percentile(
-                    F.abs(src - F.lit(med)), F.lit(0.5)
-                ).alias("m")).collect()[0]["m"]}
-        elif kind == "boxplot":
-            # exact quantiles + Tukey whiskers in one two-scan plan
-            # (boxplot_frame); ES's TDigest is the documented
-            # exactness divergence
-            if sub:
-                raise DslError("boxplot takes no sub-aggregations")
-            r = boxplot_frame(df, body).collect()[0]
-            out[name] = {k: r[k] for k in
-                         ("min", "max", "q1", "q2", "q3",
-                          "lower", "upper")}
-        elif kind == "multi_terms":
-            rows = multi_terms_frame(df, body, sub).collect()
-            kn = [f"k{i}" for i in range(len(body["terms"]))]
-            out[name] = {"buckets": [
-                {"key": [_key_envelope(r[k]) for k in kn],
-                 "key_as_string": "|".join(str(r[k]) for k in kn),
-                 "doc_count": r["doc_count"],
-                 **_metric_envelope(r, sub)}
-                for r in rows
-            ]}
-        elif kind == "rare_terms":
-            if sub:
-                raise DslError(
-                    "sub-aggregations under rare_terms are not "
-                    "supported"
-                )
-            rows = rare_terms_frame(df, body) \
-                .limit(_RARE_TERMS_BUDGET + 1).collect()
-            if len(rows) > _RARE_TERMS_BUDGET:
-                raise DslError(
-                    f"rare_terms returns more than {_RARE_TERMS_BUDGET}"
-                    " buckets — raise max_doc_count selectivity or "
-                    "filter the scope"
-                )
-            out[name] = {"buckets": [
-                {"key": _key_envelope(r["key"]),
-                 "doc_count": r["doc_count"]}
-                for r in rows
-            ]}
-        elif kind == "frequent_item_sets":
-            if sub:
-                raise DslError(
-                    "sub-aggregations under frequent_item_sets are "
-                    "not supported"
-                )
-            out[name] = {"buckets": frequent_item_sets_result(df, body)}
-        elif kind == "variable_width_histogram":
-            if sub:
-                raise DslError(
-                    "sub-aggregations under variable_width_histogram "
-                    "are not supported"
-                )
-            out[name] = {"buckets": [
-                {"min": r["min"], "key": r["key"], "max": r["max"],
-                 "doc_count": r["doc_count"]}
-                for r in variable_width_histogram_frame(df, body)
-                .collect()
-            ]}
-        elif kind == "categorize_text":
-            if sub:
-                raise DslError(
-                    "sub-aggregations under categorize_text are not "
-                    "supported"
-                )
-            out[name] = {"buckets": [
-                {"key": r["key"], "doc_count": r["doc_count"],
-                 "regex": ".*?" + ".*?".join(
-                     re.escape(t) for t in r["key"].split(" ")) + ".*?",
-                 "max_matching_length": r["max_matching_length"]}
-                for r in categorize_text_frame(df, body).collect()
-            ]}
-        elif kind == "auto_date_histogram":
-            frame, label = auto_date_histogram_plan(df, body, sub)
-            buckets = []
-            if frame is not None:
-                for r in frame.collect():
-                    b = {"key": _key_envelope(r["key"]),
-                         "doc_count": r["doc_count"],
-                         **_metric_envelope(r, sub)}
-                    b["key_as_string"] = _key_as_string(r["key"], body)
-                    buckets.append(b)
-            out[name] = {"buckets": buckets, "interval": label}
-        elif kind == "nested":
-            if not isinstance(body, dict) or not body.get("path"):
-                raise DslError("nested aggregation requires a path")
-            out[name] = _nested_envelope(df, str(body["path"]), sub)
-        elif kind == "significant_terms":
-            if sub:
-                raise DslError(
-                    "sub-aggregations under significant_terms are not "
-                    "supported"
-                )
-            if background is None:
-                raise DslError(
-                    "significant_terms needs the background set — this "
-                    "entry point has no table context (use "
-                    "/search/advanced, which passes it)"
-                )
-            bgdf = background
-            if body.get("background_filter") is not None:
-                # ES's background_filter narrows the contrast scope
-                bgdf = background.filter(compile_dsl(
-                    body["background_filter"],
-                    schema_fields=schema_fields))
-                body = {k: v for k, v in body.items()
-                        if k != "background_filter"}
-            rows = significant_terms_frame(df, bgdf, body).collect()
-            out[name] = {
-                "doc_count": df.count(),
-                "bg_count": bgdf.count(),
-                "buckets": [
-                    {"key": _key_envelope(r["key"]),
-                     "doc_count": r["doc_count"],
-                     "bg_count": r["bg_count"],
-                     "score": r["score"]}
-                    for r in rows
-                ],
-            }
-        elif kind == "significant_text":
-            if sub:
-                raise DslError(
-                    "sub-aggregations under significant_text are not "
-                    "supported"
-                )
-            if background is None or background_pred is None:
-                raise DslError(
-                    "significant_text needs the background set and "
-                    "the query predicate — this entry point has no "
-                    "table context (use /search/advanced, which "
-                    "passes both)"
-                )
-            bg_pred = None
-            if body.get("background_filter") is not None:
-                bg_pred = compile_dsl(body["background_filter"],
-                                      schema_fields=schema_fields)
-                body = {k: v for k, v in body.items()
-                        if k != "background_filter"}
-            rows = significant_text_frame(
-                background, background_pred, body,
-                bg_pred=bg_pred).collect()
-            out[name] = {
-                "doc_count": df.count(),
-                "bg_count": (background.count() if bg_pred is None
-                             else background.filter(bg_pred).count()),
-                "buckets": [
-                    {"key": _key_envelope(r["key"]),
-                     "doc_count": r["doc_count"],
-                     "bg_count": r["bg_count"],
-                     "score": r["score"]}
-                    for r in rows
-                ],
-            }
-        elif kind in ("children", "parent"):
-            # r14 (r13 verdict stretch #8): scope-switch across the
-            # declared join-field relation — `children` moves the agg
-            # scope from matched parents to their child rows,
-            # `parent` from matched children to their parents. ONE
-            # distinct-key semi-join (pinned shuffle_hash like the
-            # has_child/has_parent leaves), then the sub-aggs recurse
-            # over the switched frame.
-            from sql_database_to_elastic_datalake_spark.plans \
-                .join_field import RELATIONS, _match_side
-
-            if relation_ctx is None:
-                raise DslError(
-                    f"the {kind} aggregation needs table context "
-                    "(the search route passes it; this entry point "
-                    "compiles single-table aggs only)")
-            table, load_sibling = relation_ctx
-            type_name = body.get("type")
-            if not isinstance(type_name, str) or not type_name:
-                raise DslError(f"{kind} aggregation requires a "
-                               "'type' string")
-            unknown = sorted(set(body) - {"type"})
-            if unknown:
-                raise DslError(
-                    f"unsupported {kind} aggregation options: "
-                    f"{unknown}")
-            rel = next((r for r in RELATIONS
-                        if r["child"] == type_name), None)
-            side = (rel and _match_side(
-                table, rel["parent" if kind == "children"
-                           else "child"]))
-            if rel is None or side is None:
-                raise DslError(
-                    f"no join-field relation maps the {kind} "
-                    f"aggregation type {type_name!r} onto table "
-                    f"{table!r}")
-            target_name = side + (rel["child"] if kind == "children"
-                                  else rel["parent"])
-            other = load_sibling(target_name)
-            if other is None:
-                raise DslError(
-                    f"{kind} aggregation type {type_name!r} resolves "
-                    f"to table {target_name!r}, which does not exist")
-            if kind == "children":
-                here_key, there_key = (rel["parent_key"],
-                                       rel["child_key"])
-            else:
-                here_key, there_key = (rel["child_key"],
-                                       rel["parent_key"])
-            keys = (df.select(F.col(here_key).alias("__rel_k"))
-                    .filter(F.col("__rel_k").isNotNull()).distinct())
-            scoped = other.join(
-                keys.hint("shuffle_hash"),
-                on=F.col(there_key) == F.col("__rel_k"),
-                how="left_semi")
-            sub_aggs = sub or {}
-            if all(_agg_kind(s) in _FUSABLE_METRIC_KINDS
-                   for s in sub_aggs.values()):
-                # r15 (guide §1.2, r14 verdict #5): doc_count rides
-                # the sub-metrics aggregation — ONE job (and ONE run
-                # of the semi-join) instead of a count job plus a
-                # metrics job that re-executed the semi-join
-                row = scoped.agg(
-                    F.count(F.lit(1)).cast("bigint")
-                    .alias("__rel_doc_count"),
-                    *_metric_cols(sub_aggs)).collect()[0]
-                env = {"doc_count": int(row["__rel_doc_count"])}
-                env.update(_metric_envelope(row, sub_aggs))
-            else:
-                env = {"doc_count": scoped.count()}
-                if sub:
-                    env.update(run_aggs(scoped, sub,
-                                        schema_fields=scoped.schema,
-                                        background=scoped,
-                                        relation_ctx=(target_name,
-                                                      load_sibling)))
-            out[name] = env
-        else:
+        kind = _agg_kind(spec, name)
+        entry = _KINDS.get(kind)
+        if entry is None or entry.handler is None:
             raise DslError(f"unsupported aggregation kind {kind!r}")
-    # sibling pipeline reductions see every computed envelope,
-    # regardless of body order (ES resolves buckets_path the same way)
-    for name, (kind, body) in sibling_pipes.items():
-        out[name] = _sibling_pipeline_envelope(kind, body, out)
+        # sub-agg `meta` is accepted-and-ignored (pure client metadata)
+        sub = _strip_meta(_subs(spec))
+        _check_subs(name, kind, sub)
+        check_agg_keys(kind, spec[kind])
+        if entry.deferred:
+            deferred.append((name, entry.handler, spec[kind]))
+        else:
+            out[name] = entry.handler(scope, name, spec[kind], sub)
+    for name, handler, body in deferred:
+        out[name] = handler(scope, name, body, {})
     # echo `meta` verbatim like ES (Kibana reads it back to map
-    # responses to panels); metric aggs computed in the shared job get
-    # theirs too
+    # responses to panels)
     for name, spec in aggs.items():
         if isinstance(spec, dict) and "meta" in spec \
                 and isinstance(out.get(name), dict):

@@ -7539,7 +7539,7 @@ def geo_rings_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ES ``geo_distance`` aggregation (r13 late): distance-ring
     buckets from (25°N, 45°E) with a per-ring metric sub (doc count +
     account-balance sum). The API path rewrites rings into the range
-    machinery (plans/es_aggs.py geo_distance branch); this registry
+    machinery (plans/es_aggs.py:_geo_distance_agg); this registry
     twin expresses the same bands as ONE groupBy over a CASE label —
     one scan, one shuffle. Band edges at 3000/8000 km sit ≥ metres
     from every derived point (haversine rounding note in

@@ -3117,3 +3117,185 @@ def test_ip_range_and_cidr_term(spark, docs):
             run_aggs(df, {"b": {"ip_range": bad_body}})
     with pytest.raises(DslError, match="ipv6"):
         compile_dsl({"term": {"ip": "2001:db8::/32"}})
+
+
+def _agg_jobs(spark, df, aggs, **kw) -> int:
+    """Spark jobs launched by one ``run_aggs`` call, counted by running
+    it under its own job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"aggjobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "run_aggs")
+    try:
+        run_aggs(df, aggs, **kw)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture(scope="module")
+def shaped(spark):
+    """30 docs with a keyword, a number, a timestamp and a geo point
+    (the ``loc_lat``/``loc_lon`` pair encoding)."""
+    rows = [(i, ["en", "de", "fr"][i % 3], i * 10,
+             dt.datetime(2024, 1, 1 + i % 4, i % 24),
+             48.0 + (i % 5), 2.0 + (i % 7))
+            for i in range(30)]
+    return spark.createDataFrame(
+        rows, "id long, lang string, n long, ts timestamp, "
+              "loc_lat double, loc_lon double")
+
+
+def test_aggs_jobs_per_shape(spark, shaped):
+    """Spark jobs per ``run_aggs`` call, one request shape per handler
+    family — the docstrings' job-count contracts, pinned."""
+    met = {"mx": {"max": {"field": "n"}}, "st": {"stats": {"field": "n"}}}
+    shapes = [
+        ({"a": {"avg": {"field": "n"}}, "s": {"stats": {"field": "n"}},
+          "p": {"percentiles": {"field": "n", "percents": [50]}}}, {}, 2),
+        ({"t": {"terms": {"field": "lang", "size": 2}, "aggs": {
+            "mx": {"max": {"field": "n"}},
+            "h": {"top_hits": {"size": 1, "sort": [{"n": "desc"}]}}}}},
+         {}, 6),
+        ({"h": {"date_histogram": {"field": "ts",
+                                   "calendar_interval": "day"},
+                "aggs": {"r": {"rate": {"field": "n", "unit": "hour"}},
+                         "c": {"cardinality": {"field": "lang"}},
+                         "cc": {"cumulative_cardinality": {
+                             "buckets_path": "c"}}}}}, {}, 8),
+        ({"t": {"terms": {"field": "lang"}, "aggs": {"h": {
+            "date_histogram": {"field": "ts", "calendar_interval": "day"},
+            "aggs": {"mx": {"max": {"field": "n"}}}}}}}, {}, 2),
+        ({"r": {"range": {"field": "n", "ranges": [
+            {"to": 100}, {"from": 100, "to": 200}, {"from": 150}]}}},
+         {}, 2),
+        ({"r": {"range": {"field": "n", "ranges": [
+            {"to": 100}, {"from": 100}]}, "aggs": met}}, {}, 8),
+        ({"f": {"filters": {"filters": {
+            "en": {"term": {"lang": "en"}},
+            "big": {"range": {"n": {"gte": 150}}}},
+            "other_bucket": True}, "aggs": met}}, {}, 2),
+        ({"f": {"filter": {"term": {"lang": "de"}}, "aggs": met}}, {}, 2),
+        ({"g": {"geohash_grid": {"field": "loc", "precision": 3}}}, {}, 2),
+        ({"s": {"sampler": {"shard_size": 12}, "aggs": {"sig": {
+            "significant_terms": {"field": "lang", "min_doc_count": 1}}}}},
+         {"background": shaped}, 14),
+    ]
+    got = [_agg_jobs(spark, shaped, aggs, **kw) for aggs, kw, _ in shapes]
+    assert got == [want for _, _, want in shapes]
+
+
+def _no_sub_kinds():
+    from sql_database_to_elastic_datalake_spark.plans.es_aggs import _KINDS
+
+    return sorted(k for k, e in _KINDS.items() if not e.subs)
+
+
+@pytest.mark.parametrize("kind", _no_sub_kinds())
+def test_kinds_without_sub_aggs_reject_them(spark, docs, kind):
+    """Every kind the kind table marks as taking no sub-aggregations
+    rejects them with one named 400 where the kind is valid — top
+    level, under a terms or date_histogram bucket, under nested terms —
+    instead of silently dropping them (ES rejects them too)."""
+    from sql_database_to_elastic_datalake_spark.plans.es_aggs import _KINDS
+
+    df = docs
+    aggs = {"a": {kind: {}, "aggs": {"x": {"max": {"field": "n_chars"}}}}}
+    if kind in ("rate", "cumulative_cardinality", "moving_percentiles"):
+        aggs = {"h": {"date_histogram": {"field": "ts",
+                                         "calendar_interval": "day"},
+                      "aggs": aggs}}
+    elif kind == "reverse_nested":
+        df = spark.createDataFrame(
+            [(1, [("x",)])], "id long, labels array<struct<name:string>>")
+        aggs = {"n": {"nested": {"path": "labels"}, "aggs": {"t": {
+            "terms": {"field": "labels.name"}, "aggs": aggs}}}}
+    elif _KINDS[kind].handler is None:
+        aggs = {"t": {"terms": {"field": "lang"}, "aggs": aggs}}
+    with pytest.raises(DslError,
+                       match=rf"'a' \({kind}\) takes no sub-aggregations"):
+        run_aggs(df, aggs)
+
+
+def test_silently_dropped_sub_aggs_now_400(docs):
+    """median_absolute_deviation and top_metrics (also as a terms
+    sub-agg) reject sub-aggregations rather than answer without them."""
+    x = {"x": {"max": {"field": "n_chars"}}}
+    top = {"top_metrics": {"metrics": {"field": "n_chars"},
+                           "sort": {"doc_id": "desc"}}, "aggs": x}
+    for aggs in [
+        {"m": {"median_absolute_deviation": {"field": "n_chars"},
+               "aggs": x}},
+        {"m": top},
+        {"t": {"terms": {"field": "lang"}, "aggs": {"m": top}}},
+    ]:
+        with pytest.raises(DslError, match="takes no sub-aggregations"):
+            run_aggs(docs, aggs)
+
+
+@pytest.mark.parametrize("aggs, frag", [
+    ({"r": {"range": {"field": "n_chars", "ranges": [5]}}},
+     "malformed range entry"),
+    ({"r": {"range": {"field": "n_chars", "ranges": [5]},
+            "aggs": {"m": {"max": {"field": "n_chars"}}}}},
+     "malformed range entry"),
+    ({"r": {"range": {"ranges": [{"to": 100}]},
+            "aggs": {"m": {"max": {"field": "n_chars"}}}}},
+     "requires field"),
+    ({"r": {"date_range": {"field": "ts", "ranges": ["x"]}}},
+     "malformed date_range entry"),
+    ({"t": {"terms": {"field": "lang", "size": "x"}}}, "terms size"),
+    ({"t": {"terms": {"field": "lang", "size": -1}}}, "terms size"),
+    ({"c": {"composite": {"sources": [{"l": {"terms": {"field": "lang"}}}],
+                          "size": "x"}}}, "composite size"),
+])
+def test_malformed_agg_bodies_are_named_400s(docs, aggs, frag):
+    """Malformed range entries and sizes are named 400s, not a
+    TypeError / ValueError / Spark INVALID_LIMIT 500."""
+    with pytest.raises(DslError, match=frag):
+        run_aggs(docs, aggs)
+
+
+def test_gated_metrics_match_top_level_over_filtered_scope(docs):
+    """filter and filters accept the same metric kinds a bucket sub
+    does; each gated value equals the same metric run at top level over
+    ``df.filter(pred)``."""
+    from sql_database_to_elastic_datalake_spark.plans.es_dsl import (
+        compile_dsl,
+    )
+
+    metrics = {
+        "es": {"extended_stats": {"field": "n_chars"}},
+        "pc": {"percentiles": {"field": "n_chars", "percents": [25, 50]}},
+        "pr": {"percentile_ranks": {"field": "n_chars",
+                                    "values": [200, 300]}},
+        "wa": {"weighted_avg": {"value": {"field": "n_chars"},
+                                "weight": {"field": "doc_id"}}},
+        "mi": {"missing": {"field": "n_chars"}},
+        "st": {"stats": {"field": "n_chars"}},
+        "sc": {"avg": {"script": "doc['n_chars'].value * 2"}},
+    }
+    queries = {"en": {"term": {"lang": "en"}},
+               "big": {"range": {"n_chars": {"gte": 200}}}}
+    out = run_aggs(docs, {
+        "f": {"filter": queries["en"], "aggs": metrics},
+        "fs": {"filters": {"filters": queries}, "aggs": metrics},
+    })
+    for env, q in [(out["f"], queries["en"]),
+                   (out["fs"]["buckets"]["en"], queries["en"]),
+                   (out["fs"]["buckets"]["big"], queries["big"])]:
+        scope = docs.filter(compile_dsl(q))
+        assert env.pop("doc_count") == scope.count()
+        assert env == run_aggs(scope, metrics)
+    assert out["f"]["es"]["count"] == 2  # en: 100, 300 (+ one null)
+    assert out["f"]["mi"] == {"doc_count": 1}
+    # scripted_metric's map script sees every row: it cannot be gated
+    sm = {"scripted_metric": {
+        "init_script": "state.s = 0", "map_script": "state.s += 1",
+        "combine_script": "return state", "reduce_script": "return state.s"}}
+    for parent in ({"filter": queries["en"]},
+                   {"filters": {"filters": queries}}):
+        with pytest.raises(DslError, match="scripted_metric"):
+            run_aggs(docs, {"f": {**parent, "aggs": {"s": sm}}})
